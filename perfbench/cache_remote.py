@@ -11,6 +11,14 @@ the file's current version:
 - ``range``: ``CacheManager.read_range`` on the sort key (the row-group path);
 - ``scan``: a ``rubix_cache`` DataSource scan with a pushed range filter.
 
+The DataSource resolves the file through a manager of its own, made in its
+planning worker. That manager has no remote latency and no budget, and its
+counters never reach the clients' ``stats()``. Scans therefore use a cache
+directory of their own, so their copies do not push the clients' cache over
+its budget, and they run only in traced runs (``trace_ops``), where they get
+figures of their own (``cache.ds_*``). The timed mix is ``read`` and
+``range`` ops.
+
 The window is cut into epochs. Between epochs both clients are quiesced and the
 generator rewrites a seeded ~5% of the files, which must then be detected as
 stale, invalidated and warmed again. A stale answer fails its op.
@@ -24,16 +32,17 @@ import random
 import threading
 import time
 
-from perfbench.gen import RemoteStore, dir_bytes
+from perfbench.gen import N_FILES, RemoteStore, dir_bytes
 
 REMOTE_LATENCY_S = 0.05
-N_FILES = 10
-ZIPF_S = 1.2
-OP_TYPES = ("read", "range", "scan")
-# the DataSource scan costs ~1 s even on a hit (Python planning and read
-# workers), so it is drawn less often to keep enough ops in a window
-OP_WEIGHTS = (0.45, 0.35, 0.2)
+ZIPF_S = 2.0
+OP_WEIGHTS = {"read": 0.55, "range": 0.45}
+# traced runs add the DataSource scan, which costs ~1.5 s even on a hit
+# (Python planning and read workers) and bypasses the workload's cache settings
+TRACE_OP_WEIGHTS = {"read": 0.45, "range": 0.35, "scan": 0.2}
 RANGE_SLOTS = 2
+# ops per client in set-up's steady-state warm-up (see setup)
+WARM_OPS = 12
 
 
 def _checksum(df) -> tuple[int, int, int]:
@@ -46,12 +55,15 @@ def _checksum(df) -> tuple[int, int, int]:
 class CacheWorkload:
     clients = 2
 
-    def __init__(self, spark, run_dir: str, seed: int, tracer, status) -> None:
+    def __init__(self, spark, run_dir: str, seed: int, tracer, status, trace_ops: bool = False) -> None:
         self.spark = spark
         self.tracer = tracer
         self.status = status
-        self.store = RemoteStore(os.path.join(run_dir, "remote"), seed, n_files=N_FILES)
+        self.store = RemoteStore(os.path.join(run_dir, "remote"), seed)
         self.cache_dir = os.path.join(run_dir, "cache")
+        self.ds_cache_dir = os.path.join(run_dir, "ds-cache")
+        self.op_weights = TRACE_OP_WEIGHTS if trace_ops else OP_WEIGHTS
+        self.ds_view = None  # reads the DataSource's manifest to classify scans
         self.budget = self.store.total_bytes() // 2
         # The traffic is the same under every seed: file i has popularity rank i, and
         # the op draws and the rewrite schedule come from fixed streams, so runs differ
@@ -63,30 +75,28 @@ class CacheWorkload:
         self.setup_failures: list[dict] = []
         self.records: list[dict] = []
         self.disk_peak = 0
-        self.rg_meta: dict[tuple[int, int], list[tuple[int, int, int]]] = {}
+        # [(min key, max key, compressed bytes)] per row group of each file's current
+        # version, read when the version is written so no op pays for the footer
+        self.rg_meta = [self._footer(i) for i in range(N_FILES)]
         self._lock = threading.Lock()
         self._op_ids = itertools.count()
 
-    # ------------------------------------------------------------ one op
-    def _rg_meta(self, i: int) -> list[tuple[int, int, int]]:
-        """[(min key, max key, compressed bytes)] per row group of file i's current version."""
+    def _footer(self, i: int) -> list[tuple[int, int, int]]:
         import pyarrow.parquet as pq
 
-        key = (i, self.store.version[i])
-        if key not in self.rg_meta:
-            md = pq.ParquetFile(self.store.path(i)).metadata
-            col = md.schema.names.index(self.store.KEY)
-            groups = []
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                st = rg.column(col).statistics
-                groups.append((st.min, st.max, sum(rg.column(c).total_compressed_size
-                                                   for c in range(rg.num_columns))))
-            self.rg_meta[key] = groups
-        return self.rg_meta[key]
+        md = pq.ParquetFile(self.store.path(i)).metadata
+        col = md.schema.names.index(self.store.KEY)
+        groups = []
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(col).statistics
+            groups.append((st.min, st.max, sum(rg.column(c).total_compressed_size
+                                               for c in range(rg.num_columns))))
+        return groups
 
-    def _ds_fresh(self, cm, path: str) -> bool:
-        entry = cm.manifest.get(path)
+    # ------------------------------------------------------------ one op
+    def _ds_fresh(self, path: str) -> bool:
+        entry = self.ds_view.manifest.get(path)
         if entry is None:
             return False
         st = os.stat(path)
@@ -104,7 +114,7 @@ class CacheWorkload:
         cm = self.managers[client]
         path = self.store.path(i)
         expected = self.store.checksum(i, lo, hi)
-        groups = self._rg_meta(i)
+        groups = self.rg_meta[i]
         kept = [g for g, (mn, mx, _) in enumerate(groups) if lo is None or (mx >= lo and mn <= hi)]
         op_key = (client, next(self._op_ids))
         rec = {"client": client, "kind": kind, "file": i, "traced": traced, "ok": False,
@@ -113,7 +123,7 @@ class CacheWorkload:
             rec.update(rg_kept=len(kept), rg_total=len(groups))
         before = cm.stats()
         prev_groups = self._cached_groups(cm, path) if kind == "range" else set()
-        ds_hit = self._ds_fresh(cm, path) if kind == "scan" else None
+        ds_hit = self._ds_fresh(path) if kind == "scan" else None
         t0 = time.perf_counter()
         try:
             with self.tracer.span("bench.op", op_id=str(op_key)):
@@ -124,7 +134,7 @@ class CacheWorkload:
                         df = cm.read_range(path, self.store.KEY, lo, hi)
                     else:
                         df = (self.spark.read.format("rubix_cache").option("path", path)
-                              .option("cache_dir", self.cache_dir).load())
+                              .option("cache_dir", self.ds_cache_dir).load())
                         df = df.where((df[self.store.KEY] >= lo) & (df[self.store.KEY] <= hi))
                 t1 = time.perf_counter()
                 with self.tracer.span("cache.scan"):
@@ -143,7 +153,7 @@ class CacheWorkload:
         rec.update(latency=t2 - t0, hit=bool(hit), delta=delta)
         if t1 is not None:
             rec.update(resolve_s=t1 - t0, scan_s=t2 - t1)
-        if not hit:
+        if not hit and kind != "scan":
             if kind == "range":
                 rec["remote_bytes"] = sum(groups[g][2] for g in kept if g not in prev_groups)
             else:
@@ -155,7 +165,7 @@ class CacheWorkload:
 
     def _draw(self, rng: random.Random):
         i = rng.choices(range(N_FILES), weights=self.weights)[0]
-        kind = rng.choices(OP_TYPES, weights=OP_WEIGHTS)[0]
+        kind = rng.choices(list(self.op_weights), weights=list(self.op_weights.values()))[0]
         if kind == "read":
             return kind, i, None, None
         # ranges come from a few fixed slots per file, so repeated ranges can hit
@@ -169,43 +179,54 @@ class CacheWorkload:
         from rubix_spark.sources.cached_source import register_cache_source
 
         t = time.perf_counter()
-        register_cache_source(self.spark)
         self.managers = [CacheManager(self.spark, self.cache_dir, budget_bytes=self.budget,
                                       remote_latency_s=REMOTE_LATENCY_S) for _ in range(self.clients)]
+        if "scan" in self.op_weights:
+            register_cache_source(self.spark)
+            self.ds_view = CacheManager(None, self.ds_cache_dir)
         self.setup_parts["sources.layout_build_s"] = time.perf_counter() - t
         self.setup_parts["catalog.analyze_s"] = 0.0
         self.setup_parts["ops.index_build_s"] = 0.0
         # warm pass: every op type once, then whole-file reads down the popularity
-        # ranking until the cache reaches its budget
+        # ranking until the cache reaches its budget, then both clients run the
+        # timed mix for WARM_OPS ops each, so the window starts at the cache's
+        # steady state rather than in the cold start of its row-group entries
         t = time.perf_counter()
-        bad = []
-        for kind in OP_TYPES:
+        recs = []
+        for kind in self.op_weights:
             lo = None if kind == "read" else 0
             hi = None if kind == "read" else self.store.key_max(0) // (2 * RANGE_SLOTS)
-            bad += [r for r in [self.op(0, kind, 0, lo, hi)] if not r["ok"]]
+            recs.append(self.op(0, kind, 0, lo, hi))
         for i in range(N_FILES):
             if self.managers[0].stats()["cached_bytes"] + self.store.size(i) > self.budget:
                 break
-            bad += [r for r in [self.op(1, "read", i)] if not r["ok"]]
+            recs.append(self.op(1, "read", i))
+        recs += self._closed_loop("warm", lambda start, done: done < WARM_OPS, traced=False)[0]
         self.setup_parts["setup.warm_pass_s"] = time.perf_counter() - t
-        self.setup_failures = bad
+        self.setup_failures = [r for r in recs if not r["ok"]]
 
-    # ------------------------------------------------------------ timed window
-    def run_epoch(self, seconds: float, traced: bool, epoch: int) -> None:
-        """Both clients run a closed loop for ``seconds``; then files are rewritten."""
-        if traced:
-            self.status.mark()
-        self.tracer.enabled = traced
-        deadline = time.perf_counter() + seconds
+    def _closed_loop(self, stream: str, more, traced: bool) -> tuple[list[dict], list[float]]:
+        """Both clients issue ops back to back while ``more(start, ops done)`` holds.
+
+        Returns the op records and each client's busy time: from the start to the
+        end of its last op, so neither client's rate counts the time it waited
+        for the other.
+        """
+        start = time.perf_counter()
+        busy = [0.0] * self.clients
+        recs: list[dict] = []
         errors = []
 
         def client(c: int) -> None:
-            rng = random.Random(f"client{c}-epoch{epoch}")
+            rng = random.Random(f"client{c}-{stream}")
+            done = 0
             try:
-                while time.perf_counter() < deadline:
+                while more(start, done):
                     rec = self.op(c, *self._draw(rng), traced=traced)
+                    done += 1
                     with self._lock:
-                        self.records.append(rec)
+                        recs.append(rec)
+                busy[c] = time.perf_counter() - start
             except BaseException as e:  # surface to the main thread
                 errors.append(e)
 
@@ -214,16 +235,34 @@ class CacheWorkload:
             t.start()
         for t in threads:
             t.join()
-        if traced:
-            engine = self.status.collect()
-            with self._lock:
-                self.records.append({"engine_epoch": engine, "traced": True})
-        self.tracer.enabled = False
         if errors:
             raise errors[0]
-        # quiesced: rewrite a seeded ~5% of the files (at least one)
+        return recs, busy
+
+    # ------------------------------------------------------------ timed window
+    def run_epoch(self, seconds: float, traced: bool, epoch: int) -> list[float]:
+        """Both clients run a closed loop for ``seconds``; returns each one's busy time."""
+        if traced:
+            self.status.mark()
+        self.tracer.enabled = traced
+        try:
+            recs, busy = self._closed_loop(f"epoch{epoch}", lambda start, done: time.perf_counter() < start + seconds,
+                                           traced)
+        finally:
+            self.tracer.enabled = False
+        self.records += recs
+        if traced:
+            self.records.append({"engine_epoch": self.status.collect(), "traced": True})
+        return busy
+
+    def rewrite(self) -> None:
+        """With both clients quiesced, rewrite a seeded ~5% of the files (at least one)."""
         for i in self.rewrite_rng.sample(range(N_FILES), max(1, round(0.05 * N_FILES))):
-            self.store.rewrite(i)
+            self.rewrite_file(i)
+
+    def rewrite_file(self, i: int) -> None:
+        self.store.rewrite(i)
+        self.rg_meta[i] = self._footer(i)
 
     def finish(self) -> dict:
         out = {"cached_mb_end": self.managers[0].stats()["cached_bytes"] / 2**20,

@@ -3,8 +3,8 @@
 ``tables`` writes a star-schema fixture directory with the schema and value
 distributions of the program's parquet fixtures (region, nation, customer,
 supplier, part, orders, lineitem, events, documents, embeddings). ``scale``
-follows TPC-H: 0.1 gives 600k lineitem rows. ``llm_factor`` multiplies the
-documents and embeddings tables and writes them as directories of part files.
+follows TPC-H: 0.1 gives 600k lineitem rows. The documents and embeddings
+tables are written ``LLM_PARTS`` times over, as directories of part files.
 
 ``RemoteStore`` writes the cache workload's "remote" parquet files: slices of a
 generated lineitem table, each sorted on ``l_orderkey`` and cut into many row
@@ -37,6 +37,11 @@ EVENT_TYPES = ("signup", "purchase", "view", "click", "error")
 LANGS = ("en", "zh", "es", "fr", "de")
 REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
 EMBED_DIM = 64
+LLM_PARTS = 2
+# the cache workload's remote store: file count, base rows per file, rows per row group
+N_FILES = 10
+STORE_ROWS = 20_000
+ROW_GROUP_ROWS = 1_500
 
 
 def dir_bytes(path: str) -> int:
@@ -109,7 +114,7 @@ def lineitem(rng: np.random.Generator, n: int, n_orders: int, n_parts: int, n_su
     })
 
 
-def tables(out_dir: str, seed: int, scale: float = 0.1, llm_factor: int = 1) -> None:
+def tables(out_dir: str, seed: int, scale: float) -> None:
     """Write every fixture table of one seed under ``out_dir``."""
     rng = np.random.default_rng(seed)
     n_cust, n_supp, n_part = int(150_000 * scale), int(10_000 * scale), int(200_000 * scale)
@@ -168,12 +173,9 @@ def tables(out_dir: str, seed: int, scale: float = 0.1, llm_factor: int = 1) -> 
         "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)], pa.string()),
     }))
     for name, make, n in (("documents", _documents, n_doc), ("embeddings", _embeddings, n_vec)):
-        if llm_factor == 1:
-            write(name, make(rng, n, 0))
-            continue
         part_dir = os.path.join(out_dir, f"{name}.parquet")
         os.makedirs(part_dir, exist_ok=True)
-        for i in range(llm_factor):
+        for i in range(LLM_PARTS):
             pq.write_table(make(rng, n, i * n), os.path.join(part_dir, f"part-{i:05d}.parquet"))
 
 
@@ -188,17 +190,13 @@ class RemoteStore:
 
     KEY, VAL = "l_orderkey", "l_partkey"
 
-    def __init__(self, root: str, seed: int, n_files: int = 10, rows: int = 60_000,
-                 row_group_rows: int = 4_000):
+    def __init__(self, root: str, seed: int):
         self.root = root
         self.seed = seed
-        self.n_files = n_files
-        self.rows = rows
-        self.row_group_rows = row_group_rows
-        self.version = [0] * n_files
-        self._cols: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = [None] * n_files
+        self.version = [0] * N_FILES
+        self._cols: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = [None] * N_FILES
         os.makedirs(root, exist_ok=True)
-        for i in range(n_files):
+        for i in range(N_FILES):
             self._write(i)
 
     def path(self, i: int) -> str:
@@ -208,10 +206,10 @@ class RemoteStore:
         v = self.version[i]
         rng = np.random.default_rng([self.seed, i, v])
         # file sizes vary 1x..3x; each version drops a few rows so the size changes
-        n = int(self.rows * (1 + 2 * ((i * 7919) % self.n_files) / self.n_files)) - 37 * v
+        n = int(STORE_ROWS * (1 + 2 * ((i * 7919) % N_FILES) / N_FILES)) - 37 * v
         tbl = lineitem(rng, n, n_orders=10 * n, n_parts=20_000, n_supp=1_000).sort_by(self.KEY)
         tmp = self.path(i) + ".tmp"
-        pq.write_table(tbl, tmp, row_group_size=self.row_group_rows)
+        pq.write_table(tbl, tmp, row_group_size=ROW_GROUP_ROWS)
         os.replace(tmp, self.path(i))
         # object-store overwrite semantics: every version carries a new lastModified
         mtime = 1_700_000_000 + 1000 * v + i
@@ -237,4 +235,4 @@ class RemoteStore:
         return os.path.getsize(self.path(i))
 
     def total_bytes(self) -> int:
-        return sum(self.size(i) for i in range(self.n_files))
+        return sum(self.size(i) for i in range(N_FILES))

@@ -7,8 +7,10 @@ materialises every output column, as the program's own bench does.
 
 Set-up builds the layouts and ANN indexes the rows read, then makes one
 untimed pass in which every row's output is collected and compared with its
-DuckDB oracle answer; a row that does not match counts every one of its ops
-as failed.
+DuckDB oracle answer. After the timed window a second untimed pass checks
+each row again, so an answer that goes wrong only on a repeat call is caught
+too. A row that does not match in either pass counts every one of its ops as
+failed.
 """
 
 from __future__ import annotations
@@ -34,34 +36,30 @@ TRACE_ROWS = ("s7_stream_incremental_dedup",)
 # the ANN rows write their bucketed index on the first builder() call
 INDEX_ROWS = ("x2_ann_ivf",)
 
-WORKLOADS = {
-    # rows, fixture scale, documents/embeddings replication factor (part files)
-    "warehouse_llm": (ROWS, 0.02, 2),
-}
+SCALE = 0.02  # TPC-H scale of the generated fixture
 
 
 def layer_of(row: str) -> str:
     return {"q": "queries", "s": "streaming"}.get(row[0], "ops")
 
 
-def prepare(workload: str, seed: int, cache_root: str) -> str:
-    """Generate the fixture and its oracle answers once per (workload, seed)."""
+def prepare(seed: int, cache_root: str) -> str:
+    """Generate the fixture and its oracle answers once per seed."""
     from perfbench import gen
     from rubix_spark.queries import load_all
     from tests.oracle_utils import run_oracle
 
-    rows, scale, factor = WORKLOADS[workload]
-    out = os.path.join(cache_root, f"{workload}-sf{scale}-x{factor}-seed{seed}")
+    out = os.path.join(cache_root, f"sf{SCALE}-x{gen.LLM_PARTS}-seed{seed}")
     if os.path.exists(os.path.join(out, "oracles.pkl")):
         return out
     tmp = out + f".tmp{os.getpid()}"
-    gen.tables(tmp, seed, scale=scale, llm_factor=factor)
+    gen.tables(tmp, seed, SCALE)
     reg = load_all()
     # oracle SQL reads <sf_dir>/<table>.parquet, so answers are computed on the final
     # path; a directory left by an interrupted run (no oracles.pkl) is replaced
     shutil.rmtree(out, ignore_errors=True)
     os.replace(tmp, out)
-    answers = {r: run_oracle(reg[r].oracle, out) for r in rows + TRACE_ROWS}
+    answers = {r: run_oracle(reg[r].oracle, out) for r in ROWS + TRACE_ROWS}
     with open(os.path.join(out, "oracles.pkl.tmp"), "wb") as f:
         pickle.dump(answers, f)
     os.replace(os.path.join(out, "oracles.pkl.tmp"), os.path.join(out, "oracles.pkl"))
@@ -92,12 +90,12 @@ def _consume(df) -> None:
 class RowsWorkload:
     clients = 1
 
-    def __init__(self, name: str, spark, sf_dir: str, tracer, status, traced_run: bool = False) -> None:
+    def __init__(self, spark, sf_dir: str, tracer, status, traced_run: bool = False) -> None:
         from rubix_spark.queries import load_all
 
         self.spark = spark
         self.sf_dir = sf_dir
-        self.rows = WORKLOADS[name][0] + (TRACE_ROWS if traced_run else ())
+        self.rows = ROWS + (TRACE_ROWS if traced_run else ())
         self.reg = load_all()
         # the pass order is the same under every seed; the seed varies the data
         self.rng = random.Random("passes")
@@ -137,14 +135,18 @@ class RowsWorkload:
         self.setup_parts["ops.index_build_s"] = time.perf_counter() - t
 
         # warm pass: JIT/codegen, Python workers, lazily built layouts; outputs checked
-        warm = 0.0
+        self.setup_parts["setup.warm_pass_s"] = self._check_pass()
+
+    def _check_pass(self) -> float:
+        """Collect every row once and compare it with its oracle; returns the time spent collecting."""
+        spent = 0.0
         for row in self.rows:
             t = time.perf_counter()
-            got = self.reg[row].builder(spark, sf).toPandas()
-            warm += time.perf_counter() - t
+            got = self.reg[row].builder(self.spark, self.sf_dir).toPandas()
+            spent += time.perf_counter() - t
             if not matches(got, self.oracles[row]):
                 self.bad_rows.add(row)
-        self.setup_parts["setup.warm_pass_s"] = warm
+        return spent
 
     # ------------------------------------------------------------ timed window
     def run_pass(self, traced: bool) -> None:
@@ -180,5 +182,11 @@ class RowsWorkload:
         self.tracer.enabled = False
 
     def finish(self) -> dict:
+        """Check every row again, now as a repeat call; a row that fails here fails all its ops."""
+        self._check_pass()
+        for rec in self.records:
+            if rec["row"] in self.bad_rows:
+                rec["ok"] = False
+                rec.setdefault("error", f"{rec['row']}: output differs from its oracle answer")
         return {}
 

@@ -76,17 +76,19 @@ def _environment(run_dir: str) -> dict:
         # bench.py's small-input policy: AQE off below 1 GiB, 8 shuffle partitions
         "spark.sql.adaptive.enabled": "false",
         "spark.local.dir": os.environ["SPARK_LOCAL_DIRS"],
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.environ['TMPDIR']}",
+        # a 1 GiB initial heap: otherwise G1 grows the heap in timing-dependent
+        # steps and peak RSS swung by 0.2 of its median from run to run
+        "spark.driver.extraJavaOptions": f"-Xms1g -Djava.io.tmpdir={os.environ['TMPDIR']}",
     }
 
 
 # ---------------------------------------------------------------- metrics
 
-def end_to_end(setup_s: float, lat: list[float], window_s: float, rss: float) -> dict:
+def end_to_end(setup_s: float, lat: list[float], ops_per_s: float, rss: float) -> dict:
     return {
         "setup_s": {"value": setup_s, "unit": "s"},
         "op_p50_s": {"value": _quantile(lat, 0.5), "unit": "s"},
-        "ops_per_s": {"value": len(lat) / window_s, "unit": "1/s"},
+        "ops_per_s": {"value": ops_per_s, "unit": "1/s"},
         "peak_rss_mb": {"value": rss, "unit": "MiB"},
     }
 
@@ -150,8 +152,14 @@ def _unit(name: str) -> str:
 
 
 def _cache_layer(ops: list[dict], spans: list[dict]) -> dict:
-    """Cache-layer metrics from per-op records and the wrapped CacheManager/Manifest spans."""
-    cache_ops = [r for r in ops if "kind" in r]
+    """Cache-layer metrics from per-op records and the wrapped CacheManager/Manifest spans.
+
+    DataSource scans go through a manager the benchmark cannot see (no remote
+    latency, no budget, counters in the planning worker), so they are kept out
+    of the client-side figures and reported as ``cache.ds_*``.
+    """
+    cache_ops = [r for r in ops if r.get("kind") in ("read", "range")]
+    scans = [r for r in ops if r.get("kind") == "scan"]
     hits = [r for r in cache_ops if r["hit"]]
     misses = [r for r in cache_ops if not r["hit"]]
     warm_by_op: dict = {}
@@ -184,6 +192,8 @@ def _cache_layer(ops: list[dict], spans: list[dict]) -> dict:
         **{f"cache.{k}": v for k, v in d.items()},
         "cache.remote_mb": remote / 2**20,
         "cache.served_mb": served / 2**20,
+        "cache.ds_scan_p50_s": _quantile([r["latency"] for r in scans], 0.5) if scans else 0.0,
+        "cache.ds_hit_ratio": sum(r["hit"] for r in scans) / len(scans) if scans else 0.0,
     }
 
 
@@ -201,7 +211,7 @@ def _run(args, run_dir: str) -> tuple[dict, dict]:
     if args.workload != "cache_remote":
         from perfbench import rows
 
-        sf_dir = rows.prepare(args.workload, args.seed, os.path.join(WORK, "inputs"))
+        sf_dir = rows.prepare(args.seed, os.path.join(WORK, "inputs"))
 
     t0 = time.perf_counter()
     from rubix_spark import get_session
@@ -215,9 +225,9 @@ def _run(args, run_dir: str) -> tuple[dict, dict]:
         if args.workload == "cache_remote":
             from perfbench.cache_remote import CacheWorkload
 
-            wl = CacheWorkload(spark, run_dir, args.seed, tracer, status)
+            wl = CacheWorkload(spark, run_dir, args.seed, tracer, status, trace_ops=bool(args.trace))
         else:
-            wl = rows.RowsWorkload(args.workload, spark, sf_dir, tracer, status, traced_run=bool(args.trace))
+            wl = rows.RowsWorkload(spark, sf_dir, tracer, status, traced_run=bool(args.trace))
         if args.trace and args.workload == "cache_remote":
             _wrap_cache(tracer)
         wl.setup()
@@ -227,7 +237,8 @@ def _run(args, run_dir: str) -> tuple[dict, dict]:
         window = _timed_window(wl, args)
         extra = wl.finish()
         jvm_pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
-        rss = _vm_hwm_mib(os.getpid()) + _vm_hwm_mib(jvm_pid)
+        rss_parts = {"python": _vm_hwm_mib(os.getpid()), "jvm": _vm_hwm_mib(jvm_pid)}
+        rss = sum(rss_parts.values())
     finally:
         spark.stop()
     canary_after = canary()
@@ -245,35 +256,46 @@ def _run(args, run_dir: str) -> tuple[dict, dict]:
         trace_path = _write_trace(args, wl, spans, setup_parts, host, metrics)
         print(f"trace written to {os.path.relpath(trace_path, ROOT)}", file=sys.stderr)
     else:
-        metrics = end_to_end(setup_s, [r["latency"] for r in untraced], window["untraced"], rss)
+        # each client's rate over its own busy time, summed over clients
+        rate = sum(sum(r.get("client", 0) == c for r in untraced) / busy
+                   for c, busy in enumerate(window["untraced"]) if busy)
+        metrics = end_to_end(setup_s, [r["latency"] for r in untraced], rate, rss)
     result = {"correct": failed == 0, "attempted": attempted, "failed": failed, "metrics": metrics}
     errors = sorted({r["error"] for r in done + wl.setup_failures if r.get("error")})
     by_op: dict[str, list[float]] = {}
     for r in untraced:
         by_op.setdefault(r.get("row") or r["kind"], []).append(r["latency"])
-    detail = {"host_window": host, "samples": len(untraced),
+    detail = {"host_window": host, "samples": len(untraced), "peak_rss_mib": rss_parts,
               "median_s": {k: round(statistics.median(v), 4) for k, v in sorted(by_op.items())},
               "bad_rows": sorted(getattr(wl, "bad_rows", [])), "errors": errors[:5]}
+    if args.workload == "cache_remote":
+        detail["hit_ratio"] = _mean(r["hit"] for r in untraced)
     return result, detail
 
 
 def _timed_window(wl, args) -> dict:
     """Run whole passes (row workloads) or epochs (cache) for about ``--seconds``.
 
-    A traced run alternates untraced and traced passes so the tracing overhead
-    is measured on the same mix; only the untraced part counts as window time.
+    Returns each client's busy seconds, split into untraced and traced. A
+    traced run alternates untraced and traced passes so the tracing overhead is
+    measured on the same mix; only the untraced part counts as window time.
+    The cache store's rewrites between epochs are the generator's work and
+    stay outside every client's busy time.
     """
-    spent = {"untraced": 0.0, "traced": 0.0}
+    spent = {"untraced": [0.0] * wl.clients, "traced": [0.0] * wl.clients}
     k = 0
     if hasattr(wl, "run_epoch"):
         per_epoch = args.seconds / CACHE_EPOCHS
         n = CACHE_EPOCHS * (2 if args.trace else 1)
         for k in range(n):
             traced = bool(args.trace) and k % 2 == 1
-            t = time.perf_counter()
-            wl.run_epoch(per_epoch, traced, k)
-            spent["traced" if traced else "untraced"] += time.perf_counter() - t
+            busy = wl.run_epoch(per_epoch, traced, k)
+            side = spent["traced" if traced else "untraced"]
+            side[:] = [a + b for a, b in zip(side, busy)]
+            if k < n - 1:
+                wl.rewrite()
         return spent
+    total = 0.0
     while True:
         # traced runs go untraced, traced, untraced, ... so each traced pass sits
         # between two untraced ones and warm-up drift cancels in the overhead
@@ -281,9 +303,10 @@ def _timed_window(wl, args) -> dict:
         t = time.perf_counter()
         wl.run_pass(traced)
         d = time.perf_counter() - t
-        spent["traced" if traced else "untraced"] += d
+        spent["traced" if traced else "untraced"][0] += d
+        total += d
         k += 1
-        if spent["traced"] + spent["untraced"] + d / 2 >= args.seconds and (not args.trace or (k % 2 == 1 and k >= 3)):
+        if total + d / 2 >= args.seconds and (not args.trace or (k % 2 == 1 and k >= 3)):
             return spent
 
 

@@ -3,8 +3,9 @@
     python3 -m pytest perfbench/test_perfbench.py -q
 
 - the status-store collector sees both stages and the shuffle of a groupBy;
-- planted traps fire: a wrong expected answer and a stale read after a
-  rewrite are both counted as failed ops;
+- planted traps fire: a wrong expected answer, an answer that goes wrong
+  only on repeat calls, and a stale read after a rewrite are all counted as
+  failed ops;
 - a smoke run at sf0.001 prints every metric BENCHMARK.json declares, with
   its unit, in both modes.
 """
@@ -52,19 +53,47 @@ def test_status_store_sees_exchange(spark):
     assert status.collect()["stages"] == 0  # nothing new since the last call
 
 
-def test_wrong_expected_answer_fails_ops(spark, tmp_path):
+@pytest.fixture
+def tiny_rows(spark, tmp_path, monkeypatch):
+    """A one-row workload at sf0.001 with its oracle answers."""
     from perfbench import rows
     from perfbench.trace import Tracer
 
-    rows.WORKLOADS["tiny"] = (("q20_time_bucket",), 0.001, 1)
-    sf_dir = rows.prepare("tiny", 3, str(tmp_path))
-    wl = rows.RowsWorkload("tiny", spark, sf_dir, Tracer(), None)
-    want = wl.oracles["q20_time_bucket"]
-    assert rows.matches(wl.reg["q20_time_bucket"].builder(spark, sf_dir).toPandas(), want)
-    wl.oracles["q20_time_bucket"] = want.iloc[1:]  # planted: one row missing
+    monkeypatch.setattr(rows, "ROWS", ("q20_time_bucket",))
+    monkeypatch.setattr(rows, "SCALE", 0.001)
+    sf_dir = rows.prepare(3, str(tmp_path))
+    wl = rows.RowsWorkload(spark, sf_dir, Tracer(), None)
+    assert rows.matches(wl.reg["q20_time_bucket"].builder(spark, sf_dir).toPandas(),
+                        wl.oracles["q20_time_bucket"])
+    return wl
+
+
+def test_wrong_expected_answer_fails_ops(tiny_rows):
+    wl = tiny_rows
+    wl.oracles["q20_time_bucket"] = wl.oracles["q20_time_bucket"].iloc[1:]  # planted: one row missing
     wl.setup()
     wl.run_pass(traced=False)
+    wl.finish()
     assert wl.bad_rows == {"q20_time_bucket"}
+    assert [r["ok"] for r in wl.records] == [False]
+
+
+def test_wrong_answer_on_repeat_calls_fails_ops(tiny_rows):
+    import dataclasses
+
+    wl = tiny_rows
+    wl.setup()
+    assert not wl.bad_rows  # the warm pass saw the right answer
+    row = wl.reg["q20_time_bucket"]
+
+    def builder(spark, sf_dir):  # planted: one row short from now on
+        df = row.builder(spark, sf_dir)
+        return df.limit(df.count() - 1)
+
+    wl.reg["q20_time_bucket"] = dataclasses.replace(row, builder=builder)
+    wl.run_pass(traced=False)
+    assert [r["ok"] for r in wl.records] == [True]
+    wl.finish()
     assert [r["ok"] for r in wl.records] == [False]
 
 
@@ -76,11 +105,11 @@ def test_stale_read_after_rewrite_fails_op(spark, tmp_path, monkeypatch):
     wl = CacheWorkload(spark, str(tmp_path), 5, Tracer(), None)
     wl.managers = [CacheManager(spark, wl.cache_dir, budget_bytes=wl.budget)]
     assert wl.op(0, "read", 0)["ok"]
-    wl.store.rewrite(0)
+    wl.rewrite_file(0)
     assert wl.op(0, "read", 0)["ok"]  # the rewrite is detected: invalidate + re-warm
     # planted: a cache that never checks freshness serves the old version
     monkeypatch.setattr(CacheManager, "_fresh", lambda self, entry, path: True)
-    wl.store.rewrite(0)
+    wl.rewrite_file(0)
     rec = wl.op(0, "read", 0)
     assert not rec["ok"] and "checksum" in rec["error"]
 
@@ -89,7 +118,7 @@ _SMOKE = """
 import sys
 sys.path.insert(0, {root!r})
 from perfbench import rows, run
-rows.WORKLOADS["warehouse_llm"] = (rows.ROWS, 0.001, 2)
+rows.SCALE = 0.001
 sys.exit(run.main(sys.argv[1:]))
 """
 
