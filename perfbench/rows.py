@@ -37,6 +37,11 @@ TRACE_ROWS = ("s7_stream_incremental_dedup",)
 INDEX_ROWS = ("x2_ann_ivf",)
 
 SCALE = 0.02  # TPC-H scale of the generated fixture
+# untimed, unrecorded passes between set-up and the window. The JVM keeps
+# compiling the planner and codegen paths for tens of seconds after the first
+# pass: a pass took ~2.8 s right after set-up and ~2.0 s some 40 s later, so a
+# window opened straight after set-up measured a steep part of that curve
+WARM_PASSES = 4
 
 
 def layer_of(row: str) -> str:
@@ -149,6 +154,12 @@ class RowsWorkload:
         return spent
 
     # ------------------------------------------------------------ timed window
+    def warm_up(self) -> None:
+        """Run ``WARM_PASSES`` untimed passes and drop their records."""
+        for _ in range(WARM_PASSES):
+            self.run_pass(traced=False)
+        del self.records[:]
+
     def run_pass(self, traced: bool) -> None:
         order = list(self.rows)
         self.rng.shuffle(order)

@@ -54,6 +54,98 @@ def _mean(values) -> float:
     return sum(values) / len(values) if values else 0.0
 
 
+def _become_subreaper() -> None:
+    """Make orphaned descendants re-parent to this process instead of init.
+
+    The Spark JVM forks the Python workers; when the JVM ends first they would
+    outlive the run. As a subreaper this process can still see and wait for them.
+    """
+    import ctypes
+
+    pr_set_child_subreaper = 36
+    libc = ctypes.CDLL(None, use_errno=True)
+    libc.prctl.argtypes = [ctypes.c_int] + [ctypes.c_ulong] * 4
+    libc.prctl.restype = ctypes.c_int
+    if libc.prctl(pr_set_child_subreaper, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER) failed")
+
+
+def _children() -> list[int]:
+    me = str(os.getpid())
+    kids = []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        # field 4 (ppid) follows the parenthesised command name
+        if stat.rsplit(")", 1)[1].split()[1] == me:
+            kids.append(int(d))
+    return kids
+
+
+def _reap_children(grace_s: float = 20.0) -> None:
+    """Wait for every child to end: SIGTERM at once, SIGKILL after ``grace_s``."""
+    import signal
+
+    deadline = time.monotonic() + grace_s
+    sig = signal.SIGTERM
+    signalled: set[int] = set()
+    while True:
+        while True:
+            try:
+                pid, _ = os.waitpid(-1, os.WNOHANG)
+            except ChildProcessError:
+                pid = 0
+            if pid == 0:
+                break
+        kids = _children()
+        if not kids:
+            return
+        if sig == signal.SIGTERM and time.monotonic() > deadline:
+            sig, signalled = signal.SIGKILL, set()
+        for pid in kids:
+            if pid not in signalled:
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+                signalled.add(pid)
+        time.sleep(0.05)
+
+
+def _stop_spark(spark) -> None:
+    """Stop the session, end the JVM and wait until it has exited."""
+    import subprocess
+
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    try:
+        spark.stop()
+    finally:
+        proc = getattr(gateway, "proc", None)
+        if gateway is not None:
+            try:
+                gateway.shutdown()
+            except (Py4JError, OSError):  # the JVM may be gone already
+                pass
+        if proc is not None:
+            if proc.stdin:
+                proc.stdin.close()  # the gateway JVM exits at EOF on its stdin
+            try:
+                proc.wait(timeout=60)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+
+
 def _preflight() -> str | None:
     for rel in ("rubix_spark/__init__.py", "tests/oracle_utils.py", "tools/host_canary.py"):
         if not os.path.exists(os.path.join(ROOT, rel)):
@@ -71,7 +163,9 @@ def _environment(run_dir: str) -> dict:
     os.environ["RUBIX_WAREHOUSE_DIR"] = os.path.join(run_dir, "warehouse")
     os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
+    # Spark gets every core but one, which is left to the Python driver and the
+    # JVM's JIT compiler and GC threads, so they do not preempt task threads
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(max(1, len(os.sched_getaffinity(0)) - 1)))
     return {
         # bench.py's small-input policy: AQE off below 1 GiB, 8 shuffle partitions
         "spark.sql.adaptive.enabled": "false",
@@ -240,7 +334,7 @@ def _run(args, run_dir: str) -> tuple[dict, dict]:
         rss_parts = {"python": _vm_hwm_mib(os.getpid()), "jvm": _vm_hwm_mib(jvm_pid)}
         rss = sum(rss_parts.values())
     finally:
-        spark.stop()
+        _stop_spark(spark)
     canary_after = canary()
 
     done = [r for r in wl.records if "latency" in r]
@@ -280,7 +374,8 @@ def _timed_window(wl, args) -> dict:
     traced run alternates untraced and traced passes so the tracing overhead is
     measured on the same mix; only the untraced part counts as window time.
     The cache store's rewrites between epochs are the generator's work and
-    stay outside every client's busy time.
+    stay outside every client's busy time. Row workloads first run their
+    untimed warm-up passes (``rows.WARM_PASSES``).
     """
     spent = {"untraced": [0.0] * wl.clients, "traced": [0.0] * wl.clients}
     k = 0
@@ -295,6 +390,7 @@ def _timed_window(wl, args) -> dict:
             if k < n - 1:
                 wl.rewrite()
         return spent
+    wl.warm_up()
     total = 0.0
     while True:
         # traced runs go untraced, traced, untraced, ... so each traced pass sits
@@ -364,9 +460,12 @@ def main(argv=None) -> int:
         return 2
     os.makedirs(os.path.join(WORK, "runs"), exist_ok=True)
     run_dir = tempfile.mkdtemp(prefix=f"{args.workload}-", dir=os.path.join(WORK, "runs"))
+    _become_subreaper()
     try:
         result, detail = _run(args, run_dir)
     finally:
+        # on every way out, no process this run started outlives it
+        _reap_children()
         shutil.rmtree(run_dir, ignore_errors=True)
     print(json.dumps({"detail": detail}))
     print(json.dumps(result))

@@ -35,7 +35,9 @@ def spark(tmp_path_factory):
                           extra_conf={"spark.sql.adaptive.enabled": "false",
                                       "spark.local.dir": str(scratch / "local")})
     yield session
-    session.stop()
+    from perfbench.run import _stop_spark
+
+    _stop_spark(session)
 
 
 def test_status_store_sees_exchange(spark):
@@ -123,18 +125,43 @@ sys.exit(run.main(sys.argv[1:]))
 """
 
 
+def _processes_with_env(marker: str) -> list[int]:
+    """Pids of live processes whose environment holds ``marker`` (inherited by every descendant)."""
+    found = []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/environ", "rb") as f:
+                if marker.encode() in f.read():
+                    found.append(int(d))
+        except OSError:
+            continue
+    return found
+
+
 @pytest.mark.parametrize("workload", ["warehouse_llm", "cache_remote"])
 @pytest.mark.parametrize("trace", [0, 1])
-def test_smoke_prints_every_declared_metric(workload, trace):
+def test_smoke_prints_every_declared_metric(workload, trace, tmp_path):
+    import uuid
+
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
     declared = {m["name"]: m["unit"] for m in spec["per_layer" if trace else "end_to_end"]}
-    proc = subprocess.run(
-        [sys.executable, "-c", _SMOKE.format(root=ROOT), "--workload", workload, "--seed", "2",
-         "--seconds", "2", "--trace", str(trace)],
-        cwd=ROOT, capture_output=True, text=True, timeout=600)
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    marker = f"PERFBENCH_SMOKE={uuid.uuid4().hex}"
+    env = dict(os.environ, PERFBENCH_SMOKE=marker.split("=", 1)[1])
+    # output goes to files, not pipes: a pipe stays open while any process that
+    # inherited it lives, so reading it to EOF would wait for a leaked JVM too
+    out, err = tmp_path / "stdout", tmp_path / "stderr"
+    with open(out, "w") as fo, open(err, "w") as fe:
+        proc = subprocess.run(
+            [sys.executable, "-c", _SMOKE.format(root=ROOT), "--workload", workload, "--seed", "2",
+             "--seconds", "2", "--trace", str(trace)],
+            cwd=ROOT, stdout=fo, stderr=fe, timeout=600, env=env)
+    # the JVM and its Python workers have ended by the time the run exits
+    assert _processes_with_env(marker) == []
+    assert proc.returncode == 0, err.read_text()[-3000:]
+    result = json.loads(out.read_text().strip().splitlines()[-1])
     assert set(result) == {"correct", "attempted", "failed", "metrics"}
     assert result["correct"] and result["failed"] == 0 and result["attempted"] >= 1
     assert {k: v["unit"] for k, v in result["metrics"].items()} == declared
