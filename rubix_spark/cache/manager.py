@@ -14,6 +14,15 @@ Reference parity map (operator ids from SURVEY.md §2.A):
                      (``BookKeeper.java:295-305, 774-777``)
 - generations      — A17: monotonic per-path counter; local dirs carry ``_g<N>`` suffixes
                      (``CacheUtil.java:162-167``); stale writers lose the manifest CAS
+- footer metadata  — the BookKeeper FileInfo/FileMetadata cache (``bookkeeper.thrift:17-20``,
+                     ``FileMetadata.java``): parquet footer stats are cached per
+                     ``(path, mtime_ns, size)`` in :mod:`rubix_spark.cache.footer`, one
+                     version per path, and read from the remote once per version, so a
+                     ``read_range`` hit never goes back to the store
+- hit DataFrames   — ``read()`` and row-group hits reuse the planned DataFrame of the
+                     entry's generation (one generation per manifest key); a
+                     read-through miss leaves its DataFrame there for the next hit, and
+                     the local files are checked before a memoized DataFrame is served
 - ``evict_to_budget()`` — A15: LRU by last_access down to ``budget_bytes``
                      (weigher/maximumWeight analog, ``BookKeeper.java:629-686``)
 - skip patterns    — ``CacheUtil.skipCache`` allow/deny regexes (``CacheUtil.java:203-222``)
@@ -39,6 +48,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rubix_spark.cache import footer
 from rubix_spark.cache.manifest import CACHED, WARMING, Entry, Manifest
 
 
@@ -83,7 +93,9 @@ class CacheManager:
         # README.md:5-12). Collated runs each pay ONE trip (that is what collation is
         # for); parallel fetch tasks pay their trips concurrently, like parallel GETs.
         # Freshness stats (HEAD-class metadata) stay free, mirroring the reference's
-        # cached file metadata. 0.0 (default) = local-FS delegate, no injection.
+        # cached file metadata; so does a footer already in the footer cache, which is
+        # read once per (path, mtime_ns, size) version (cache/footer.py).
+        # 0.0 (default) = local-FS delegate, no injection.
         self.remote_latency_s = float(remote_latency_s)
         # A8/A9 non-local read chain: on a miss, ask a peer node's cache daemon
         # (cache/server.py CacheClient) for its CACHED copy BEFORE paying the remote —
@@ -110,12 +122,15 @@ class CacheManager:
         os.makedirs(os.path.join(cache_dir, "fcache"), exist_ok=True)
         self.manifest = Manifest(os.path.join(cache_dir, "manifest.json"))
         self._lock = threading.RLock()
-        # hit-path DataFrame memo keyed by (remote_path, generation): schema inference
-        # on spark.read.parquet costs ~150 ms per call (driver file listing + footer
-        # read), which dominated warm reads. Every re-warm bumps the generation (new
-        # local dir), so a memoized entry can never serve stale or relocated data —
-        # the in-memory-metadata pattern of the reference's BookKeeper cache.
-        self._df_memo: dict[tuple[str, int], DataFrame] = {}
+        # hit-path DataFrame memo: manifest key -> (generation, {row groups: DataFrame}),
+        # with groups None for whole-file reads; a read-through miss seeds it. Schema
+        # inference on spark.read.parquet costs ~100-150 ms per call (driver file
+        # listing + footer read), which dominated warm reads. Every re-warm bumps the
+        # generation (new local dir), so a memoized entry can never serve stale or
+        # relocated data — the in-memory-metadata pattern of the reference's BookKeeper
+        # cache. Each key holds one generation: a lookup under a newer one replaces the
+        # slot, so entries another manager evicted or invalidated cannot pile up here.
+        self._df_memo: dict[str, tuple[int, dict[tuple[int, ...] | None, DataFrame]]] = {}
         # two-phase delete state (see _defer_delete): [(unlink_after_ts, path), ...].
         # Expired trash is drained opportunistically on read()/warm() as well as on
         # each new deferral, and flushed at interpreter exit (weakref so the hook
@@ -160,6 +175,36 @@ class CacheManager:
         """Pay ``trips`` synthetic remote round trips (driver-side call sites)."""
         if self.remote_latency_s > 0.0 and trips > 0:
             time.sleep(self.remote_latency_s * trips)
+
+    def _memo_df(self, entry: Entry, groups: tuple[int, ...] | None, paths: list[str]) -> DataFrame:
+        """The DataFrame over ``paths`` of ``entry``'s generation, memoized and built on
+        first use. The paths are checked first, so a local copy deleted under a
+        memoized DataFrame still reaches the caller's corruption fallback."""
+        for p in paths:
+            if not os.path.exists(p):
+                raise FileNotFoundError(p)
+        with self._lock:
+            gen, dfs = self._df_memo.get(entry.remote_path, (None, {}))
+            if gen != entry.generation:
+                dfs = {}
+                self._df_memo[entry.remote_path] = (entry.generation, dfs)
+            df = dfs.get(groups)
+        if df is None:
+            df = self.spark.read.parquet(*paths)
+            with self._lock:
+                dfs[groups] = df
+        return df
+
+    def _serve_warmed(self, key: str, local: str, groups: tuple[int, ...] | None, paths: list[str]) -> DataFrame | None:
+        """The DataFrame over a copy this manager just warmed, memoized for the next hit
+        when the copy is still ``key``'s live generation. None when the budget eviction
+        right after the warm already removed it (tiny budgets): the caller serves remote."""
+        entry = self.manifest.get(key)
+        if entry is None:
+            return None
+        if entry.local_path != local:  # a newer warm superseded it: serve, don't memoize
+            return self.spark.read.parquet(*paths)
+        return self._memo_df(entry, groups, paths)
 
     def _local_dir(self, remote_path: str, generation: int) -> str:
         # <cache>/fcache/<sanitized-remote>_g<N>  (CacheUtil.java:162-167 layout)
@@ -250,23 +295,14 @@ class CacheManager:
 
     def relevant_row_groups(self, remote_path: str, column: str, lo=None, hi=None) -> list[int]:
         """Row-group pruning from parquet footer min/max statistics (conservative:
-        groups without stats are kept). Single-file paths only."""
-        import pyarrow.parquet as pq
-
-        self._remote_penalty()  # footer read = one ranged GET
-        pf = pq.ParquetFile(remote_path)
+        groups without stats are kept). Single-file paths only. The footer comes from
+        the per-version footer cache, so only its first read per file version pays the
+        ranged GET."""
+        meta = footer.file_meta(remote_path, on_read=self._remote_penalty)
         out = []
-        for i in range(pf.metadata.num_row_groups):
-            md = pf.metadata.row_group(i)
-            col = next(
-                (md.column(j) for j in range(md.num_columns) if md.column(j).path_in_schema == column),
-                None,
-            )
-            st = col.statistics if col is not None else None
-            if st is None or not st.has_min_max:
-                out.append(i)
-                continue
-            if (lo is not None and st.max < lo) or (hi is not None and st.min > hi):
+        for i, cols in enumerate(meta.stats):
+            st = cols.get(column)  # (min, max, has_nulls)
+            if st is not None and ((lo is not None and st[1] < lo) or (hi is not None and st[0] > hi)):
                 continue
             out.append(i)
         return out
@@ -274,6 +310,10 @@ class CacheManager:
     @staticmethod
     def _rg_key(remote_path: str) -> str:
         return remote_path + "#rg"
+
+    @staticmethod
+    def _rg_files(local: str, row_groups: list[int]) -> list[str]:
+        return [os.path.join(local, f"rg_{i:05d}.parquet") for i in row_groups]
 
     # A4 request collation (ReadRequestChain.java:71-90 merge, :92-116 chunking):
     # adjacent row groups merge into ONE backend ranged read; runs longer than
@@ -348,6 +388,7 @@ class CacheManager:
         if prev is not None:
             self._defer_delete(prev.local_path)  # readers of the old subset may be in flight
         with self._lock:
+            self._df_memo.pop(key, None)
             self._counters["warmed_files"] += 1
         self.evict_to_budget()
         return local
@@ -406,8 +447,7 @@ class CacheManager:
             if self._fresh(entry, remote_path):
                 self.manifest.touch(key)
                 try:
-                    files = [os.path.join(entry.local_path, f"rg_{i:05d}.parquet") for i in want]
-                    df = self.spark.read.parquet(*files)
+                    df = self._memo_df(entry, tuple(want), self._rg_files(entry.local_path, want))
                     with self._lock:
                         self._counters["hits"] += 1
                     return df
@@ -423,9 +463,9 @@ class CacheManager:
             self._counters["misses"] += 1
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
             local = self.warm_row_groups(remote_path, want)
-            if local and self.manifest.get(key) is not None:
-                files = [os.path.join(local, f"rg_{i:05d}.parquet") for i in want]
-                return self.spark.read.parquet(*files)
+            df = self._serve_warmed(key, local, tuple(want), self._rg_files(local, want)) if local else None
+            if df is not None:
+                return df
         self._remote_penalty()
         return self.spark.read.parquet(remote_path)
 
@@ -461,11 +501,7 @@ class CacheManager:
             if self._fresh(entry, remote_path):
                 self.manifest.touch(remote_path)
                 try:
-                    memo_key = (remote_path, entry.generation)
-                    df = self._df_memo.get(memo_key)
-                    if df is None:
-                        df = self.spark.read.parquet(entry.local_path)
-                        self._df_memo[memo_key] = df
+                    df = self._memo_df(entry, None, [entry.local_path])
                     with self._lock:
                         self._counters["hits"] += 1
                     return df
@@ -490,10 +526,9 @@ class CacheManager:
                 self._remote_penalty()
                 return self.spark.read.parquet(remote_path)
             local = self.warm(remote_path)
-            # the budget eviction right after warm() may have evicted the fresh copy
-            # itself (tiny budgets) — serve local only if it survived in the manifest
-            if local and self.manifest.get(remote_path) is not None:
-                return self.spark.read.parquet(local)
+            df = self._serve_warmed(remote_path, local, None, [local]) if local else None
+            if df is not None:
+                return df
         self._remote_penalty()
         return self.spark.read.parquet(remote_path)
 
@@ -566,6 +601,7 @@ class CacheManager:
         protects readers in THIS process; cross-process readers coordinate through the
         manifest before planning (same bound as the reference's local block deletes).
         """
+        footer.forget(path)
         with self._lock:
             self._trash.append((time.time() + self._evict_grace_s, path))
         self._drain_trash()
@@ -587,10 +623,11 @@ class CacheManager:
     def invalidate(self, remote_path: str) -> None:
         """Drop the cached copy and bump the generation (BookKeeper.invalidateFileMetadata)."""
         entry = self.manifest.remove(remote_path)
+        with self._lock:
+            self._df_memo.pop(remote_path, None)
         if entry:
             self._defer_delete(entry.local_path)
             self.manifest.next_generation(remote_path)
-            self._df_memo.pop((remote_path, entry.generation), None)
             with self._lock:
                 self._counters["invalidations"] += 1
 
@@ -617,7 +654,7 @@ class CacheManager:
                 if removed is None:
                     continue  # raced an invalidate; re-read total_bytes
                 self._defer_delete(removed.local_path)
-                self._df_memo.pop((removed.remote_path, removed.generation), None)
+                self._df_memo.pop(removed.remote_path, None)
                 evicted += 1
                 self._counters["evictions"] += 1
         return evicted

@@ -20,9 +20,9 @@ Scan-side optimizations (the parts a 100 TB deployment cares about):
 - **Column projection** via ``.option("columns", "a,b")``: the Python DS API has no
   column-pruning pushdown yet, so callers that know their projection pass it explicitly
   and only those parquet column chunks are decoded and shipped through Arrow.
-- **Metadata memoization**: parquet footers (row-group count/stats, schema) are cached
-  per (path, mtime, size) driver-side, so repeated scans of a warmed file skip the
-  footer read entirely.
+- **Metadata memoization**: parquet footers (row-group count/stats, schema) come from
+  the cache layer's footer cache (``cache/footer.py``, one version per path, keyed by
+  mtime and size), so repeated scans of a warmed file skip the footer read entirely.
 
 Reference parity: this is the ``CachingFileSystem.open()`` seam
 (``rubix-core/.../CachingFileSystem.java:227-260``) expressed as a DataSource instead of
@@ -53,6 +53,8 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 from pyspark.sql.types import StructType
+
+from rubix_spark.cache.footer import file_meta
 
 _MANAGERS: dict[str, object] = {}
 
@@ -94,40 +96,6 @@ def _parquet_files(path: str) -> list[str]:
     if os.path.isdir(path):
         return sorted(glob.glob(os.path.join(path, "*.parquet")))
     return [path]
-
-
-# parquet footer memo: (path, mtime_ns, size) -> (num_row_groups, arrow_schema, stats, rows)
-# where stats is [ {col: (min, max, has_nulls)} ] per row group (None where absent).
-# Footer reads cost ~10-30 ms each and repeat per query over the same warmed file —
-# the in-memory-metadata pattern of the reference's BookKeeper (FileMetadata cache).
-_META_MEMO: dict[tuple[str, int, int], tuple[int, object, list]] = {}
-
-
-def _file_meta(path: str):
-    import pyarrow.parquet as pq
-
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    hit = _META_MEMO.get(key)
-    if hit is None:
-        pf = pq.ParquetFile(path)
-        md = pf.metadata
-        stats = []
-        rows = []
-        for rg in range(md.num_row_groups):
-            rg_md = md.row_group(rg)
-            rows.append(rg_md.num_rows)
-            cols = {}
-            for ci in range(rg_md.num_columns):
-                col = rg_md.column(ci)
-                s = col.statistics
-                if s is not None and s.has_min_max:
-                    cols[col.path_in_schema] = (s.min, s.max, bool(s.null_count))
-            stats.append(cols)
-        hit = (md.num_row_groups, pf.schema_arrow, stats, rows)
-        pf.close()
-        _META_MEMO[key] = hit
-    return hit
 
 
 def _normalize_schema(schema):
@@ -251,10 +219,9 @@ class RubixCacheReader(DataSourceReader):
             return [_FilePartition(file=self._resolved, row_group=-1)]
         parts = []
         for f in files:
-            n_rg, _, stats, rows = _file_meta(f)
-            for rg in range(n_rg):
-                if all(_rg_may_match(flt, stats[rg]) for flt in self._filters):
-                    n = rows[rg]
+            meta = file_meta(f)
+            for rg, n in enumerate(meta.rows):
+                if all(_rg_may_match(flt, meta.stats[rg]) for flt in self._filters):
                     n_slices = max(1, -(-n // _SLICE_ROWS))
                     step = -(-n // n_slices)
                     for s in range(0, n, step):
@@ -294,7 +261,7 @@ class RubixCacheDataSource(DataSource):
         from pyspark.sql.pandas.types import from_arrow_schema
 
         files = _parquet_files(_resolve(self.options))
-        _, arrow_schema, _, _ = _file_meta(files[0])
+        arrow_schema = file_meta(files[0]).schema
         cols = _columns_option(self.options)
         if cols:
             import pyarrow as pa

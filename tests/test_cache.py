@@ -147,6 +147,18 @@ def test_corruption_falls_back_to_remote(spark, remote_dir, tmp_path):
         cm2.read(path)
 
 
+def test_corruption_under_a_memoized_hit_falls_back(spark, remote_dir, tmp_path):
+    """A memoized hit DataFrame must not outlive its local copy: the files are checked
+    before the memo is served, so a deleted copy still takes the corruption fallback."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    path = f"{remote_dir}/nation.parquet"
+    expected = _rows(cm.read(path))
+    assert cm.read(path) is cm.read(path)  # memoized
+    shutil.rmtree(cm.manifest.get(path).local_path)
+    assert _rows(cm.read(path)) == expected
+    assert cm.stats()["fallbacks"] == 1
+
+
 def test_manifest_survives_restart(spark, remote_dir, tmp_path):
     """Generation numbers and entries persist across manager restarts
     (FileMetadata.findGenerationNumber analog)."""

@@ -82,3 +82,29 @@ def test_cross_client_invalidation_and_regeneration(spark, remote_file, tmp_path
     assert df.count() == 500
     assert a.stats()["hits"] == 1
     assert all(cache_dir in f for f in df.inputFiles())
+
+
+def test_memo_keeps_one_generation_when_another_client_evicts(spark, remote_file, tmp_path):
+    """A's hit-DataFrame memo must not keep the generations B evicted or invalidated:
+    B's evictions pop only B's own memo, so A holds one generation per path at most,
+    replaced when A's next hit sees the newer generation."""
+    cache_dir = str(tmp_path / "cache")
+    a = CacheManager(spark, cache_dir)
+    b = CacheManager(spark, cache_dir, budget_bytes=1)  # evicts everything it can
+    keys = sorted([remote_file, a._rg_key(remote_file)])
+    for cycle in range(20):
+        a.read(remote_file)  # miss: warms a new generation
+        assert a.read(remote_file).count() == 1000  # hit: memoized
+        a.read_row_groups(remote_file, [0])
+        assert a.read_row_groups(remote_file, [0]).count() == 1000
+        assert len(a._df_memo) <= len(keys)  # no slot survives for an evicted generation
+        assert sorted(a._df_memo) == keys
+        for key, (gen, dfs) in a._df_memo.items():
+            assert gen == a.manifest.get(key).generation and len(dfs) == 1
+        if cycle % 2:
+            b.evict_to_budget()
+        else:
+            b.invalidate(remote_file)
+            b.invalidate(b._rg_key(remote_file))
+        assert a.manifest.get(remote_file) is None
+    assert b.stats()["evictions"] + b.stats()["invalidations"] == 40

@@ -87,6 +87,61 @@ def test_stale_remote_invalidates_subset(spark, multi_rg_file, tmp_path):
     assert cm.stats()["invalidations"] == 1
 
 
+def test_rewrite_moving_the_range_to_other_groups_is_not_served_stale(spark, multi_rg_file, tmp_path):
+    """Footer-cache staleness trap: each rewrite moves the queried key range to
+    different row groups. The first rewrite changes both size and mtime (a footer
+    cache keyed on path alone would prune with the old groups); the second keeps the
+    first's mtime to the nanosecond and changes only the size (a cache keyed on mtime
+    alone would)."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    lo, hi = 250, 449
+
+    def rewrite(shift: int, n: int) -> list[tuple[int, int]]:
+        keys = list(range(shift, shift + n))
+        pq.write_table(pa.table({"k": keys, "v": [k * shift for k in keys]}),
+                       multi_rg_file, row_group_size=100)
+        return [(k, k * shift) for k in keys if lo <= k <= hi]
+
+    assert _rows(cm.read_range(multi_rg_file, "k", lo=lo, hi=hi)) == [(k, k * 2) for k in range(lo, hi + 1)]
+    assert cm.relevant_row_groups(multi_rg_file, "k", lo=lo, hi=hi) == [2, 3, 4]
+    st = os.stat(multi_rg_file)
+
+    want = rewrite(-300, 1100)  # keys -300..799: the range now sits in groups 5-7
+    os.utime(multi_rg_file, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert cm.relevant_row_groups(multi_rg_file, "k", lo=lo, hi=hi) == [5, 6, 7]
+    assert _rows(cm.read_range(multi_rg_file, "k", lo=lo, hi=hi)) == want
+    st = os.stat(multi_rg_file)
+
+    want = rewrite(-550, 1300)  # keys -550..749: groups 8-9, same mtime, new size
+    os.utime(multi_rg_file, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(multi_rg_file).st_size != st.st_size
+    assert cm.relevant_row_groups(multi_rg_file, "k", lo=lo, hi=hi) == [8, 9]
+    assert _rows(cm.read_range(multi_rg_file, "k", lo=lo, hi=hi)) == want
+
+
+def test_row_group_hit_dataframe_is_memoized_per_generation(spark, multi_rg_file, tmp_path):
+    """A repeated row-group hit reuses its planned DataFrame; a warm that commits a
+    new generation of the subset drops the memo, and the next hit plans again. A
+    read-through miss memoizes the frame it serves for the hits that follow."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    cm.warm_row_groups(multi_rg_file, [2, 3])
+    first = cm.read_row_groups(multi_rg_file, [2, 3])
+    assert cm.read_row_groups(multi_rg_file, [2, 3]) is first
+    assert cm.read_row_groups(multi_rg_file, [3]) is not first  # other groups, other frame
+    cm.warm_row_groups(multi_rg_file, [7])
+    assert cm._rg_key(multi_rg_file) not in cm._df_memo
+    again = cm.read_row_groups(multi_rg_file, [2, 3])
+    assert again is not first
+    assert _rows(again) == [(k, k * 2) for k in range(200, 400)]
+    assert cm.stats()["hits"] == 4
+    cold = cm.read_row_groups(multi_rg_file, [0])  # miss: the warm's frame is memoized
+    assert cm.read_row_groups(multi_rg_file, [0]) is cold
+    # a group file deleted under the memoized frame still takes the corruption fallback
+    os.remove(os.path.join(cm.manifest.get(cm._rg_key(multi_rg_file)).local_path, "rg_00000.parquet"))
+    assert _rows(cm.read_row_groups(multi_rg_file, [0])) == [(k, k * 2) for k in range(100)]
+    assert cm.stats()["fallbacks"] == 1
+
+
 def test_rowgroup_eviction_weighs_subset_bytes(spark, multi_rg_file, tmp_path):
     cm = CacheManager(spark, str(tmp_path / "cache"), budget_bytes=1)
     cm.warm_row_groups(multi_rg_file, [1])
@@ -130,3 +185,52 @@ def test_touch_is_batched_not_per_hit(tmp_path):
     assert os.path.getmtime(mpath) > mtime0  # explicit flush persists the timestamps
     # a fresh load sees the flushed last_access
     assert Manifest(mpath).get("r").last_access == m.get("r").last_access
+
+
+def test_footer_cache_under_concurrent_rewrites(tmp_path):
+    """Readers racing a writer that replaces files: every footer returned belongs to
+    a version that was written, and once the writer stops each path's entry is the
+    final version's."""
+    import sys
+    import threading
+
+    from rubix_spark.cache import footer
+
+    paths = [str(tmp_path / f"f{i}.parquet") for i in range(3)]
+
+    def write(path: str, n: int) -> None:
+        pq.write_table(pa.table({"k": list(range(n))}), path + ".tmp", row_group_size=10)
+        os.replace(path + ".tmp", path)
+
+    for p in paths:
+        write(p, 10)
+    stop = threading.Event()
+    bad: list = []
+
+    def reader() -> None:
+        while not stop.is_set():
+            for p in paths:
+                rows = footer.file_meta(p).rows
+                if not (10 <= sum(rows) <= 60 and sum(rows) % 10 == 0 and len(rows) == sum(rows) // 10):
+                    bad.append(rows)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for n in range(20, 70, 10):
+            for p in paths:
+                write(p, n)
+                time.sleep(0.01)
+        stop.set()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert bad == []
+    for p in paths:
+        assert footer.file_meta(p).rows == [10] * 6
+        assert footer._FOOTERS[p][0] == (os.stat(p).st_mtime_ns, os.stat(p).st_size)

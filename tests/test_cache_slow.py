@@ -42,7 +42,8 @@ def test_slow_backend_row_group_subset_warm_is_local(spark, tmp_path):
     mgr = CacheManager(spark, str(tmp_path / "cache"), remote_latency_s=LAT)
     path = f"{SF_SMOKE}/lineitem.parquet"
 
-    rgs = mgr.relevant_row_groups(path, "l_orderkey")  # pays one footer trip
+    # pays one footer trip, unless this process already read this version's footer
+    rgs = mgr.relevant_row_groups(path, "l_orderkey")
     n_cold = _consume(mgr.read_row_groups(path, rgs))  # pays collated-run trips
 
     t0 = time.perf_counter()
@@ -50,3 +51,24 @@ def test_slow_backend_row_group_subset_warm_is_local(spark, tmp_path):
     warm = time.perf_counter() - t0
     assert n_warm == n_cold > 0
     assert warm < LAT  # subset served from the local row-group files
+
+
+def test_slow_backend_range_hit_pays_no_trip(spark, tmp_path):
+    """A repeated read_range is served without a remote trip, footer prune included:
+    the footer is read once per file version, the subset from local files."""
+    mgr = CacheManager(spark, str(tmp_path / "cache"), remote_latency_s=LAT)
+    path = f"{SF_SMOKE}/lineitem.parquet"
+    lo, hi = 100, 1000
+
+    n_cold = _consume(mgr.read_range(path, "l_orderkey", lo, hi))
+
+    t0 = time.perf_counter()
+    mgr.relevant_row_groups(path, "l_orderkey", lo, hi)
+    assert time.perf_counter() - t0 < LAT  # footer stats from the footer cache
+
+    t0 = time.perf_counter()
+    n_warm = _consume(mgr.read_range(path, "l_orderkey", lo, hi))
+    warm = time.perf_counter() - t0
+    assert n_warm == n_cold > 0
+    assert warm < LAT  # prune and subset both local: not even one remote trip
+    assert mgr.stats()["hits"] == 1 and mgr.stats()["misses"] == 1

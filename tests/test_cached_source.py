@@ -109,3 +109,26 @@ def test_columns_option_projects_scan(spark, multi_rg_remote, tmp_path):
     )
     assert df.columns == ["v"]
     assert df.count() == 1000
+
+
+def test_footer_cache_holds_one_version_per_file(multi_rg_remote, tmp_path):
+    """Every rewrite of a file replaces its footer-cache entry instead of adding one,
+    both for the remote path and for the DataSource's warmed copies (each rewrite
+    re-warms into a new generation dir, and the invalidated dir's footers go with it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rubix_spark.cache import footer
+    from rubix_spark.sources.cached_source import RubixCacheReader
+
+    cache_dir = str(tmp_path / "dsc_rewrites")
+    for v in range(1, 6):
+        n = 1000 + 10 * v
+        pq.write_table(pa.table({"k": list(range(n)), "v": [float(i) for i in range(n)]}),
+                       multi_rg_remote, row_group_size=100)
+        os.utime(multi_rg_remote, ns=(v * 10**9, v * 10**9))
+        assert footer.file_meta(multi_rg_remote).rows[-1] == n - 1000
+        parts = RubixCacheReader(None, {"path": multi_rg_remote, "cache_dir": cache_dir}).partitions()
+        assert len(parts) == 11
+    assert [p for p in footer._FOOTERS if p == multi_rg_remote] == [multi_rg_remote]
+    assert len([p for p in footer._FOOTERS if p.startswith(cache_dir)]) == 1
