@@ -2,14 +2,16 @@
 
 Reference parity map (operator ids from SURVEY.md §2.A):
 
-- ``read()``       — A2's routing (CACHED → local read, else remote ± warm-up) and A5's
-                     corruption fallback (local failure → invalidate + direct remote read,
+- ``_lookup()``    — A2's routing (CachingInputStream.java:315-500), the one hit/miss
+                     decision behind ``read()``, ``read_row_groups()`` and ``resolve()``:
+                     TTL, staleness, row-group coverage, counters, and A5's corruption
+                     fallback (local failure → invalidate + remote read,
                      ``CachedReadRequestChain.java:204-223``)
 - ``warm()``       — A6/A10/A18-A19 read-through + async warm-up: a *distributed*
                      ``spark.read.parquet(remote).write.parquet(local)`` copy (every
                      executor copies its split — the Spark analog of the 10-thread
                      remote-fetch pool, ``FileDownloader.java:194-239``), then a
-                     generation-checked manifest commit (A13)
+                     generation-checked manifest commit (A13, ``_commit``)
 - staleness        — A16: remote mtime/size vs manifest ⇒ invalidate + new generation
                      (``BookKeeper.java:295-305, 774-777``)
 - generations      — A17: monotonic per-path counter; local dirs carry ``_g<N>`` suffixes
@@ -24,7 +26,10 @@ Reference parity map (operator ids from SURVEY.md §2.A):
                      read-through miss leaves its DataFrame there for the next hit, and
                      the local files are checked before a memoized DataFrame is served
 - ``evict_to_budget()`` — A15: LRU by last_access down to ``budget_bytes``
-                     (weigher/maximumWeight analog, ``BookKeeper.java:629-686``)
+                     (weigher/maximumWeight analog, ``BookKeeper.java:629-686``); like
+                     the one removal listener of ``BookKeeper.java:723-746``, every
+                     eviction, invalidation and superseded commit deletes its dir
+                     through the manifest's tombstones (``Manifest.remove``/``put``)
 - skip patterns    — ``CacheUtil.skipCache`` allow/deny regexes (``CacheUtil.java:203-222``)
 - dummy mode       — A26: metadata-only what-if accounting (``DummyModeCachingInputStream``)
 - ``stats()``      — A27 metrics surface (hit/miss/eviction/invalidation counters,
@@ -45,15 +50,25 @@ import re
 import shutil
 import threading
 import time
+from typing import Callable, Iterable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 from rubix_spark.cache import footer
-from rubix_spark.cache.manifest import CACHED, WARMING, Entry, Manifest
+from rubix_spark.cache.manifest import CACHED, Entry, Manifest
+
+T = TypeVar("T")
 
 
 class CacheReadError(RuntimeError):
     """Raised in strict mode when a cached read fails (CacheConfig.java:62 analog)."""
+
+
+def _require(paths: list[str]) -> None:
+    """Raise FileNotFoundError for the first of ``paths`` that is gone."""
+    for p in paths:
+        if not os.path.exists(p):
+            raise FileNotFoundError(p)
 
 
 def _mtime_size(path: str) -> tuple[float, int]:
@@ -131,20 +146,6 @@ class CacheManager:
         # cache. Each key holds one generation: a lookup under a newer one replaces the
         # slot, so entries another manager evicted or invalidated cannot pile up here.
         self._df_memo: dict[str, tuple[int, dict[tuple[int, ...] | None, DataFrame]]] = {}
-        # two-phase delete state (see _defer_delete): [(unlink_after_ts, path), ...].
-        # Expired trash is drained opportunistically on read()/warm() as well as on
-        # each new deferral, and flushed at interpreter exit (weakref so the hook
-        # never pins the manager) — so an evict-then-idle manager still reclaims disk
-        # (ADVICE r6). Disk high-water mark remains budget_bytes + whatever was
-        # evicted within the last grace window; that window is the price of never
-        # unlinking under an in-flight scan.
-        self._evict_grace_s = float(os.environ.get("RUBIX_CACHE_EVICT_GRACE_S", "60"))
-        self._trash: list[tuple[float, str]] = []
-        import atexit
-        import weakref
-
-        _self = weakref.ref(self)
-        atexit.register(lambda: (lambda m: m.flush_trash() if m is not None else None)(_self()))
         self._counters = {
             "hits": 0,
             "misses": 0,
@@ -180,9 +181,7 @@ class CacheManager:
         """The DataFrame over ``paths`` of ``entry``'s generation, memoized and built on
         first use. The paths are checked first, so a local copy deleted under a
         memoized DataFrame still reaches the caller's corruption fallback."""
-        for p in paths:
-            if not os.path.exists(p):
-                raise FileNotFoundError(p)
+        _require(paths)
         with self._lock:
             gen, dfs = self._df_memo.get(entry.remote_path, (None, {}))
             if gen != entry.generation:
@@ -221,7 +220,6 @@ class CacheManager:
         """
         if not self.cacheable(remote_path) or self.dummy:
             return None
-        self._drain_trash()  # reclaim expired deferred deletes opportunistically
         mtime, size = _mtime_size(remote_path)
         gen = self.manifest.next_generation(remote_path)
         local = self._local_dir(remote_path, gen)
@@ -237,24 +235,23 @@ class CacheManager:
             # would leak disk forever (found by the generated cache schedules, r13)
             shutil.rmtree(local, ignore_errors=True)
             raise
-        committed = self.manifest.put(
-            Entry(
-                remote_path=remote_path,
-                local_path=local,
-                size_bytes=size,
-                last_modified=mtime,
-                generation=gen,
-                state=CACHED,
-            )
-        )
-        if not committed:
-            # a newer generation won the race (A17): discard our copy
-            shutil.rmtree(local, ignore_errors=True)
-            return None
+        entry = Entry(remote_path=remote_path, local_path=local, size_bytes=size,
+                      last_modified=mtime, generation=gen)
+        return local if self._commit(entry, "warmed_files") else None
+
+    def _commit(self, entry: Entry, counter: str) -> bool:
+        """Commit a copy just written to ``entry.local_path`` through the manifest CAS
+        (A13). When a newer generation won the race (A17) the copy is discarded;
+        otherwise the key's memoized DataFrames go, ``counter`` counts the copy and the
+        cache evicts down to its budget."""
+        if not self.manifest.put(entry):
+            shutil.rmtree(entry.local_path, ignore_errors=True)
+            return False
         with self._lock:
-            self._counters["warmed_files"] += 1
+            self._df_memo.pop(entry.remote_path, None)
+            self._counters[counter] += 1
         self.evict_to_budget()
-        return local
+        return True
 
     def _materialize(self, remote_path: str, local: str, size: int) -> None:
         if self.spark is not None:
@@ -370,28 +367,10 @@ class CacheManager:
             # same no-partial-dir-leak contract as warm() (generated schedules, r13)
             shutil.rmtree(local, ignore_errors=True)
             raise
-        committed = self.manifest.put(
-            Entry(
-                remote_path=key,
-                local_path=local,
-                size_bytes=size,
-                last_modified=mtime,
-                generation=gen,
-                state=CACHED,
-                row_groups=want,
-                remote_size=rsize,
-            )
-        )
-        if not committed:
-            shutil.rmtree(local, ignore_errors=True)
-            return None
-        if prev is not None:
-            self._defer_delete(prev.local_path)  # readers of the old subset may be in flight
-        with self._lock:
-            self._df_memo.pop(key, None)
-            self._counters["warmed_files"] += 1
-        self.evict_to_budget()
-        return local
+        # the commit tombstones the previous subset's dir: its readers may be in flight
+        entry = Entry(remote_path=key, local_path=local, size_bytes=size, last_modified=mtime,
+                      generation=gen, row_groups=want, remote_size=rsize)
+        return local if self._commit(entry, "warmed_files") else None
 
     def _fetch_runs(self, remote_path: str, local: str, runs: list[list[int]]) -> None:
         """A19's parallel downloader at row-group granularity: each collated run is an
@@ -438,29 +417,11 @@ class CacheManager:
         TTL expiry applies exactly as in ``read()`` (A16 expireAfterWrite parity)."""
         key = self._rg_key(remote_path)
         want = sorted(set(row_groups))
-        entry = self.manifest.get(key)
-        if entry is not None and entry.state == CACHED and self.ttl_seconds is not None:
-            if time.time() - entry.last_access > self.ttl_seconds:
-                self.invalidate(key)
-                entry = None
-        if entry is not None and entry.state == CACHED and set(want) <= set(entry.row_groups or []):
-            if self._fresh(entry, remote_path):
-                self.manifest.touch(key)
-                try:
-                    df = self._memo_df(entry, tuple(want), self._rg_files(entry.local_path, want))
-                    with self._lock:
-                        self._counters["hits"] += 1
-                    return df
-                except Exception:
-                    if self.strict:
-                        raise CacheReadError(f"cached row-group read failed for {remote_path}")
-                    self.invalidate(key)
-                    with self._lock:
-                        self._counters["fallbacks"] += 1
-            else:
-                self.invalidate(key)
-        with self._lock:
-            self._counters["misses"] += 1
+        df = self._lookup(
+            key, remote_path, lambda e: self._memo_df(e, tuple(want), self._rg_files(e.local_path, want)), want
+        )
+        if df is not None:
+            return df
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
             local = self.warm_row_groups(remote_path, want)
             df = self._serve_warmed(key, local, tuple(want), self._rg_files(local, want)) if local else None
@@ -485,37 +446,51 @@ class CacheManager:
         return df
 
     # ------------------------------------------------------------------ read path
+    def _lookup(
+        self, key: str, remote_path: str, serve: Callable[[Entry], T], want: Iterable[int] = ()
+    ) -> T | None:
+        """The one hit/miss decision (CachingInputStream.java:315-500) for manifest
+        ``key`` over ``remote_path``: ``serve(entry)`` on a hit, None on a miss.
+
+        A hit is an entry within its TTL (A16 expireAfterWrite), covering the row groups
+        in ``want`` and fresh; an expired or stale entry is invalidated. When ``serve``
+        fails on the local copy the entry is invalidated and the read counts as a
+        fallback and a miss (corruption fallback, CachedReadRequestChain.java:204-223),
+        or raises CacheReadError in strict mode."""
+        entry = self.manifest.get(key)
+        ttl = self.ttl_seconds
+        if entry is not None and ttl is not None and time.time() - entry.last_access > ttl:
+            self.invalidate(key)
+            entry = None
+        if entry is not None and set(want) <= set(entry.row_groups or ()):
+            if self._fresh(entry, remote_path):
+                self.manifest.touch(key)
+                try:
+                    out = serve(entry)
+                    with self._lock:
+                        self._counters["hits"] += 1
+                    return out
+                except Exception:
+                    if self.strict:
+                        raise CacheReadError(f"cached read failed for {key}")
+                    self.invalidate(key)
+                    with self._lock:
+                        self._counters["fallbacks"] += 1
+            else:
+                self.invalidate(key)
+        with self._lock:
+            self._counters["misses"] += 1
+        return None
+
     def read(self, remote_path: str, warm_on_miss: bool = True) -> DataFrame:
-        """RubiX's per-read routing (CachingInputStream.java:315-500, file granularity).
+        """RubiX's per-read routing at file granularity.
 
         CACHED+fresh → local parquet; stale → invalidate, re-warm; miss → warm inline
         (read-through, A6) or serve remote directly when warming is off / path gated.
         """
-        self._drain_trash()  # reclaim expired deferred deletes opportunistically
-        entry = self.manifest.get(remote_path)
-        if entry is not None and entry.state == CACHED:
-            if self.ttl_seconds is not None and time.time() - entry.last_access > self.ttl_seconds:
-                self.invalidate(remote_path)
-                entry = None
-        if entry is not None and entry.state == CACHED:
-            if self._fresh(entry, remote_path):
-                self.manifest.touch(remote_path)
-                try:
-                    df = self._memo_df(entry, None, [entry.local_path])
-                    with self._lock:
-                        self._counters["hits"] += 1
-                    return df
-                except Exception:
-                    # corruption fallback (CachedReadRequestChain.java:204-223)
-                    if self.strict:
-                        raise CacheReadError(f"cached read failed for {remote_path}")
-                    self.invalidate(remote_path)
-                    with self._lock:
-                        self._counters["fallbacks"] += 1
-            else:
-                self.invalidate(remote_path)
-        with self._lock:
-            self._counters["misses"] += 1
+        df = self._lookup(remote_path, remote_path, lambda e: self._memo_df(e, None, [e.local_path]))
+        if df is not None:
+            return df
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
             local = self._fetch_from_peer(remote_path)
             if local is not None:
@@ -531,6 +506,18 @@ class CacheManager:
                 return df
         self._remote_penalty()
         return self.spark.read.parquet(remote_path)
+
+    def resolve(self, remote_path: str) -> str:
+        """The path a scan that opens files itself (the rubix_cache DataSource) should
+        read: the local copy on a hit, else a read-through warm's copy, else the remote
+        path (gated, dummy, or the copy lost its commit or was evicted at once)."""
+
+        def serve(entry: Entry) -> str:
+            _require([entry.local_path])
+            return entry.local_path
+
+        local = self._lookup(remote_path, remote_path, serve) or self.warm(remote_path)
+        return local if local and self.manifest.get(remote_path) is not None else remote_path
 
     def _fetch_from_peer(self, remote_path: str) -> str | None:
         """A8/A9: pull a peer daemon's CACHED copy into this node's cache on a miss.
@@ -551,22 +538,10 @@ class CacheManager:
             gen = self.manifest.next_generation(remote_path)
             local = self._local_dir(remote_path, gen)
             header = self.peer_client.fetch(remote_path, local)
-            committed = self.manifest.put(
-                Entry(
-                    remote_path=remote_path,
-                    local_path=local,
-                    size_bytes=header["size_bytes"],
-                    last_modified=header["last_modified"],
-                    generation=gen,
-                    state=CACHED,
-                )
-            )
-            if not committed:
-                shutil.rmtree(local, ignore_errors=True)
+            entry = Entry(remote_path=remote_path, local_path=local, size_bytes=header["size_bytes"],
+                          last_modified=header["last_modified"], generation=gen)
+            if not self._commit(entry, "peer_fetches"):
                 return None
-            with self._lock:
-                self._counters["peer_fetches"] += 1
-            self.evict_to_budget()
             return local if self.manifest.get(remote_path) is not None else None
         except Exception:
             # degrade to remote — and never leak the partial transfer dir (a peer
@@ -588,36 +563,9 @@ class CacheManager:
         expected = entry.remote_size if entry.remote_size is not None else entry.size_bytes
         return mtime == entry.last_modified and size == expected
 
-    # ------------------------------------------------------------------ two-phase delete
-    def _defer_delete(self, path: str) -> None:
-        """Phase-2 of eviction/invalidation: the entry leaves the manifest (and budget
-        accounting) IMMEDIATELY, but its files stay on disk for a grace period so an
-        in-flight Spark scan planned over the copy can finish — a scan resolves
-        absolute file paths at plan time, and unlinking them mid-read fails the whole
-        job (observed once in the sf1 eviction-stress phase as
-        FAILED_READ_FILE.FILE_NOT_EXIST when an eviction raced a concurrent reader).
-        Re-warms can never collide with a deferred dir: every warm commits under a
-        BUMPED generation into a fresh directory (warm(): next_generation). The grace
-        protects readers in THIS process; cross-process readers coordinate through the
-        manifest before planning (same bound as the reference's local block deletes).
-        """
-        footer.forget(path)
-        with self._lock:
-            self._trash.append((time.time() + self._evict_grace_s, path))
-        self._drain_trash()
-
-    def _drain_trash(self, force: bool = False) -> None:
-        now = time.time()
-        with self._lock:
-            keep = [(due, p) for due, p in self._trash if not force and due > now]
-            drop = [p for due, p in self._trash if force or due <= now]
-            self._trash = keep
-        for p in drop:
-            shutil.rmtree(p, ignore_errors=True)
-
     def flush_trash(self) -> None:
-        """Unlink all deferred deletes now (shutdown/test hook)."""
-        self._drain_trash(force=True)
+        """Delete every tombstoned dir now, grace or not (shutdown/test hook)."""
+        self.manifest.reclaim(force=True)
 
     # ------------------------------------------------------------------ invalidation
     def invalidate(self, remote_path: str) -> None:
@@ -626,7 +574,6 @@ class CacheManager:
         with self._lock:
             self._df_memo.pop(remote_path, None)
         if entry:
-            self._defer_delete(entry.local_path)
             self.manifest.next_generation(remote_path)
             with self._lock:
                 self._counters["invalidations"] += 1
@@ -635,7 +582,7 @@ class CacheManager:
     def evict_to_budget(self) -> int:
         """LRU eviction until under budget (Guava weigher analog, BookKeeper.java:656-686).
 
-        Deletion is two-phase (``_defer_delete``): manifest removal is immediate,
+        Deletion is two-phase (``Manifest.remove``): manifest removal is immediate,
         the unlink waits out a reader grace period."""
         if self.budget_bytes is None:
             return 0
@@ -645,15 +592,9 @@ class CacheManager:
                 lru = min(self.manifest.entries(), key=lambda e: e.last_access, default=None)
                 if lru is None:
                     break
-                # defer the dir of the entry ACTUALLY removed, not the LRU snapshot's:
-                # a re-warm can commit a new generation between the snapshot and the
-                # remove, and deferring the snapshot's dir would leak the new
-                # generation's dir forever — unreachable by eviction AND validate()
-                # (TOCTOU found by the generated cache schedules, r13)
                 removed = self.manifest.remove(lru.remote_path)
                 if removed is None:
                     continue  # raced an invalidate; re-read total_bytes
-                self._defer_delete(removed.local_path)
                 self._df_memo.pop(removed.remote_path, None)
                 evicted += 1
                 self._counters["evictions"] += 1
@@ -670,7 +611,7 @@ class CacheManager:
         Checks every manifest entry's local copy exists and is readable metadata-wise;
         broken entries are invalidated (repair=True) so the next read falls back to
         remote and re-warms. Also sweeps AGED orphan dirs — fcache dirs owned by no
-        live entry, tombstone, or pending trash (a process killed mid-warm leaves one;
+        live entry or tombstone (a process killed mid-warm leaves one;
         no in-process failure path can cover that) — but only past a conservative age
         so a concurrent manager's in-flight warm (dir exists, commit pending) is never
         touched. Returns {checked, broken, repaired, orphans_swept}.
@@ -689,11 +630,9 @@ class CacheManager:
         orphans_swept = 0
         if repair:
             owned = {e.local_path for e in self.manifest.entries()}
-            with self._lock:
-                owned.update(p for _, p in self._trash)
             with self.manifest._lock:
                 owned.update(self.manifest._tombstones)
-            min_age = max(self._evict_grace_s, Manifest.RECLAIM_GRACE) + 60.0
+            min_age = self.manifest.RECLAIM_GRACE + 60.0
             fcache = os.path.join(self.cache_dir, "fcache")
             now = time.time()
             for name in os.listdir(fcache):

@@ -8,11 +8,12 @@ so the manifest is one entry per remote path:
 
     remote_path -> {local_path, size_bytes, last_modified, generation, last_access, state}
 
-States mirror the thrift ``Location`` enum (``bookkeeper.thrift:6-10``): CACHED (local
-copy valid) / WARMING (async materialization queued) — LOCAL/NON_LOCAL ownership does not
-apply driver-side.  Persistence is a JSON file next to the cached data, rewritten
-atomically; generation numbers survive restarts exactly like the ``_g<N>`` file suffixes
-(``rubix-spi/.../CacheUtil.java:162-167``).
+Every entry is CACHED (local copy valid), the one state of the thrift ``Location`` enum
+(``bookkeeper.thrift:6-10``) that applies driver-side; the field stays in the JSON so
+existing manifests load.  Directories that leave the manifest (superseded, invalidated or
+evicted) are tombstoned and deleted after a grace period.  Persistence is a JSON file
+next to the cached data, rewritten atomically; generation numbers survive restarts
+exactly like the ``_g<N>`` file suffixes (``rubix-spi/.../CacheUtil.java:162-167``).
 """
 
 from __future__ import annotations
@@ -26,9 +27,10 @@ import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 
+from rubix_spark.cache import footer
+
 
 CACHED = "CACHED"
-WARMING = "WARMING"
 
 
 @dataclass
@@ -69,10 +71,10 @@ class Manifest:
     """
 
     TOUCH_FLUSH_INTERVAL = 5.0  # seconds between touch-driven flushes
-    # superseded-generation dirs survive this long after being replaced, so a
-    # cross-process reader holding a lazy DataFrame over the previous generation can
-    # still run its action; reclaimed by the next structural mutation past the grace
-    RECLAIM_GRACE = 30.0
+    # a dir that leaves the manifest survives this long, so a reader in any process
+    # holding a lazy DataFrame over it can still run its action; reclaimed by the next
+    # structural mutation past the grace
+    RECLAIM_GRACE = 60.0
 
     def __init__(self, path: str):
         self._path = path
@@ -191,41 +193,53 @@ class Manifest:
                 return False
             prev = self._entries.get(entry.remote_path)
             self._entries[entry.remote_path] = entry
-            # a superseded earlier-generation commit (another writer that raced and
-            # landed first) is unreachable via the manifest after this point, but a
-            # concurrent process may still hold a lazy DataFrame over its dir — so it
-            # is TOMBSTONED (reclaimed after RECLAIM_GRACE by a later mutation), not
-            # deleted here; in-flight cross-process readers of the immediately-previous
-            # generation survive their action
+            # a superseded commit (the previous copy of a re-warm or row-group merge, or
+            # another writer that raced and landed first) is unreachable via the manifest
             if prev is not None and prev.local_path != entry.local_path:
-                self._tombstones[prev.local_path] = time.time() + self.RECLAIM_GRACE
+                self._tombstone_locked(prev.local_path)
             self._sweep_tombstones_locked()
             self._save()
             return True
 
-    def _sweep_tombstones_locked(self, max_age: float | None = None) -> None:
-        """Reclaim tombstoned dirs past their grace deadline (caller holds both locks).
+    def _tombstone_locked(self, local_path: str) -> None:
+        """Schedule the delete of a dir that left the manifest (caller holds both locks)."""
+        footer.forget(local_path)
+        self._tombstones[local_path] = time.time() + self.RECLAIM_GRACE
 
-        ``max_age=0`` forces immediate reclaim of everything (shutdown/test hook)."""
+    def _sweep_tombstones_locked(self, force: bool = False) -> bool:
+        """Delete tombstoned dirs past their grace deadline, or all of them when
+        ``force`` (caller holds both locks). True when any tombstone went."""
         now = time.time()
-        for path, deadline in list(self._tombstones.items()):
-            if max_age == 0 or now >= deadline:
-                shutil.rmtree(path, ignore_errors=True)
-                del self._tombstones[path]
+        due = [p for p, deadline in self._tombstones.items() if force or now >= deadline]
+        for path in due:
+            shutil.rmtree(path, ignore_errors=True)
+            del self._tombstones[path]
+        return bool(due)
 
     def reclaim(self, force: bool = False) -> None:
         """Sweep expired tombstones (``force=True`` ignores the grace period)."""
         with self._lock, self._file_lock():
             self._refresh_locked()
-            self._sweep_tombstones_locked(max_age=0 if force else None)
+            self._sweep_tombstones_locked(force)
             self._save()
 
     def remove(self, remote_path: str) -> Entry | None:
+        """Drop an entry, deleting its dir in two phases (evict, invalidate).
+
+        The entry leaves lookups and budget accounting at once, but its dir is only
+        tombstoned: the files stay until RECLAIM_GRACE has passed, so an in-flight
+        Spark scan planned over the copy can finish. A scan resolves absolute file
+        paths at plan time, and unlinking them mid-read fails the whole job (seen once
+        in the sf1 eviction-stress phase as FAILED_READ_FILE.FILE_NOT_EXIST when an
+        eviction raced a concurrent reader). A re-warm never collides with a tombstoned
+        dir: every warm commits under a bumped generation into a fresh directory. The
+        tombstone is persisted, so the delete outlives the process that scheduled it."""
         with self._lock, self._file_lock():
             self._refresh_locked()
             e = self._entries.pop(remote_path, None)
-            self._sweep_tombstones_locked()
             if e:
+                self._tombstone_locked(e.local_path)
+            if self._sweep_tombstones_locked() or e:
                 self._save()
             return e
 

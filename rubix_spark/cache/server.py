@@ -90,7 +90,7 @@ class _Handler(socketserver.StreamRequestHandler):
     @staticmethod
     def _fetch_header(mgr: CacheManager, p: dict):
         entry = mgr.manifest.get(p["path"])
-        if entry is None or entry.state != "CACHED":
+        if entry is None:
             raise FileNotFoundError(f"not cached here: {p['path']}")
         local = entry.local_path
         names = sorted(f for f in os.listdir(local) if f.endswith(".parquet"))

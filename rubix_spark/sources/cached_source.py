@@ -5,10 +5,12 @@ This is the literal "Spark data source integration for caching" the charter name
 
     spark.read.format("rubix_cache").option("path", remote_path).load()
 
-resolves the path through the CacheManager at *plan time* (hit → the warmed local copy,
-miss → read-through warm, stale → invalidate + re-warm — all A2/A6/A16 semantics), then
-scans whatever copy won as Arrow record batches, one input partition per parquet
-row-group for parallelism.
+resolves the path at *plan time* through ``CacheManager.resolve``, the same hit/miss
+decision as ``CacheManager.read`` (hit → the warmed local copy, miss → read-through warm,
+stale → invalidate + re-warm, local copy gone → invalidate + re-warm — all A2/A5/A6/A16
+semantics), then scans whatever copy won as Arrow record batches, one input partition
+per parquet row-group for parallelism. The manager lives in the planning worker, so its
+counters are that worker's, not the driver's.
 
 Scan-side optimizations (the parts a 100 TB deployment cares about):
 
@@ -75,21 +77,7 @@ def _manager(cache_dir: str):
 
 def _resolve(options: dict) -> str:
     """Plan-time path resolution through the cache (read-through warm on miss)."""
-    remote = options["path"]
-    cache_dir = options.get("cache_dir", "/tmp/rubix_spark_cache/ds")
-    cm = _manager(cache_dir)
-    entry = cm.manifest.get(remote)
-    if entry is not None and cm._fresh(entry, remote):
-        cm.manifest.touch(remote)
-        with cm._lock:
-            cm._counters["hits"] += 1
-        return entry.local_path
-    with cm._lock:
-        cm._counters["misses"] += 1
-    if entry is not None:
-        cm.invalidate(remote)
-    local = cm.warm(remote) if cm.cacheable(remote) else None
-    return local if local and cm.manifest.get(remote) is not None else remote
+    return _manager(options.get("cache_dir", "/tmp/rubix_spark_cache/ds")).resolve(options["path"])
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -284,8 +272,3 @@ def register_cache_source(spark) -> None:
 
     ensure_session_confs(spark)
     spark.dataSource.register(RubixCacheDataSource)
-
-
-def cache_source_stats(cache_dir: str = "/tmp/rubix_spark_cache/ds") -> dict:
-    """Metrics surface of the data-source-scoped cache manager (A27)."""
-    return _manager(cache_dir).stats()

@@ -209,7 +209,7 @@ def test_generated_sequential_schedules(remotes, tmp_path, seed):
     one_file = os.path.getsize(remotes[-1])
     cm = CacheManager(None, str(tmp_path / f"cache{seed}"),
                       budget_bytes=int(one_file * 1.7))
-    cm._evict_grace_s = 0.05 if seed % 3 == 0 else 60.0  # grace boundary variety
+    cm.manifest.RECLAIM_GRACE = 0.05 if seed % 3 == 0 else 60.0  # grace boundary variety
     _run_schedule(cm, remotes, random.Random(1000 + seed), n_ops=25)
     _check_endstate(cm, remotes)
 
@@ -222,7 +222,7 @@ def test_generated_thread_storm(remotes, tmp_path, seed):
     so one dedicated reader thread re-checks it continuously."""
     cm = CacheManager(None, str(tmp_path / f"cache{seed}"),
                       budget_bytes=int(os.path.getsize(remotes[-1]) * 2.2))
-    cm._evict_grace_s = 60.0
+    cm.manifest.RECLAIM_GRACE = 60.0
     stop = threading.Event()
     errs: list = []
 
@@ -258,7 +258,7 @@ def _proc_schedule(cache_dir: str, paths: list[str], wseed: int, q) -> None:
     try:
         cm = CacheManager(None, cache_dir,
                           budget_bytes=int(os.path.getsize(paths[-1]) * 2.2))
-        cm._evict_grace_s = 0.05
+        cm.manifest.RECLAIM_GRACE = 0.05
         rng = random.Random(wseed)
         for _ in range(10):
             p = rng.choice(paths)
@@ -311,10 +311,10 @@ def test_generated_process_storm(remotes, tmp_path, seed):
 def test_grace_window_boundary(remotes, tmp_path):
     """Two-phase eviction edge: with a live grace, a reader holding the resolved
     local path across an invalidate can still read its bytes; at grace 0 the files
-    are gone by the next drain. Either way the manifest entry vanishes instantly."""
+    are gone by the next reclaim. Either way the manifest entry vanishes instantly."""
     p = remotes[0]
     cm = CacheManager(None, str(tmp_path / "cache"))
-    cm._evict_grace_s = 60.0
+    cm.manifest.RECLAIM_GRACE = 60.0
     local = cm.warm(p)
     assert local and os.path.isdir(local)
     cm.invalidate(p)
@@ -325,10 +325,10 @@ def test_grace_window_boundary(remotes, tmp_path):
     assert not os.path.isdir(local)
 
     cm2 = CacheManager(None, str(tmp_path / "cache2"))
-    cm2._evict_grace_s = 0.0
+    cm2.manifest.RECLAIM_GRACE = 0.0
     local2 = cm2.warm(p)
     cm2.invalidate(p)
-    cm2._drain_trash()
+    cm2.manifest.reclaim()
     assert not os.path.isdir(local2)
 
 
@@ -387,7 +387,7 @@ def test_rowgroup_subset_vs_whole_file_overlap(remotes, tmp_path):
     and invalidating one never harms the other."""
     p = remotes[2]  # 1000 rows, 10 row groups
     cm = CacheManager(None, str(tmp_path / "cache"))
-    cm._evict_grace_s = 0.0
+    cm.manifest.RECLAIM_GRACE = 0.0
 
     sub = cm.warm_row_groups(p, [1, 3])
     whole = cm.warm(p)

@@ -57,3 +57,27 @@ def test_validate_repairs_and_evict_respects_budget(remote, tmp_path):
 
     out = main(["evict", "--cache-dir", cache, "--budget", "1"])
     assert out["evicted"] == 1 and out["total_bytes"] == 0
+
+
+def test_invalidate_tombstones_dir_across_processes(remote, tmp_path):
+    """An ``invalidate`` run in its own process leaves the old copy tombstoned in the
+    manifest, so the delete outlives that process and any later one reclaims it."""
+    import json
+    import subprocess
+    import sys
+
+    from rubix_spark.cache.manifest import Manifest
+
+    cache = str(tmp_path / "cache")
+    n = f"{remote}/nation.parquet"
+    old = main(["warm", "--cache-dir", cache, n])["warmed"][n]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, os.path.join(root, "tools", "cache_admin.py"),
+                    "invalidate", "--cache-dir", cache, n],
+                   check=True, capture_output=True, timeout=120)
+    manifest_path = os.path.join(cache, "manifest.json")
+    with open(manifest_path) as f:
+        assert old in json.load(f)["tombstones"]
+    assert os.path.isdir(old)  # still inside its grace period
+    Manifest(manifest_path).reclaim(force=True)
+    assert not os.path.exists(old)

@@ -132,3 +132,27 @@ def test_footer_cache_holds_one_version_per_file(multi_rg_remote, tmp_path):
         assert len(parts) == 11
     assert [p for p in footer._FOOTERS if p == multi_rg_remote] == [multi_rg_remote]
     assert len([p for p in footer._FOOTERS if p.startswith(cache_dir)]) == 1
+
+
+def test_lost_local_copy_falls_back_and_rewarms(multi_rg_remote, tmp_path):
+    """A cached copy deleted behind the manifest is a corruption fallback, as in
+    ``CacheManager.read``: the next scan invalidates it, re-warms, and plans over the
+    new copy instead of failing on the missing files, and the lookup is not a hit."""
+    from rubix_spark.sources.cached_source import RubixCacheReader, _manager
+
+    cache_dir = str(tmp_path / "dsc_lost")
+    opts = {"path": multi_rg_remote, "cache_dir": cache_dir}
+    RubixCacheReader(None, opts)  # read-through warm
+    cm = _manager(cache_dir)
+    lost = cm.manifest.get(multi_rg_remote).local_path
+    shutil.rmtree(lost)
+    before = cm.stats()
+
+    parts = RubixCacheReader(None, opts).partitions()
+    assert len(parts) == 10
+    entry = cm.manifest.get(multi_rg_remote)
+    assert entry.local_path != lost and os.path.isdir(entry.local_path)
+    after = cm.stats()
+    assert after["hits"] == before["hits"]
+    assert after["fallbacks"] == before["fallbacks"] + 1
+    assert after["misses"] == before["misses"] + 1
