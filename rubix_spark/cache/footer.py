@@ -9,6 +9,10 @@ checks the version is HEAD-class and free under the latency model of
 
 Each path holds exactly one version: a rewrite replaces the old entry, and
 ``forget`` drops the entries of a cache directory when the cache deletes it.
+
+This is the only footer reader and part-file walker (``parquet_files``) in ``cache/``
+and ``sources/``: ``CacheManager.relevant_row_groups``, the ``rubix_cache`` DataSource
+and ``sources/stats.py`` (metadata answers, size-branch row counts) all read through it.
 """
 
 from __future__ import annotations
@@ -20,9 +24,10 @@ from typing import Callable, NamedTuple
 
 class FooterMeta(NamedTuple):
     schema: object  # pyarrow.Schema
-    # per row group: {column path: (min, max, has_nulls)}; columns without min/max absent
+    # per row group: {column path: (min, max, null count or None)}; no min/max: absent
     stats: list[dict]
     rows: list[int]
+    columns: tuple[str, ...]  # every leaf column path, with or without stats
 
 
 _FOOTERS: dict[str, tuple[tuple[int, int], FooterMeta]] = {}
@@ -47,9 +52,19 @@ def _read_footer(f) -> FooterMeta:
                 col = rg_md.column(ci)
                 s = col.statistics
                 if s is not None and s.has_min_max:
-                    cols[col.path_in_schema] = (s.min, s.max, bool(s.null_count))
+                    cols[col.path_in_schema] = (s.min, s.max, s.null_count)
             stats.append(cols)
-        return FooterMeta(pf.schema_arrow, stats, rows)
+        columns = tuple(md.schema.column(i).path for i in range(md.num_columns))
+        return FooterMeta(pf.schema_arrow, stats, rows, columns)
+
+
+def parquet_files(path: str) -> list[str]:
+    """``[path]`` for a file; every ``*.parquet`` under a directory, recursively,
+    sorted (single-file and directory-of-part-files fixtures, invariant 14)."""
+    if not os.path.isdir(path):
+        return [path]
+    files = (os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs)
+    return sorted(f for f in files if f.endswith(".parquet"))
 
 
 def file_meta(path: str, on_read: Callable[[], None] | None = None) -> FooterMeta:

@@ -298,7 +298,7 @@ class CacheManager:
         meta = footer.file_meta(remote_path, on_read=self._remote_penalty)
         out = []
         for i, cols in enumerate(meta.stats):
-            st = cols.get(column)  # (min, max, has_nulls)
+            st = cols.get(column)  # (min, max, null count)
             if st is not None and ((lo is not None and st[1] < lo) or (hi is not None and st[0] > hi)):
                 continue
             out.append(i)
@@ -619,9 +619,7 @@ class CacheManager:
         checked = broken = repaired = 0
         for entry in self.manifest.entries():
             checked += 1
-            ok = os.path.isdir(entry.local_path) and any(
-                f.endswith(".parquet") for f in os.listdir(entry.local_path)
-            )
+            ok = os.path.isdir(entry.local_path) and bool(footer.parquet_files(entry.local_path))
             if not ok:
                 broken += 1
                 if repair:

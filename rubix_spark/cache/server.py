@@ -42,6 +42,7 @@ import socketserver
 import threading
 import time
 
+from rubix_spark.cache.footer import parquet_files
 from rubix_spark.cache.manager import CacheManager
 
 
@@ -92,13 +93,12 @@ class _Handler(socketserver.StreamRequestHandler):
         entry = mgr.manifest.get(p["path"])
         if entry is None:
             raise FileNotFoundError(f"not cached here: {p['path']}")
-        local = entry.local_path
-        names = sorted(f for f in os.listdir(local) if f.endswith(".parquet"))
-        files = [{"name": n, "size": os.path.getsize(os.path.join(local, n))} for n in names]
+        paths = parquet_files(entry.local_path)
+        files = [{"name": os.path.basename(f), "size": os.path.getsize(f)} for f in paths]
         return (
             {"files": files, "generation": entry.generation,
              "size_bytes": entry.size_bytes, "last_modified": entry.last_modified},
-            [os.path.join(local, n) for n in names],
+            paths,
         )
 
     @staticmethod

@@ -18,13 +18,17 @@ Scan-side optimizations (the parts a 100 TB deployment cares about):
   top-level columns prune entire row groups via parquet min/max statistics at planning
   time and pre-filter Arrow batches executor-side. All pushed filters are also returned
   to Spark as residuals (the API's "partially pushed" contract), so Spark re-applies
-  them — correctness never depends on the source's filtering.
+  them — correctness never depends on the source's filtering. Floating-point columns
+  are never pushed: Spark orders NaN above every value (and ``NaN = NaN``), while Arrow
+  compares it the IEEE way and footer min/max exclude it, so the source would drop NaN
+  rows Spark keeps (the NaN rule of ``sources/stats.py``).
 - **Column projection** via ``.option("columns", "a,b")``: the Python DS API has no
   column-pruning pushdown yet, so callers that know their projection pass it explicitly
   and only those parquet column chunks are decoded and shipped through Arrow.
-- **Metadata memoization**: parquet footers (row-group count/stats, schema) come from
-  the cache layer's footer cache (``cache/footer.py``, one version per path, keyed by
-  mtime and size), so repeated scans of a warmed file skip the footer read entirely.
+- **Metadata memoization**: parquet footers (row-group count/stats, schema) and part
+  files come from the cache layer's footer cache (``cache/footer.py``, one version per
+  path, keyed by mtime and size), so repeated scans of a warmed file skip the footer
+  read entirely. A copy with no parquet file raises ``FileNotFoundError``.
 
 Reference parity: this is the ``CachingFileSystem.open()`` seam
 (``rubix-core/.../CachingFileSystem.java:227-260``) expressed as a DataSource instead of
@@ -37,8 +41,6 @@ supported locality path).
 
 from __future__ import annotations
 
-import glob
-import os
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -56,7 +58,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from rubix_spark.cache.footer import file_meta
+from rubix_spark.cache.footer import file_meta, parquet_files
 
 _MANAGERS: dict[str, object] = {}
 
@@ -75,15 +77,14 @@ def _manager(cache_dir: str):
     return _MANAGERS[cache_dir]
 
 
-def _resolve(options: dict) -> str:
-    """Plan-time path resolution through the cache (read-through warm on miss)."""
-    return _manager(options.get("cache_dir", "/tmp/rubix_spark_cache/ds")).resolve(options["path"])
-
-
-def _parquet_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
-    return [path]
+def _resolve(options: dict) -> list[str]:
+    """Plan-time path resolution through the cache (read-through warm on miss): the
+    part files of whichever copy won."""
+    local = _manager(options.get("cache_dir", "/tmp/rubix_spark_cache/ds")).resolve(options["path"])
+    files = parquet_files(local)
+    if not files:
+        raise FileNotFoundError(f"rubix_cache: no parquet files in {options['path']}")
+    return files
 
 
 def _normalize_schema(schema):
@@ -114,7 +115,7 @@ def _rg_may_match(f, col_stats: dict) -> bool:
     s = col_stats.get(name)
     if s is None:
         return True
-    lo, hi, has_nulls = s
+    lo, hi, nulls = s
     try:
         if isinstance(f, EqualTo):
             return lo <= f.value <= hi
@@ -129,7 +130,7 @@ def _rg_may_match(f, col_stats: dict) -> bool:
         if isinstance(f, In):
             return any(lo <= v <= hi for v in f.value)
         if isinstance(f, IsNull):
-            return has_nulls
+            return nulls is None or nulls > 0
     except TypeError:  # incomparable types (e.g. stats bytes vs value str) — keep
         return True
     return True
@@ -173,7 +174,7 @@ class _FilePartition(InputPartition):
     # otherwise scan as one task/one Python worker — the slice partitions trade a
     # repeated (column-pruned) decode for N-way parallelism
     slice_start: int = 0
-    slice_len: int = -1
+    slice_len: int = 0
 
 # target rows per input partition when slicing a large row group
 _SLICE_ROWS = 131_072
@@ -182,7 +183,7 @@ _SLICE_ROWS = 131_072
 class RubixCacheReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self._options = options
-        self._resolved = _resolve(options)
+        self._files = _resolve(options)
         self._columns = _columns_option(options)
         self._filters: list = []
 
@@ -191,22 +192,24 @@ class RubixCacheReader(DataSourceReader):
         """Keep conjuncts we can evaluate against parquet stats / Arrow compute; ALL
         input filters are yielded back (partially-pushed contract) so Spark re-applies
         them and the source's pruning is a pure optimization, never a correctness
-        dependency. Nested attributes stay Spark-side."""
+        dependency. Nested attributes and floating-point columns stay Spark-side."""
+        import pyarrow as pa
+
+        schema = file_meta(self._files[0]).schema
+        floats = {fl.name for fl in schema if pa.types.is_floating(fl.type)}
         for f in filters:
             if (
                 isinstance(f, _RANGE_FILTERS + (In, IsNull, IsNotNull))
                 and len(f.attribute) == 1
+                and f.attribute[0] not in floats
                 and (self._columns is None or f.attribute[0] in self._columns)
             ):
                 self._filters.append(f)
             yield f
 
     def partitions(self):
-        files = _parquet_files(self._resolved)
-        if not files:  # bare-file path that isn't a dir: single whole-file partition
-            return [_FilePartition(file=self._resolved, row_group=-1)]
         parts = []
-        for f in files:
+        for f in self._files:
             meta = file_meta(f)
             for rg, n in enumerate(meta.rows):
                 if all(_rg_may_match(flt, meta.stats[rg]) for flt in self._filters):
@@ -217,22 +220,16 @@ class RubixCacheReader(DataSourceReader):
                             file=f, row_group=rg, slice_start=s, slice_len=min(step, n - s)))
         # every row group stats-pruned → an empty-read sentinel (Spark requires ≥1
         # partition; row_group=-2 yields zero batches)
-        return parts or [_FilePartition(file=files[0], row_group=-2)]
+        return parts or [_FilePartition(file=self._files[0], row_group=-2)]
 
     def read(self, partition: _FilePartition):
         import pyarrow.parquet as pq
 
         if partition.row_group == -2:  # all row groups pruned by pushed filters
             return
-        pf = pq.ParquetFile(partition.file)
         kwargs = {"columns": self._columns} if self._columns else {}
-        table = (
-            pf.read_row_group(partition.row_group, **kwargs)
-            if partition.row_group >= 0
-            else pf.read(**kwargs)
-        )
-        if partition.row_group >= 0 and partition.slice_len >= 0:
-            table = table.slice(partition.slice_start, partition.slice_len)
+        table = pq.ParquetFile(partition.file).read_row_group(partition.row_group, **kwargs)
+        table = table.slice(partition.slice_start, partition.slice_len)
         if self._filters:
             expr = _arrow_expr(self._filters)
             if expr is not None:
@@ -248,8 +245,7 @@ class RubixCacheDataSource(DataSource):
     def schema(self):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        files = _parquet_files(_resolve(self.options))
-        arrow_schema = file_meta(files[0]).schema
+        arrow_schema = file_meta(_resolve(self.options)[0]).schema
         cols = _columns_option(self.options)
         if cols:
             import pyarrow as pa

@@ -9,6 +9,9 @@ already-computed answer. The same mechanism backs Spark's own DSv2
 ``spark.sql.parquet.aggregatePushdown``; doing it driver-side keeps the v1 source path
 (bucketed layouts, cache shim) everywhere else.
 
+Footers and part-file listings come from ``cache/footer.py``, which reads each file's
+footer once per ``(path, mtime_ns, size)`` version: a repeated call pays one stat per file.
+
 Trust rules — a footer value is used ONLY when it is provably the exact max:
 - integer / date / timestamp physical types: always exact in parquet stats.
 - float / double: NEVER trusted (ADVICE r7, verified empirically): parquet writers
@@ -38,19 +41,9 @@ Untrusted columns are returned in ``scan`` and must be aggregated by the caller.
 
 from __future__ import annotations
 
-import os
+from rubix_spark.cache.footer import file_meta, parquet_files
 
 _STR_TRUST_LEN = 8
-
-
-def _parquet_files(path: str) -> list[str]:
-    """Single-file and directory-of-part-files fixtures (invariant 14)."""
-    if os.path.isdir(path):
-        out = []
-        for root, _, files in os.walk(path):
-            out.extend(os.path.join(root, f) for f in sorted(files) if f.endswith(".parquet"))
-        return out
-    return [path]
 
 
 def parquet_row_count(path: str) -> int:
@@ -58,64 +51,53 @@ def parquet_row_count(path: str) -> int:
     branches (q4/q5). Row counts, not file bytes: bytes are a compression artifact
     (invariant: a 16 MB heavily-compressed fixture held 1.6M rows and mis-keyed q5's
     branch), while footer ``num_rows`` is what join/pair cost actually scales with."""
-    import pyarrow.parquet as pq
+    return sum(sum(file_meta(f).rows) for f in parquet_files(path))
 
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+
+def _trusted_max(mn, mx) -> bool:
+    """The per-chunk trust rules of the module doc for a chunk with min/max stats."""
+    if isinstance(mx, bytes):  # binary non-string: never trusted
+        return False
+    if isinstance(mx, str):  # short-ASCII trust rule
+        return (
+            isinstance(mn, str)
+            and mx.isascii() and mn.isascii()
+            and len(mx) <= _STR_TRUST_LEN and len(mn) <= _STR_TRUST_LEN
+        )
+    return True
 
 
 def footer_max(path: str) -> tuple[dict[str, object], list[str]]:
     """(maxes, scan): per-column exact MAX from footer stats, plus the columns that
     need a real scan (untrusted physical type, ns timestamps, or absent stats)."""
-    import pyarrow.parquet as pq
+    import pyarrow as pa
 
     maxes: dict[str, object] = {}
     bad: set[str] = set()
     names: list[str] = []
-    for f in _parquet_files(path):
-        pf = pq.ParquetFile(f)
+    for f in parquet_files(path):
+        meta = file_meta(f)
         if not names:
-            # ns-unit timestamps: exact max not representable as datetime (see module doc)
-            import pyarrow as pa
-
-            for field in pf.schema_arrow:
+            for field in meta.schema:
                 names.append(field.name)
+                # ns-unit timestamps: exact max not representable as datetime (see module doc)
                 if isinstance(field.type, pa.TimestampType) and field.type.unit == "ns":
                     bad.add(field.name)
                 # floats: footer min/max excludes NaN, engines order NaN greatest
                 if pa.types.is_floating(field.type):
                     bad.add(field.name)
-        md = pf.metadata
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            if g.num_rows == 0:
+        for cols, n in zip(meta.stats, meta.rows):
+            if n == 0:
                 continue
-            for i in range(g.num_columns):
-                c = g.column(i)
-                name = c.path_in_schema
+            for name in meta.columns:
                 if name in bad:
                     continue
-                s = c.statistics
-                if s is None or not s.has_min_max:
+                s = cols.get(name)
+                if s is None or not _trusted_max(s[0], s[1]):
                     bad.add(name)
                     maxes.pop(name, None)
-                    continue
-                v = s.max
-                if isinstance(v, bytes):  # binary non-string: never trusted
-                    bad.add(name)
-                    maxes.pop(name, None)
-                    continue
-                if isinstance(v, str):  # short-ASCII trust rule (see module doc)
-                    mn = s.min
-                    if not (
-                        isinstance(mn, str)
-                        and v.isascii() and mn.isascii()
-                        and len(v) <= _STR_TRUST_LEN and len(mn) <= _STR_TRUST_LEN
-                    ):
-                        bad.add(name)
-                        maxes.pop(name, None)
-                        continue
-                if name not in maxes or v > maxes[name]:
-                    maxes[name] = v
+                elif name not in maxes or s[1] > maxes[name]:
+                    maxes[name] = s[1]
     return maxes, [n for n in names if n not in maxes]
 
 
@@ -143,36 +125,23 @@ def footer_topk_cutoff(path: str, col: str, k: int) -> int | None:
     the row sat at 3.19x DuckDB with the pruning 'shipped'). None here means the
     caller computes the exact k-th-smallest bound from one scan instead."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     groups: list[tuple[int, int, int]] = []  # (chunk max, chunk min, non-null rows)
     total_nulls = 0  # NULL keys survive the caller's OR-isNull term in EVERY group
-    for f in _parquet_files(path):
-        pf = pq.ParquetFile(f)
-        field = next((fl for fl in pf.schema_arrow if fl.name == col), None)
+    for f in parquet_files(path):
+        meta = file_meta(f)
+        field = next((fl for fl in meta.schema if fl.name == col), None)
         if field is None or not pa.types.is_integer(field.type):
             return None
-        md = pf.metadata
-        if md.num_row_groups == 0:
-            continue  # zero-row-group part file (ADVICE r9): nothing to count
-        idx = next(
-            (i for i in range(md.row_group(0).num_columns)
-             if md.row_group(0).column(i).path_in_schema == col),
-            None,
-        )
-        if idx is None:  # column absent from the physical layout: no trusted bound
-            return None
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            if g.num_rows == 0:
+        for cols, n in zip(meta.stats, meta.rows):  # zero-row-group part files: no-op
+            if n == 0:
                 continue
-            c = g.column(idx)
-            s = c.statistics
-            if s is None or not s.has_min_max:
+            s = cols.get(col)
+            if s is None:  # no stats for this chunk: no trusted bound
                 return None
-            nulls = s.null_count if s.has_null_count else 0
-            total_nulls += nulls or 0
-            groups.append((s.max, s.min, g.num_rows - (nulls or 0)))
+            nulls = s[2] or 0
+            total_nulls += nulls
+            groups.append((s[1], s[0], n - nulls))
     total = 0
     for mx, _, n in sorted(groups, key=lambda t: t[0]):
         total += n

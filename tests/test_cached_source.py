@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
@@ -156,3 +157,43 @@ def test_lost_local_copy_falls_back_and_rewarms(multi_rg_remote, tmp_path):
     assert after["hits"] == before["hits"]
     assert after["fallbacks"] == before["fallbacks"] + 1
     assert after["misses"] == before["misses"] + 1
+
+
+def test_float_filters_keep_nan_rows_spark_returns(spark, tmp_path):
+    """Spark orders NaN above every value and matches ``NaN = NaN``; Arrow compares
+    NaN the IEEE way and footer max excludes NaN. A pushed float filter would drop
+    the NaN row before Spark's residual could keep it, so none is pushed. The
+    expected rows come from an in-memory DataFrame (Spark semantics), not from
+    ``spark.read.parquet``, whose own row-group pruning also drops ``x > 5``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nan.parquet")
+    k, x = [1, 2, 3], [1.0, float("nan"), 2.0]
+    pq.write_table(pa.table({"k": k, "x": x}), path)
+    register_cache_source(spark)
+    cached = _read(spark, path, str(tmp_path / "dsc_nan"))
+    mem = spark.createDataFrame(list(zip(k, x)), "k long, x double")
+    for cond in ("x >= 2", "x > 5", "x = double('NaN')"):
+        want = sorted(r.k for r in mem.where(cond).collect())
+        assert sorted(r.k for r in cached.where(cond).collect()) == want, cond
+    assert want == [2]
+
+
+def test_empty_remote_dir_raises_file_not_found(spark, tmp_path):
+    """A path whose copy holds no parquet file fails with one FileNotFoundError that
+    names it, with or without a user schema."""
+    from rubix_spark.sources.cached_source import RubixCacheDataSource, RubixCacheReader
+
+    remote = tmp_path / "empty_remote"
+    remote.mkdir()
+    opts = {"path": str(remote), "cache_dir": str(tmp_path / "dsc_empty")}
+    with pytest.raises(FileNotFoundError, match=re.escape(str(remote))):
+        RubixCacheDataSource(opts).schema()
+    with pytest.raises(FileNotFoundError, match=re.escape(str(remote))):
+        RubixCacheReader(None, opts)
+    register_cache_source(spark)
+    for reader in (spark.read, spark.read.schema("k long")):
+        df = reader.format("rubix_cache").options(**opts)
+        with pytest.raises(Exception, match="FileNotFoundError.*" + re.escape(str(remote))):
+            df.load().collect()

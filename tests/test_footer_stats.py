@@ -204,3 +204,30 @@ def test_footer_topk_cutoff_zero_row_group_part(tmp_path):
     pq.write_table(pa.table({"k": pa.array([], pa.int64())}),
                    str(d / "part-2.parquet"))
     assert footer_topk_cutoff(str(d), "k", 10) == 9
+
+
+def test_stats_read_through_the_footer_cache(tmp_path, monkeypatch):
+    """parquet_row_count / footer_max / footer_topk_cutoff read each file's footer
+    once per version: a repeated call reads none, an in-place rewrite is seen by all
+    three, and the footer cache holds one entry for the path."""
+    from rubix_spark.cache import footer
+    from rubix_spark.sources.stats import footer_topk_cutoff
+
+    p = str(tmp_path / "t.parquet")
+
+    def answers():
+        return parquet_row_count(p), footer_max(p)[0]["k"], footer_topk_cutoff(p, "k", 10)
+
+    pq.write_table(pa.table({"k": list(range(100))}), p, row_group_size=10)
+    os.utime(p, ns=(10**9, 10**9))
+    assert answers() == (100, 99, 9)
+    reads = []
+    real = footer._read_footer
+    monkeypatch.setattr(footer, "_read_footer", lambda f: reads.append(f) or real(f))
+    assert answers() == (100, 99, 9)
+    assert reads == []
+    pq.write_table(pa.table({"k": list(range(5, 205))}), p, row_group_size=20)
+    os.utime(p, ns=(2 * 10**9, 2 * 10**9))
+    assert answers() == (200, 204, 24)
+    assert len(reads) == 1
+    assert [k for k in footer._FOOTERS if k.startswith(str(tmp_path))] == [p]
