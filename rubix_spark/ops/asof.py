@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 
 from rubix_spark import catalog
 from rubix_spark.fns import duck_sum_fast, money_from_units, money_sum_fast
-from rubix_spark.queries import REGISTRY, register
+from rubix_spark.queries import REGISTRY, at_scale, register
 
 _ASOF_ORACLE = """
     WITH p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
@@ -255,22 +255,18 @@ def _range_cols(us_col):
         "(sources/bucketing.events_user_layout), so the window consumes the bucket "
         "partitioning and two-level sort directly: ZERO Exchange, ZERO Sort at any "
         "scale (the per-run user_id shuffle of the whole stream was this row's "
-        "dominant cost — r9/r10 verdict weak row). Measured (tools/proto_x7_layout): "
+        "dominant cost — r9/r10 verdict weak row). Measured (docs/PROBES.md proto_x7_layout): "
         "sf0.1 0.250 vs 0.354 shuffle, sf1 0.303 vs 0.468, sf10 0.426 vs 1.074 — no "
         "inversion, so the size branch exists only to keep the shuffle body "
-        "driver-oracle-exercised at sf0.01 (RUBIX_X7_LAYOUT_MIN_ROWS=50k; the layout "
+        "driver-oracle-exercised at sf0.01 (AT_SCALE x7_range_join: 50k events rows; the layout "
         "branch is oracle-pinned by tests/test_denorm_layout.py). Click values sum "
         "as long ten-thousandths (exact, the dec() contract)."
     ),
 )
 def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from rubix_spark.sources.bucketing import events_user_layout
-    from rubix_spark.sources.stats import parquet_row_count
 
-    min_rows = int(os.environ.get("RUBIX_X7_LAYOUT_MIN_ROWS", 50_000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/events.parquet") < min_rows:
+    if not at_scale("x7_range_join", sf_dir):
         return REGISTRY["x7_range_join_shuffle"].builder(spark, sf_dir)
     ev = events_user_layout(spark, sf_dir)
     # us is materialized at ingest; NULL iff ts is NULL (see the shuffle form's

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from rubix_spark import catalog
 from rubix_spark.fns import round_det
 from rubix_spark.ops import _tok
-from rubix_spark.queries import REGISTRY, register
+from rubix_spark.queries import REGISTRY, at_scale, register, table_rows
 
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
@@ -722,7 +722,8 @@ def _hub_components_from_bands(bands: DataFrame) -> DataFrame:
         "the bucket hubs only and members attach by min-hub in one join — half the "
         "diameter, |hubs| labels instead of |docs| (sf10 protocol row 9.52 -> "
         "3.57 s; equivalences in the _hub_components docstring, pinned vs pairs/"
-        "star CC in tests/test_denorm_layout). Below RUBIX_CC_HUB_MIN_ROWS the "
+        "star CC in tests/test_denorm_layout). Below the AT_SCALE "
+        "x1_dedup_components threshold (2000 documents rows) the "
         "all-pairs list stays (driver's sf0.01 scale keeps both bodies "
         "oracle-exercised). Oracle restates it as a recursive-CTE transitive "
         "closure over the clique pairs (equivalent closure)."
@@ -735,12 +736,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (protocol row: 9.52 -> 3.57 s) — so the threshold only preserves the
     # all-pairs path on the driver's sf0.01 correctness scale (500 docs), where
     # both bodies stay oracle-exercised (forced-branch test covers hub there).
-    import os
-
-    from rubix_spark.sources.stats import parquet_row_count
-
-    min_rows = int(os.environ.get("RUBIX_CC_HUB_MIN_ROWS", 2_000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/documents.parquet") < min_rows:
+    if not at_scale("x1_dedup_components", sf_dir):
         edges = minhash_lsh(spark, sf_dir)
         return connected_components(edges, "doc_a", "doc_b")
     return _hub_components(spark, sf_dir)
@@ -811,6 +807,7 @@ def diversity_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 from rubix_spark.ops import similarity as _sim  # noqa: E402  (no import cycle: similarity does not import dedup)
 
 SEM_TAU = 0.4  # demo-calibrated like x1_embedding_neardup (random vectors top out ~0.47)
+SEM_TILE_ROWS = 4096  # semantic_dedup_np hash-block size; tests lower it to force nb > 1
 
 
 @register(
@@ -1019,16 +1016,12 @@ def _sem_tile(tbl):
 )
 def semantic_dedup_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
-    import os
-
-    from rubix_spark.sources.stats import parquet_row_count
 
     emb = catalog.table(spark, sf_dir, "embeddings")
     cents, _ = _sim._ivf_codebook(emb, (), memo_key=sf_dir)
     assign = _sim._ivf_assign(emb, cents)
-    n = parquet_row_count(f"{sf_dir.rstrip('/')}/embeddings.parquet")
-    tile = int(os.environ.get("RUBIX_SEM_TILE_ROWS", 4096))  # test hook: force nb>1
-    nb = max(1, math.ceil(n / _sim.N_CENTROIDS / tile))
+    n = table_rows(sf_dir, "embeddings")
+    nb = max(1, math.ceil(n / _sim.N_CENTROIDS / SEM_TILE_ROWS))
     if nb == 1:
         # every cluster fits one tile: the direct per-cluster kernel emits kept
         # flags in place — no replication explode, no attach join (sf1: 0.86 vs
@@ -1067,6 +1060,10 @@ def semantic_dedup_np(spark: SparkSession, sf_dir: str) -> DataFrame:
 # incremental near-dup: dedup a NEW batch against the frozen corpus index
 # ---------------------------------------------------------------------------
 INCR_SPLIT = 400  # doc_id < INCR_SPLIT = "corpus", >= = "new batch" (fixture split)
+# s7's files per micro-batch; None lets availableNow drain everything in one batch.
+# Tests cap it (adversarial streaming, r13) so a directory fixture actually runs
+# MULTI-batch state — one batch hides any cross-batch aggregation error by construction.
+S7_MAX_FILES_PER_TRIGGER: int | None = None
 
 
 @register(
@@ -1192,13 +1189,8 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs_schema = catalog.table(spark, sf_dir, "documents").schema
     reader = spark.readStream.schema(docs_schema).format("parquet")
-    # test hook (adversarial streaming, r13): cap files per micro-batch so a
-    # directory fixture actually exercises MULTI-batch state — the default
-    # (unset) lets availableNow drain everything in one batch, which hides any
-    # cross-batch aggregation error by construction
-    mfpt = os.environ.get("RUBIX_S7_MAX_FILES_PER_TRIGGER")
-    if mfpt:
-        reader = reader.option("maxFilesPerTrigger", int(mfpt))
+    if S7_MAX_FILES_PER_TRIGGER:
+        reader = reader.option("maxFilesPerTrigger", S7_MAX_FILES_PER_TRIGGER)
     path = f"{sf_dir.rstrip('/')}/documents.parquet"
     if os.path.isdir(path):  # generated fixtures: a directory of part-files
         raw = reader.load(path)
@@ -1246,8 +1238,8 @@ _SUBSTR_K = 8  # window tokens: every duplicated run of >= K tokens contains >= 
 
 
 def _substring_win_kernel(batches):
-    """Stage-1 Arrow kernel shared by the graded builder and the stage-2 A/B
-    harness (tools/proto_substring_stage2.py): tokenize, stride-1 K-token windows
+    """Stage-1 Arrow kernel of the graded builder (also the kernel of the stage-2
+    A/B probe, docs/PROBES.md): tokenize, stride-1 K-token windows
     over the flat token buffer, emit (doc_id, pos, sh).
 
     mapInArrow form (round-14, the r7 x3_quality lesson): the text AND the
@@ -1365,7 +1357,7 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
        count of the corpus — the same volume the suffix-array build would sort.
 
     Stage-2 alternative MEASURED AND REJECTED (r12 session 2,
-    tools/proto_substring_stage2.py): hash-agg dup-key set + shuffle-hash LEFT
+    docs/PROBES.md proto_substring_stage2): hash-agg dup-key set + shuffle-hash LEFT
     SEMI join removes the big side's sort but adds a second full exchange — it
     TIES the count window at both sf0.1 (0.74 vs 0.75) and sf10 (6.33 vs 6.37,
     identical spans), so the row's cost is the kernel + exchange volume, not the
@@ -1376,7 +1368,7 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-11: the duplicate key is a PAIR of independently-seeded xxhash64 longs
     # instead of the 32-char md5 hex string (see _substring_wins_frame) — 16-byte
     # long keys through the count shuffle (sf10 11.2 -> 9.5 s, sf0.1 1.02 -> 0.83
-    # — tools/proto_substring.py). The hash is internal to the engine: both
+    # — docs/PROBES.md proto_substring). The hash is internal to the engine: both
     # engines only ever compare duplicate POSITION sets, so the oracle keeps md5.
     wins = _substring_wins_frame(spark, sf_dir)
     hits = (

@@ -30,25 +30,7 @@ import uuid
 
 from pyspark.sql import Column, SparkSession
 
-
-def table_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files if f.endswith(".parquet"))
-    return total
-
-
-def parquet_files(path: str) -> list[str]:
-    out = []
-    for root, _dirs, files in os.walk(path):
-        out += [os.path.join(root, f) for f in files if f.endswith(".parquet")]
-    return sorted(out)
-
-
-def _footer_rows(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in parquet_files(path))
+from rubix_spark.cache.footer import file_meta, parquet_files
 
 
 def _invalidate_memo(spark: SparkSession, path: str) -> None:
@@ -79,8 +61,8 @@ def compact(
 
     Returns {files_before, files_after, bytes, rows}.
     """
-    before = parquet_files(path)
-    n_bytes = table_bytes(path)
+    before = parquet_files(path)  # [path] for a single-file table
+    n_bytes = sum(os.path.getsize(f) for f in before)
     n_out = max(1, -(-n_bytes // (target_file_mb * 1024 * 1024)))
     out = spark.read.parquet(path).repartition(n_out)
     if sort_within_by is not None:
@@ -100,17 +82,18 @@ def compact(
         shutil.rmtree(tmp, ignore_errors=True)
         raise
     try:
-        shutil.rmtree(old)
+        shutil.rmtree(old) if os.path.isdir(old) else os.remove(old)
     except OSError as e:  # non-fatal: table is live; backup just lingers
         import warnings
 
         warnings.warn(f"compact(): backup {old} not removed ({e}); delete manually")
     _invalidate_memo(spark, path)
+    after = parquet_files(path)
     return {
         "files_before": len(before),
-        "files_after": len(parquet_files(path)),
+        "files_after": len(after),
         "bytes": n_bytes,
-        "rows": _footer_rows(path),
+        "rows": sum(sum(file_meta(f).rows) for f in after),
     }
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from rubix_spark import catalog
 from rubix_spark.fns import avg_units_det, duck_avg_units, round_det
 from rubix_spark.ops import _tok
-from rubix_spark.queries import REGISTRY, register
+from rubix_spark.queries import REGISTRY, at_scale, register
 
 CHUNK_TOKENS = 50
 CHUNK_STRIDE = 40
@@ -165,7 +165,7 @@ def _rep_kernel(batches):
         "triples, per-doc segmented distinct) — the r4 explode+countDistinct form "
         "shuffled every (doc_id, shingle STRING) pair, ~token-count of the corpus "
         "rows (sf10: 19.2 -> 2.0 s, sf1 2.30 -> 0.36, sf0.1 0.94 -> 0.30; "
-        "identical output at every SF — tools/proto_x9_repetition.py). JVM array "
+        "identical output at every SF — docs/PROBES.md). JVM array "
         "expressions were re-tried and re-rejected: both the rand-barrier and the "
         "lambda-bound forms leave interpreted/re-inlined tokenizers (25-51 s at "
         "sf0.1, invariants 3/10). Explode body lives on as x9_repetition_explode."
@@ -599,7 +599,7 @@ def docs_ntok_layout(spark: SparkSession, sf_dir: str):
     pipeline table. The per-query x9_pack plan collapses to scan (3 pruned int
     cols, never text) -> bin_id projection -> ONE aggregate exchange; the Arrow
     text kernel, the checkpoint, and both full shuffles of the counts table move
-    to the fingerprint-guarded write path. Measured (tools/proto_x9_pack, idle
+    to the fingerprint-guarded write path. Measured (docs/PROBES.md proto_x9_pack, idle
     min-of-5): sf0.1 0.322 vs 0.706 shuffle, sf1 0.606 vs 0.845, sf10 0.654 vs
     1.530 — no inversion at any SF (invariant 16).
 
@@ -667,19 +667,13 @@ def _two_level_prefix_bins(t):
         "docs_ntok layout (token counts + global cumsum materialized at ingest — "
         "see docs_ntok_layout), so the per-query plan is scan -> bin projection -> "
         "one aggregate exchange, no text, no Python, no window. Size branch "
-        "(RUBIX_X9PACK_LAYOUT_MIN_ROWS=2000) keeps the full-compute shuffle body "
+        "(AT_SCALE x9_pack: 2000 documents rows) keeps the full-compute shuffle body "
         "driver-oracle-exercised at sf0.01; the layout branch is oracle-pinned by "
         "tests/test_denorm_layout.py."
     ),
 )
 def x9_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from rubix_spark.queries import REGISTRY
-    from rubix_spark.sources.stats import parquet_row_count
-
-    min_rows = int(os.environ.get("RUBIX_X9PACK_LAYOUT_MIN_ROWS", 2000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/documents.parquet") < min_rows:
+    if not at_scale("x9_pack", sf_dir):
         return REGISTRY["x9_pack_shuffle"].builder(spark, sf_dir)
     lay = docs_ntok_layout(spark, sf_dir)
     start = F.col("cum") - F.col("n_tok")

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from rubix_spark import catalog
 from rubix_spark.fns import round_det
-from rubix_spark.queries import register
+from rubix_spark.queries import AT_SCALE, at_scale, register
 
 TOP_K = 10
 N_CENTROIDS = 16
@@ -119,8 +119,7 @@ def _duck_cos(a: str, b: str) -> str:
 # np_exact pays a fixed Python-worker spin-up (~0.2 s) the interpreted fold
 # doesn't; the fold pays ~4.7 µs/row. Crossover ~50k rows; sf1 (20k) keeps the
 # fold, sf10 (200k) rides the kernel. Measured idle min-of-N: sf1 0.411 fold vs
-# 0.475 kernel; sf10 0.921 fold vs 0.550 kernel.
-_BRUTEFORCE_NP_MIN_ROWS = 100_000
+# 0.475 kernel; sf10 0.921 fold vs 0.550 kernel. Threshold: AT_SCALE["x2_ann_bruteforce"].
 
 
 def _bruteforce_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,7 +250,7 @@ def _bruteforce_np_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "Exact cosine top-k, size-adaptive (invariant 16): past "
-        f"{_BRUTEFORCE_NP_MIN_ROWS} footer rows the interpreted zip_with/aggregate "
+        f"{AT_SCALE['x2_ann_bruteforce'][1]} footer rows the interpreted zip_with/aggregate "
         "fold (~4.7 µs/row) yields to a mapInArrow numpy kernel whose "
         "dimension-major accumulation reproduces the fold's IEEE add order "
         "BIT-IDENTICALLY (same oracle, asserted per-row in tests/test_ann.py); "
@@ -260,12 +259,7 @@ def _bruteforce_np_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from rubix_spark.sources.stats import parquet_row_count
-
-    min_rows = int(os.environ.get("RUBIX_X2_NP_MIN_ROWS", _BRUTEFORCE_NP_MIN_ROWS))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/embeddings.parquet") >= min_rows:
+    if at_scale("x2_ann_bruteforce", sf_dir):
         return _bruteforce_np_exact(spark, sf_dir)
     return _bruteforce_hof(spark, sf_dir)
 

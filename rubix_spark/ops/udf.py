@@ -23,7 +23,7 @@ from pyspark.sql.types import DoubleType
 from rubix_spark import catalog
 from rubix_spark.fns import round_det
 from rubix_spark.ops import _tok
-from rubix_spark.queries import REGISTRY, register
+from rubix_spark.queries import REGISTRY, at_scale, register
 
 
 # return types passed as DataType objects (not DDL strings) so the UDFs can be defined
@@ -132,7 +132,8 @@ def _median_map(batches):
         "aggregate reads the WRITTEN user-bucketed events layout (the x7 move "
         "applied to aggregation: the ObjectHashAggregate consumes the bucket "
         "partitioning, ZERO Exchange and no partial/final split — plan-pinned in "
-        "tests/test_shuffle_ops.py), past RUBIX_X4_LAYOUT_MIN_ROWS=50k; below, "
+        "tests/test_shuffle_ops.py), past the AT_SCALE x4_udf_grouped_median "
+        "threshold (50k events rows); below, "
         "the raw-scan ablation x4_udf_grouped_median_shuffle holds the sf0.01 "
         "driver slot. Idle min-of-N layout vs shuffle, no inversion at any SF "
         "(r13 session 4): sf0.1 0.092 vs 0.198, sf1 0.268 vs 0.460, sf10 "
@@ -150,13 +151,9 @@ def _median_map(batches):
     ),
 )
 def udf_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from rubix_spark.sources.bucketing import events_user_layout
-    from rubix_spark.sources.stats import parquet_row_count
 
-    min_rows = int(os.environ.get("RUBIX_X4_LAYOUT_MIN_ROWS", 50_000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/events.parquet") < min_rows:
+    if not at_scale("x4_udf_grouped_median", sf_dir):
         return REGISTRY["x4_udf_grouped_median_shuffle"].builder(spark, sf_dir)
     ev = events_user_layout(spark, sf_dir)
     return (

@@ -9,6 +9,7 @@ Every query registers itself into ``REGISTRY`` with:
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -34,6 +35,40 @@ def register(name: str, oracle: Optional[str], doc: str = ""):
         return fn
 
     return wrap
+
+
+# Size dispatch (invariant 16): a size-adaptive builder runs its at-scale body when
+# the footer row count of ``table`` is >= ``rows``, and its small body below. Each
+# threshold sits between the crossover points measured in its builder's doc string.
+# Tests force the at-scale body with ``monkeypatch.setitem(AT_SCALE, name, (table, 0))``.
+AT_SCALE: dict[str, tuple[str, int]] = {
+    "q3_agg_having": ("lineitem", 300_000),  # below: q3_strkey_shuffle
+    "q28_tpch_q1": ("lineitem", 300_000),  # below: q28_strkey_shuffle
+    "q4_star_join": ("lineitem", 300_000),  # below: q4_star_join_shuffle
+    "q30_yoy_delta": ("lineitem", 2_000_000),  # below: q30_yoy_delta_shuffle
+    "q30_brand_dict": ("part", 100_000),  # below: the plain p_brand string probe
+    "q31_agg_live": ("orders", 4_000_000),  # below: q31_strkey_shuffle
+    "x1_dedup_components": ("documents", 2_000),  # below: all-pairs CC
+    "x2_ann_bruteforce": ("embeddings", 100_000),  # below: the interpreted HOF fold
+    "x4_udf_grouped_median": ("events", 50_000),  # below: x4_udf_grouped_median_shuffle
+    "x7_range_join": ("events", 50_000),  # below: x7_range_join_shuffle
+    "x9_pack": ("documents", 2_000),  # below: x9_pack_shuffle
+}
+
+
+def table_rows(sf_dir: str, table: str) -> int:
+    """Footer row count of ``<sf_dir>/<table>.parquet`` (file or part-file
+    directory); a missing table counts 0 rows."""
+    from rubix_spark.sources import stats
+
+    path = f"{sf_dir.rstrip('/')}/{table}.parquet"
+    return stats.parquet_row_count(path) if os.path.exists(path) else 0
+
+
+def at_scale(name: str, sf_dir: str) -> bool:
+    """True when ``AT_SCALE[name]``'s table has reached its row threshold."""
+    table, rows = AT_SCALE[name]
+    return table_rows(sf_dir, table) >= rows
 
 
 # The driver's CORRECTNESS gate checks the FIRST 50 entries of ``queries()`` in dict

@@ -23,7 +23,7 @@ from rubix_spark.fns import (
     money,
     money_sum_fast,
 )
-from rubix_spark.queries import register
+from rubix_spark.queries import REGISTRY, at_scale, register
 
 
 @register(
@@ -320,21 +320,15 @@ def _q31_base_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q31_agg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from rubix_spark.sources.bucketing import bucketed_table
     from rubix_spark.sources.dictionaries import column_dictionary
-    from rubix_spark.sources.stats import parquet_row_count
 
     # size branch (invariant 16, measured r12): below ~2M orders rows the 32
     # one-task-per-bucket layout scan costs more than the single-file string scan
     # (sf0.1 0.554 layout vs 0.452 strkey; sf1 0.604 vs 0.496); at sf10 the layout
     # wins (0.650 vs 0.827 — the string decode + string hash keys are the 15M-row
     # term). Same row-count key as q4/q30.
-    min_rows = int(os.environ.get("RUBIX_Q31_LAYOUT_MIN_ROWS", 4_000_000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/orders.parquet") < min_rows:
-        from rubix_spark.queries import REGISTRY
-
+    if not at_scale("q31_agg_live", sf_dir):
         return REGISTRY["q31_strkey_shuffle"].builder(spark, sf_dir)
 
     orders = bucketed_table(spark, sf_dir, "orders", "o_orderkey")
@@ -681,21 +675,15 @@ def _q28_agg_exprs() -> list:
     ),
 )
 def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from rubix_spark.sources.bucketing import bucketed_table
     from rubix_spark.sources.dictionaries import column_dictionary, dict_decode_expr
-    from rubix_spark.sources.stats import parquet_row_count
 
     # invariant 29 (r12): past the threshold the scan + 6-group aggregate key on
     # the layout's l_rf_sid/l_ls_sid ints; strings decode on the 6-row result.
     # Measured idle min-of-5, no inversion: sf0.1 0.332 vs 0.348, sf1 0.351 vs
     # 0.353 (tie), sf10 0.643 vs 0.818 strkey (0.83x DuckDB, from 1.32x) — the
     # numeric aggregate list dominates, so the string-decode save is the margin.
-    min_rows = int(os.environ.get("RUBIX_Q3_LAYOUT_MIN_ROWS", 300_000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/lineitem.parquet") < min_rows:
-        from rubix_spark.queries import REGISTRY
-
+    if not at_scale("q28_tpch_q1", sf_dir):
         return REGISTRY["q28_strkey_shuffle"].builder(spark, sf_dir)
 
     li = bucketed_table(spark, sf_dir, "lineitem", "l_orderkey").where(
@@ -967,17 +955,10 @@ def _q30_brand_rollup(spark: SparkSession, sf_dir: str, merged: DataFrame,
     (brand_dictionary docstring: −19% at sf30, −2.5/−5% at sf10/sf1). Below the
     threshold the nested dict broadcast build costs more than it saves (~+0.35 s
     at sf0.1's 20k parts, same-session A/B) and the plain string probe wins —
-    RUBIX_Q30_DICT_MIN_PART_ROWS (default 100k) sits between the measured points
+    AT_SCALE["q30_brand_dict"] (100k part rows) sits between the measured points
     (20k loses, 200k wins). bid<->brand is bijective, so lag-over-bid ==
     lag-over-brand."""
-    import os
-
-    from pyspark.sql import Window
-
-    from rubix_spark.sources.stats import parquet_row_count
-
-    min_parts = int(os.environ.get("RUBIX_Q30_DICT_MIN_PART_ROWS", 100_000))
-    use_dict = parquet_row_count(f"{sf_dir.rstrip('/')}/part.parquet") >= min_parts
+    use_dict = at_scale("q30_brand_dict", sf_dir)
     qsum = F.sum(F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")).alias("s")
     if use_dict:
         bdict = brand_dictionary(spark, sf_dir)
@@ -1054,18 +1035,13 @@ def _q30_decline_tail(y: DataFrame, key: str) -> DataFrame:
     ),
 )
 def q30(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from rubix_spark.queries import REGISTRY
     from rubix_spark.sources.bucketing import bucketed_table
-    from rubix_spark.sources.stats import parquet_row_count
 
     # Size-adaptive (round-7, the q4/q5 pattern — invariant 16's two points DISAGREE
     # here): at sf0.1 the broadcast plan over the raw scan wins (0.72 vs 0.99 s idle),
     # at sf1/sf10 the bucketed SMJ wins (0.91 vs 1.54, 2.80 vs 3.59). Same 2M-row key
     # as q4.
-    min_rows = int(os.environ.get("RUBIX_Q30_LAYOUT_MIN_ROWS", 2_000_000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/lineitem.parquet") < min_rows:
+    if not at_scale("q30_yoy_delta", sf_dir):
         return REGISTRY["q30_yoy_delta_shuffle"].builder(spark, sf_dir)
 
     # Round-10: the 2-6M-entry part probe is GONE — the denormalized lineitem

@@ -38,7 +38,7 @@ from rubix_spark.fns import (
     money_sum_fast,
     round_det,
 )
-from rubix_spark.queries import register
+from rubix_spark.queries import REGISTRY, at_scale, register, table_rows
 
 
 # ---------------------------------------------------------------------------
@@ -155,8 +155,9 @@ def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Partial (map-side) + final hash agg; 6 groups, so the shuffle is tiny "
         "regardless of SF. Size-adaptive (invariant 29, r12): past "
-        "RUBIX_Q3_LAYOUT_MIN_ROWS the aggregate rides the denormalized lineitem "
-        "layout's l_rf_sid/l_ls_sid dictionary ids — two INTS hash-key the scan "
+        "the AT_SCALE q3_agg_having threshold the aggregate rides the "
+        "denormalized lineitem layout's l_rf_sid/l_ls_sid dictionary ids — two "
+        "INTS hash-key the scan "
         "and the returnflag/linestatus STRINGS are never decoded from parquet; "
         "the <=9-row aggregate decodes ids via the memoized dictionaries "
         "(dict_decode_expr). Measured idle min-of-5, no inversion (invariant 16): "
@@ -167,17 +168,11 @@ def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from rubix_spark.fns import money_sum_fast
     from rubix_spark.sources.bucketing import bucketed_table
     from rubix_spark.sources.dictionaries import column_dictionary, dict_decode_expr
-    from rubix_spark.sources.stats import parquet_row_count
 
-    min_rows = int(os.environ.get("RUBIX_Q3_LAYOUT_MIN_ROWS", 300_000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/lineitem.parquet") < min_rows:
-        from rubix_spark.queries import REGISTRY
-
+    if not at_scale("q3_agg_having", sf_dir):
         return REGISTRY["q3_strkey_shuffle"].builder(spark, sf_dir)
 
     li = bucketed_table(spark, sf_dir, "lineitem", "l_orderkey")
@@ -239,15 +234,10 @@ _Q4_ORACLE = f"""
     ),
 )
 def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from rubix_spark.queries import REGISTRY
     from rubix_spark.sources.bucketing import bucketed_table
     from rubix_spark.sources.dictionaries import region_nationkeys
-    from rubix_spark.sources.stats import parquet_row_count
 
-    min_rows = int(os.environ.get("RUBIX_Q4_LAYOUT_MIN_ROWS", 300_000))
-    if parquet_row_count(f"{sf_dir.rstrip('/')}/lineitem.parquet") < min_rows:
+    if not at_scale("q4_star_join", sf_dir):
         return REGISTRY["q4_star_join_shuffle"].builder(spark, sf_dir)
 
     asia = region_nationkeys(spark, sf_dir, ("ASIA",))
@@ -372,15 +362,8 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regenerated sf10 fixture (heavily compressible amplified text: 16 MB on disk,
     # 1.6M rows, ~6e9 pairs) fall into the O(pairs) branch — 226 s. Row counts are
     # the quantity the cost actually scales with; bytes are a compression artifact.
-    from rubix_spark.sources.stats import parquet_row_count
-
-    def _rows(name):
-        import os
-
-        p = f"{sf_dir.rstrip('/')}/{name}.parquet"
-        return parquet_row_count(p) if os.path.exists(p) else 0
-
-    if _rows("supplier") * _rows("customer") < 1e8:  # ~4e6 same-nation pairs over 25 nations
+    # ~4e6 same-nation pairs over 25 nations
+    if table_rows(sf_dir, "supplier") * table_rows(sf_dir, "customer") < 1e8:
         return (
             F.broadcast(t["supplier"])
             .join(t["customer"], F.col("s_nationkey") == F.col("c_nationkey"))

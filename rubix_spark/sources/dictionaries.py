@@ -23,7 +23,7 @@ def brand_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule (q4/q29/q19) applied to q30's 2-6M-entry part probe: the INT bid rides
     through the fact-stream probe and the group key; the brand STRING attaches on
     the ~175-row aggregate. Measured −19% on q30 at sf30 (where the probe is 5.1 s
-    of 7.9 s — tools/proto_q30_dict.py), −2.5%/−5% at sf10/sf1, rows identical.
+    of 7.9 s — docs/PROBES.md proto_q30_dict), −2.5%/−5% at sf10/sf1, rows identical.
 
     The distinct-brand list is collected ONCE per (session, sf_dir) and memoized
     (bounded ~25-row collect — the catalog.table / q2 stat-store contract:

@@ -25,6 +25,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rubix_spark.cache import footer
 from rubix_spark.fns import duck_sum_fast, money_from_units
 from rubix_spark.queries import register
 
@@ -42,23 +43,11 @@ _EVENTS_SCHEMA_MICROS = (
 
 def _events_ts_is_nanos(sf_dir: str) -> bool:
     """True when the fixture stores ts as TIMESTAMP(NANOS) (driver fixtures have shipped
-    both ns and µs over time; one footer read per directory, memoized)."""
-    hit = _TS_UNIT_MEMO.get(sf_dir)
-    if hit is None:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        path = os.path.join(sf_dir.rstrip("/"), "events.parquet")
-        if os.path.isdir(path):  # generated fixtures are directories of part-files
-            path = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
-        t = pq.ParquetFile(path).schema_arrow
-        hit = getattr(t.field("ts").type, "unit", None) == "ns"
-        _TS_UNIT_MEMO[sf_dir] = hit
-    return hit
-
-
-_TS_UNIT_MEMO: dict[str, bool] = {}
+    both ns and µs over time). The first file's footer comes from the footer cache,
+    keyed by file version, so a rewritten fixture is re-read."""
+    path = os.path.join(sf_dir.rstrip("/"), "events.parquet")
+    schema = footer.file_meta(footer.parquet_files(path)[0]).schema
+    return getattr(schema.field("ts").type, "unit", None) == "ns"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,6 +267,10 @@ def s2_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# s6 sweeps a prior run's checkpoint/sink dir only once it is this old (ADVICE r6)
+_SWEEP_GRACE_S = 600
+
+
 @register(
     "s6_stream_durable_sink",
     f"""
@@ -319,12 +312,11 @@ def s6_stream_durable_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recent run) is never deleted underneath it.
     import time as _time
 
-    grace_s = int(os.environ.get("RUBIX_STREAM_SWEEP_GRACE_S", 600))
     root = os.path.join(tempfile.gettempdir(), "rubix_spark_stream")
     now = _time.time()
     for stale in glob.glob(os.path.join(root, "*")):
         try:
-            if now - os.path.getmtime(stale) < grace_s:
+            if now - os.path.getmtime(stale) < _SWEEP_GRACE_S:
                 continue
         except OSError:
             continue

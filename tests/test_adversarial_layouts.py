@@ -67,21 +67,22 @@ def _assert_parity(spark, name: str, sf_dir: str, tables) -> None:
 # ---------------------------------------------------------------------------
 # Relational layout branches (bucketed warehouse + denorm + dictionary ids)
 # ---------------------------------------------------------------------------
-@pytest.mark.parametrize("name,env", [
-    ("q3_agg_having", {"RUBIX_Q3_LAYOUT_MIN_ROWS": "0"}),
-    ("q28_tpch_q1", {"RUBIX_Q3_LAYOUT_MIN_ROWS": "0"}),
-    ("q4_star_join", {"RUBIX_Q4_LAYOUT_MIN_ROWS": "0"}),
-    ("q30_yoy_delta", {"RUBIX_Q30_LAYOUT_MIN_ROWS": "0"}),
+# (row, AT_SCALE branches forced); q31_grouping_sets reads the materialized rollup at
+# every size, so forcing q31_agg_live leaves it unchanged; q31_agg_live runs that branch.
+@pytest.mark.parametrize("name,branches", [
+    ("q3_agg_having", ("q3_agg_having",)),
+    ("q28_tpch_q1", ("q28_tpch_q1",)),
+    ("q4_star_join", ("q4_star_join",)),
+    ("q30_yoy_delta", ("q30_yoy_delta",)),
     # dictionary-probe variant of the q30 tail (brand rides as an int id)
-    ("q30_yoy_delta", {"RUBIX_Q30_LAYOUT_MIN_ROWS": "0",
-                       "RUBIX_Q30_DICT_MIN_PART_ROWS": "0"}),
-    ("q31_grouping_sets", {"RUBIX_Q31_LAYOUT_MIN_ROWS": "0"}),
+    ("q30_yoy_delta", ("q30_yoy_delta", "q30_brand_dict")),
+    ("q31_grouping_sets", ("q31_agg_live",)),
+    ("q31_agg_live", ("q31_agg_live",)),
 ])
 def test_relational_layout_branch_on_adversarial_warehouse(
-    spark, adversarial_wh_dir, monkeypatch, name, env
+    spark, adversarial_wh_dir, force_at_scale, name, branches
 ):
-    for k, v in env.items():
-        monkeypatch.setenv(k, v)
+    force_at_scale(*branches)
     _assert_parity(spark, name, adversarial_wh_dir, _REL)
 
 
@@ -103,24 +104,20 @@ def test_q5_decomposition_branch_on_adversarial_warehouse(
 # Events layout branch (user-bucketed (user_id, us)-sorted written layout)
 # ---------------------------------------------------------------------------
 def test_x7_range_join_layout_on_adversarial_events(
-    spark, adversarial_events_dir, monkeypatch
+    spark, adversarial_events_dir, force_at_scale
 ):
-    monkeypatch.setenv("RUBIX_X7_LAYOUT_MIN_ROWS", "0")
+    force_at_scale("x7_range_join")
     _assert_parity(spark, "x7_range_join", adversarial_events_dir, ("events",))
 
 
 # ---------------------------------------------------------------------------
 # Documents layout branches (ntok/cumsum layout; hub-contraction clustering)
 # ---------------------------------------------------------------------------
-@pytest.mark.parametrize("name,env", [
-    ("x9_pack", {"RUBIX_X9PACK_LAYOUT_MIN_ROWS": "0"}),
-    ("x1_dedup_components", {"RUBIX_CC_HUB_MIN_ROWS": "0"}),
-])
+@pytest.mark.parametrize("name", ["x9_pack", "x1_dedup_components"])
 def test_docs_layout_branch_on_adversarial_docs(
-    spark, adversarial_docs_dir, monkeypatch, name, env
+    spark, adversarial_docs_dir, force_at_scale, name
 ):
-    for k, v in env.items():
-        monkeypatch.setenv(k, v)
+    force_at_scale(name)
     _assert_parity(spark, name, adversarial_docs_dir, ("documents",))
 
 
@@ -131,17 +128,17 @@ def test_docs_layout_branch_on_adversarial_docs(
 # oracle yields NULL — the NULLIF guard in ops/similarity.cosine is pinned here.
 # ---------------------------------------------------------------------------
 def test_ann_bruteforce_kernel_on_adversarial_embeddings(
-    spark, adversarial_emb_dir, monkeypatch
+    spark, adversarial_emb_dir, force_at_scale
 ):
     """The numpy kernel branch vs the SQL HOF oracle on zero-norm / duplicate /
     colinear vectors (test_ann pins NULL/ragged degradation; this pins the
     well-formed-but-degenerate rows cross-engine)."""
-    monkeypatch.setenv("RUBIX_X2_NP_MIN_ROWS", "0")
+    force_at_scale("x2_ann_bruteforce")
     _assert_parity(spark, "x2_ann_bruteforce", adversarial_emb_dir, ("embeddings",))
 
 
 @pytest.mark.parametrize("name", [
-    "x2_ann_bruteforce",        # HOF fold branch (no env: fixture < 100k rows)
+    "x2_ann_bruteforce",        # HOF fold branch (unforced: fixture < 100k rows)
     "x2_ann_ivf",
     "x2_ann_lsh",
     "x2_ann_lsh_multiprobe",
@@ -287,22 +284,22 @@ def test_priority_window_matches_oracle_on_directory_fixture(
     assert s == o, f"{name}: spark={len(s)} rows, oracle={len(o)} rows"
 
 
-@pytest.mark.parametrize("name,env", [
+@pytest.mark.parametrize("name,branch", [
     # the branch deciders and layout ingests all read footers through the isdir path
-    ("q3_agg_having", {"RUBIX_Q3_LAYOUT_MIN_ROWS": "0"}),
-    ("q4_star_join", {"RUBIX_Q4_LAYOUT_MIN_ROWS": "0"}),
-    ("q30_yoy_delta", {"RUBIX_Q30_LAYOUT_MIN_ROWS": "0"}),
-    ("q31_grouping_sets", {"RUBIX_Q31_LAYOUT_MIN_ROWS": "0"}),
-    ("x7_range_join", {"RUBIX_X7_LAYOUT_MIN_ROWS": "0"}),
-    ("x4_udf_grouped_median", {"RUBIX_X4_LAYOUT_MIN_ROWS": "0"}),
-    ("x9_pack", {"RUBIX_X9PACK_LAYOUT_MIN_ROWS": "0"}),
-    ("x2_ann_bruteforce", {"RUBIX_X2_NP_MIN_ROWS": "0"}),
+    ("q3_agg_having", "q3_agg_having"),
+    ("q4_star_join", "q4_star_join"),
+    ("q30_yoy_delta", "q30_yoy_delta"),
+    ("q31_grouping_sets", "q31_agg_live"),
+    ("q31_agg_live", "q31_agg_live"),
+    ("x7_range_join", "x7_range_join"),
+    ("x4_udf_grouped_median", "x4_udf_grouped_median"),
+    ("x9_pack", "x9_pack"),
+    ("x2_ann_bruteforce", "x2_ann_bruteforce"),
 ])
 def test_layout_branch_matches_oracle_on_directory_fixture(
-    spark, adversarial_dirlayout_dir, monkeypatch, name, env
+    spark, adversarial_dirlayout_dir, force_at_scale, name, branch
 ):
-    for k, v in env.items():
-        monkeypatch.setenv(k, v)
+    force_at_scale(branch)
     q = REG[name]
     o = _duck_rows_dirs(q.oracle, adversarial_dirlayout_dir, _ALL_TABLES)
     s = _canon(tuple(r) for r in q.builder(spark, adversarial_dirlayout_dir).collect())

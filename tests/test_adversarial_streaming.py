@@ -42,6 +42,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from rubix_spark.ops import dedup
 from rubix_spark.queries import load_all
 from rubix_spark.streaming.events import (
     _EVENTS_SCHEMA_MICROS,
@@ -656,7 +657,7 @@ def test_s7_incremental_dedup_multibatch_matches_oracle(spark, tmp_path, monkeyp
     from rubix_spark.ops.dedup import INCR_SPLIT
 
     monkeypatch.setenv("RUBIX_WAREHOUSE_DIR", str(tmp_path / "wh"))
-    monkeypatch.setenv("RUBIX_S7_MAX_FILES_PER_TRIGGER", "1")
+    monkeypatch.setattr(dedup, "S7_MAX_FILES_PER_TRIGGER", 1)
 
     rng = random.Random(79)
     vocab = ["the", "cat", "sat", "mat", "dog", "ran", "far", "ünïcode", "42", "x"]

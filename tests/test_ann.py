@@ -18,7 +18,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from rubix_spark.queries import load_all
+from rubix_spark.queries import AT_SCALE, load_all
 from tests.conftest import SF_SMOKE, SF_T2
 
 REG = load_all()
@@ -88,7 +88,7 @@ def test_ivf_codebook_missing_ids_is_explicit(spark):
         _ivf_codebook(emb, (0,))
 
 
-def test_np_exact_branch_is_bit_identical(spark, monkeypatch):
+def test_np_exact_branch_is_bit_identical(spark, force_at_scale):
     """The size-adaptive kernel (r12): dimension-major accumulation must reproduce
     the interpreted HOF fold bit-for-bit — RAW cosines compared with ==, every row,
     plus forced-branch top-k equality so the driver oracle covers the kernel."""
@@ -114,7 +114,7 @@ def test_np_exact_branch_is_bit_identical(spark, monkeypatch):
 
     # forced branch: the kernel plan must return the identical top-k
     base = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce"].builder(spark, SF_T2).collect()]
-    monkeypatch.setenv("RUBIX_X2_NP_MIN_ROWS", "0")
+    force_at_scale("x2_ann_bruteforce")
     forced = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce"].builder(spark, SF_T2).collect()]
     assert base == forced
 
@@ -171,7 +171,8 @@ def test_np_exact_branch_degrades_on_bad_rows_like_the_fold(spark, tmp_path, mon
         str(d / "embeddings.parquet"),
     )
     hof = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce"].builder(spark, str(d)).collect()]
-    monkeypatch.setenv("RUBIX_X2_NP_MIN_ROWS", "0")
+    fold = AT_SCALE["x2_ann_bruteforce"]
+    monkeypatch.setitem(AT_SCALE, "x2_ann_bruteforce", (fold[0], 0))
     forced = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce"].builder(spark, str(d)).collect()]
     assert forced == hof
     assert all(s is not None for _, s in forced)  # 26 clean rows > k=10
@@ -188,7 +189,7 @@ def test_np_exact_branch_degrades_on_bad_rows_like_the_fold(spark, tmp_path, mon
         str(d2 / "embeddings.parquet"),
     )
     forced2 = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce"].builder(spark, str(d2)).collect()]
-    monkeypatch.delenv("RUBIX_X2_NP_MIN_ROWS")
+    monkeypatch.setitem(AT_SCALE, "x2_ann_bruteforce", fold)
     hof2 = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce"].builder(spark, str(d2)).collect()]
     assert forced2 == hof2 and len(forced2) == 10
     assert sum(1 for _, s in forced2 if s is None) == 4  # 6 clean rows, 4 NULL fill

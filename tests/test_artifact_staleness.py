@@ -24,12 +24,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # docs/PLANS.md is an artifact too (r10 verdict #9): it is the document a reviewer
 # reads first, and it went stale for two rounds while only the bench JSONs were
 # guarded. `python tools/dump_plans.py` alongside every regen.
-# BENCH_SF30/DUCK_SF30 joined in r12 (r11 verdict #7): they went stale unnoticed in
-# r9/r10 while the sf1/sf10 artifacts were guarded — a splice block (re-time of just
-# the touched rows) re-anchors them without a full sf30 regen.
-ARTIFACTS = ("BENCH_SF1.json", "BENCH_SF10.json", "DUCK_SF1.json", "DUCK_SF10.json",
-             "BENCH_SF30.json", "DUCK_SF30.json", "BENCH_SF60.json", "DUCK_SF60.json",
-             "docs/PLANS.md")
+# Only the rungs a 4-core, ~20 GB-disk host regenerates per change are guarded: the
+# paired sf1 campaign and the plans. BENCH/DUCK SF10 (regenerated once per round)
+# and SF30/SF60 (the sf60 campaign peaks near 58 GB of scratch) stay in the repo as
+# historical records.
+ARTIFACTS = ("BENCH_SF1.json", "DUCK_SF1.json", "docs/PLANS.md")
 # the source whose changes invalidate measured numbers: query builders + operators
 MEASURED_DIRS = ("rubix_spark/queries", "rubix_spark/ops", "rubix_spark/streaming")
 MEASURED_FILES = ("rubix_spark/fns.py", "rubix_spark/catalog.py",
@@ -66,10 +65,10 @@ def _priority_modules() -> set[str]:
 def test_scale_artifacts_not_older_than_measured_source():
     present = [a for a in ARTIFACTS if os.path.exists(os.path.join(REPO, a))]
     if not present:
-        warnings.warn("no scale artifacts present (BENCH_SF1/SF10, DUCK_SF1/SF10)")
+        warnings.warn("no scale artifacts present (BENCH_SF1, DUCK_SF1, docs/PLANS.md)")
         return
     try:
-        # the artifact generation commit: the OLDEST last-touch among the four files
+        # the artifact generation commit: the OLDEST last-touch among the files
         # (they are regenerated together; a partial refresh shows up as stale too)
         art_commits = [_git("log", "-1", "--format=%H", "--", a) for a in present]
         changed: set[str] = set()
@@ -89,10 +88,10 @@ def test_scale_artifacts_not_older_than_measured_source():
         return
     window_stale = sorted(set(stale) & _priority_modules())
     msg = (
-        "scale artifacts are OLDER than measured source — regenerate BENCH_SF1/SF10 "
-        "+ DUCK_SF1/SF10 (tools/gen_sf.py fixtures, bench.py, tools/duck_bench.py "
-        f"--isolate) AND docs/PLANS.md (tools/dump_plans.py) in/after the offending "
-        f"commit. Stale: {stale}"
+        "scale artifacts are OLDER than measured source — rerun the sf1 campaign "
+        "(`bash tools/scale_campaign.sh sf1`: BENCH_SF1 + DUCK_SF1) AND regenerate "
+        "docs/PLANS.md (tools/dump_plans.py, from a clean tree) in/after the "
+        f"offending commit. Stale: {stale}"
     )
     # invariant 20, hardened (r7 verdict #1): PRIORITY-window source demands artifacts
     assert not window_stale, msg + f" — PRIORITY-window modules among them: {window_stale}"

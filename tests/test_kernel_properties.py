@@ -18,6 +18,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from rubix_spark.ops import dedup
 from rubix_spark.queries import load_all
 
 REG = load_all()
@@ -144,7 +145,7 @@ def test_sem_tile_decomposition_matches_direct_kernel(spark, adversarial_emb_dir
     direct per-cluster kernel keeps, including exact-dup / colinear / zero rows."""
     direct = {(r.vec_id, r.cid, r.kept) for r in
               REG["x1_semantic_dedup_np"].builder(spark, adversarial_emb_dir).collect()}
-    monkeypatch.setenv("RUBIX_SEM_TILE_ROWS", "8")  # 600/16/8 -> nb >= 5
+    monkeypatch.setattr(dedup, "SEM_TILE_ROWS", 8)  # 600/16/8 -> nb >= 5
     tiled = {(r.vec_id, r.cid, r.kept) for r in
              REG["x1_semantic_dedup_np"].builder(spark, adversarial_emb_dir).collect()}
     assert direct == tiled

@@ -6,7 +6,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from rubix_spark.ops.maintenance import compact, parquet_files
+from rubix_spark.cache.footer import parquet_files
+from rubix_spark.ops.maintenance import compact
 
 
 def test_compact_rewrites_fragmented_table(spark, tmp_path):
@@ -30,6 +31,30 @@ def test_compact_rewrites_fragmented_table(spark, tmp_path):
     # no leftover temp/old dirs
     parent = os.path.dirname(path)
     assert not [d for d in os.listdir(parent) if "_compact_" in d or "_old_" in d]
+
+
+def test_compact_splits_a_single_file_table(spark, tmp_path):
+    """A table stored as ONE parquet file is sized from that file: a small target
+    splits it into several part files with the same rows."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "single.parquet")
+    n = 100_000
+    pq.write_table(pa.table({
+        "id": pa.array(range(n), pa.int64()),
+        "v": [hashlib.md5(str(i).encode()).hexdigest() for i in range(n)],
+    }), path)
+    assert os.path.getsize(path) > 2 * 1024 * 1024
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    stats = compact(spark, path, target_file_mb=1)
+    assert stats["files_before"] == 1 and stats["files_after"] > 1, stats
+    assert stats["rows"] == n
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert os.listdir(tmp_path) == ["single.parquet"]  # no temp file or backup left
 
 
 def test_zorder_clusters_both_dimensions(spark):

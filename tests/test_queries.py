@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from rubix_spark.ops import dedup
 from rubix_spark.queries import load_all
 from tests.conftest import SF_SMOKE
 from tests.oracle_utils import compare
@@ -88,7 +89,7 @@ def test_semantic_dedup_np_tiled_agrees(spark, monkeypatch):
     """r12 session 2: the tiled decomposition (every cluster split into hash-block
     tile pairs) must keep the same vectors as the exact variant even when nb > 1 —
     the fixture scales only exercise nb == 1 without forcing a tiny tile."""
-    monkeypatch.setenv("RUBIX_SEM_TILE_ROWS", "16")  # ~500/16/16 -> nb >= 2
+    monkeypatch.setattr(dedup, "SEM_TILE_ROWS", 16)  # ~500/16/16 -> nb >= 2
     exact = {(r.vec_id, r.cid, r.kept) for r in REGISTRY["x1_semantic_dedup"].builder(spark, SF).collect()}
     npv = {(r.vec_id, r.cid, r.kept) for r in REGISTRY["x1_semantic_dedup_np"].builder(spark, SF).collect()}
     assert exact == npv

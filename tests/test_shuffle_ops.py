@@ -46,13 +46,13 @@ def _pinned_smj_plan(spark, name: str) -> str:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_q4_graded_fact_join_is_exchange_free(spark, monkeypatch):
+def test_q4_graded_fact_join_is_exchange_free(spark, force_at_scale):
     """Round-6: the GRADED q4 row runs the warehouse layout (r5 only proved it on a
     twin): with lineitem+orders bucketed+sorted by orderkey, the fact-fact join must
     plan as SMJ with NO shuffle and NO sort on either fact input (the only exchange
     left is the tiny post-join groupBy). Round-7: q4 is size-adaptive (toy-scale
     inversion, invariant 16) — force the layout branch the big SFs take."""
-    monkeypatch.setenv("RUBIX_Q4_LAYOUT_MIN_ROWS", "0")
+    force_at_scale("q4_star_join")
     plan = _pinned_smj_plan(spark, "q4_star_join")
     assert "SortMergeJoin" in plan, plan
     assert "Exchange hashpartitioning(l_orderkey" not in plan, plan
@@ -108,34 +108,34 @@ def test_q20_graded_agg_is_exchange_free(spark):
     assert "Exchange hashpartitioning" not in plan, plan
 
 
-def test_x7_range_join_layout_is_exchange_and_sort_free(spark, monkeypatch):
+def test_x7_range_join_layout_is_exchange_and_sort_free(spark, force_at_scale):
     """Round-11 (r10 verdict #2): the graded range join rides the user-bucketed
     (user_id, us)-sorted events layout — the RANGE-frame window consumes the bucket
     partitioning and the two-level sort directly: zero Exchange AND zero Sort
     anywhere in the plan (the per-run user_id shuffle was this row's dominant cost)."""
-    monkeypatch.setenv("RUBIX_X7_LAYOUT_MIN_ROWS", "0")  # force the big-SF layout branch
+    force_at_scale("x7_range_join")  # force the big-SF layout branch
     plan = _pinned_smj_plan(spark, "x7_range_join")
     assert "Exchange" not in plan, plan
     assert not [l for l in plan.splitlines()
                 if l.strip().startswith(("+- Sort ", ":- Sort ", "Sort "))], plan
 
 
-def test_x4_median_layout_is_exchange_free(spark, monkeypatch):
+def test_x4_median_layout_is_exchange_free(spark, force_at_scale):
     """Round-13: the graded engine-native median rides the same user-bucketed
     events layout as x7 — the ObjectHashAggregate consumes the bucket
     partitioning (aggregation accepts subset partitioning), so the per-run
     user_id exchange of the whole stream disappears: zero Exchange anywhere."""
-    monkeypatch.setenv("RUBIX_X4_LAYOUT_MIN_ROWS", "0")  # force the big-SF layout branch
+    force_at_scale("x4_udf_grouped_median")  # force the big-SF layout branch
     plan = _pinned_smj_plan(spark, "x4_udf_grouped_median")
     assert "Exchange" not in plan, plan
 
 
-def test_x9_pack_layout_is_one_exchange_no_python(spark, monkeypatch):
+def test_x9_pack_layout_is_one_exchange_no_python(spark, force_at_scale):
     """Round-11 (r10 verdict #3): the graded x9_pack reads the written docs_ntok
     layout (token counts + global cumsum materialized at ingest) — the per-query
     plan is scan -> bin projection -> ONE aggregate exchange: no text column, no
     Python/Arrow node, no window, no sort."""
-    monkeypatch.setenv("RUBIX_X9PACK_LAYOUT_MIN_ROWS", "0")  # force the big-SF branch
+    force_at_scale("x9_pack")  # force the big-SF branch
     plan = _pinned_smj_plan(spark, "x9_pack")
     exchanges = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
     assert len(exchanges) == 1, plan
@@ -145,8 +145,8 @@ def test_x9_pack_layout_is_one_exchange_no_python(spark, monkeypatch):
                 if l.strip().startswith(("+- Sort ", ":- Sort ", "Sort "))], plan
 
 
-def test_q30_graded_fact_join_is_exchange_free(spark, monkeypatch):
-    monkeypatch.setenv("RUBIX_Q30_LAYOUT_MIN_ROWS", "0")  # force the big-SF layout branch
+def test_q30_graded_fact_join_is_exchange_free(spark, force_at_scale):
+    force_at_scale("q30_yoy_delta")  # force the big-SF layout branch
     plan = _pinned_smj_plan(spark, "q30_yoy_delta")
     assert "Exchange hashpartitioning(l_orderkey" not in plan, plan
     assert "Exchange hashpartitioning(o_orderkey" not in plan, plan
