@@ -8,8 +8,9 @@ Hadoop FileSystem API (``rubix-core/.../CachingFileSystem.java``,
   bitmap metadata, A12-A17) in :mod:`rubix_spark.cache.manifest`;
 - a **CacheManager** (warm / read-through / staleness / LRU eviction / metrics — A2, A5,
   A6, A10, A15, A16, A18-A19, A26, A27) in :mod:`rubix_spark.cache.manager`, which
-  materializes hot parquet onto local disk with a distributed ``spark.read → write`` copy
-  and rewrites reads to the local copy.
+  materializes hot parquet onto local disk (a byte copy of a file that fits one 16 MiB
+  part, a coalescing ``spark.read → write`` job for directories and larger files,
+  in-process row-group fetches) and rewrites reads to the local copy.
 
 Round-4 update — both former design-outs now have executable analogs:
 - cross-NODE read chains (NonLocalReadRequestChain, A8/A9): the locality shim

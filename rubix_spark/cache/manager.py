@@ -7,11 +7,15 @@ Reference parity map (operator ids from SURVEY.md §2.A):
                      TTL, staleness, row-group coverage, counters, and A5's corruption
                      fallback (local failure → invalidate + remote read,
                      ``CachedReadRequestChain.java:204-223``)
-- ``warm()``       — A6/A10/A18-A19 read-through + async warm-up: a *distributed*
-                     ``spark.read.parquet(remote).write.parquet(local)`` copy (every
-                     executor copies its split — the Spark analog of the 10-thread
-                     remote-fetch pool, ``FileDownloader.java:194-239``), then a
-                     generation-checked manifest commit (A13, ``_commit``)
+- ``warm()``       — A6/A10/A18 read-through + async warm-up: a file that fits one
+                     ``PART_BYTES`` output part is copied byte for byte from one open
+                     handle, the remote's bytes as they are (``RemoteReadRequestChain
+                     .java:83-157``); a directory or a larger file is coalesced into
+                     ~16 MiB parts by a Spark job; then a generation-checked manifest
+                     commit (A13, ``_commit``)
+- row-group fetch  — A4/A19: collated runs fetched in-process on a pool of at most
+                     ``FETCH_THREADS`` threads, the 10-thread remote-fetch pool of
+                     ``FileDownloader.java:194-239``
 - staleness        — A16: remote mtime/size vs manifest ⇒ invalidate + new generation
                      (``BookKeeper.java:295-305, 774-777``)
 - generations      — A17: monotonic per-path counter; local dirs carry ``_g<N>`` suffixes
@@ -24,7 +28,9 @@ Reference parity map (operator ids from SURVEY.md §2.A):
 - hit DataFrames   — ``read()`` and row-group hits reuse the planned DataFrame of the
                      entry's generation (one generation per manifest key); a
                      read-through miss leaves its DataFrame there for the next hit, and
-                     the local files are checked before a memoized DataFrame is served
+                     the local files are checked before a memoized DataFrame is served.
+                     The Spark schema is kept per manifest key and remote version, so
+                     only the first copy of a version pays Spark's schema inference
 - ``evict_to_budget()`` — A15: LRU by last_access down to ``budget_bytes``
                      (weigher/maximumWeight analog, ``BookKeeper.java:629-686``); like
                      the one removal listener of ``BookKeeper.java:723-746``, every
@@ -50,14 +56,28 @@ import re
 import shutil
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Iterable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from rubix_spark.cache import footer
 from rubix_spark.cache.manifest import CACHED, Entry, Manifest
 
 T = TypeVar("T")
+
+# One output part per this many remote bytes (see ``_materialize``). A file that fits
+# one part is copied byte for byte: a Spark job only pays where it changes the layout.
+PART_BYTES = 16 * 1024 * 1024
+# Row-group fetch threads per warm, FileDownloader's pool size (FileDownloader.java:194-239).
+FETCH_THREADS = 10
+
+# The Spark schema of each manifest key's copies at one remote version:
+# {key: ((mtime, remote size), schema)}. One version per key, as in footer.py, and shared
+# by every manager in the process, so only the first copy of a version pays the schema
+# inference job of ``spark.read.parquet``.
+_SCHEMAS: dict[str, tuple[tuple[float, int], StructType]] = {}
 
 
 class CacheReadError(RuntimeError):
@@ -83,6 +103,11 @@ def _mtime_size(path: str) -> tuple[float, int]:
                 mt = max(mt, s.st_mtime)
         return mt, total
     return st.st_mtime, st.st_size
+
+
+def _version(entry: Entry) -> tuple[float, int]:
+    """The remote version ``entry`` copied: (mtime, remote size)."""
+    return entry.last_modified, entry.remote_size if entry.remote_size is not None else entry.size_bytes
 
 
 class CacheManager:
@@ -189,15 +214,34 @@ class CacheManager:
                 self._df_memo[entry.remote_path] = (entry.generation, dfs)
             df = dfs.get(groups)
         if df is None:
-            df = self.spark.read.parquet(*paths)
+            df = self._scan(entry, paths)
             with self._lock:
                 dfs[groups] = df
         return df
 
+    def _scan(self, entry: Entry, paths: list[str]) -> DataFrame:
+        """``spark.read.parquet(*paths)`` over a copy of ``entry``'s remote version. The
+        first copy of a version pays Spark's schema inference job; later copies reuse
+        its schema once every part file's footer has been read, so a garbage copy still
+        fails here, inside the caller's corruption fallback, and not in its action."""
+        version = _version(entry)
+        known = _SCHEMAS.get(entry.remote_path)
+        if known is not None and known[0] == version:
+            files = [f for p in paths for f in footer.parquet_files(p)]
+            if not files:
+                raise FileNotFoundError(paths[0])
+            for f in files:
+                footer.file_meta(f)
+            return self.spark.read.schema(known[1]).parquet(*paths)
+        df = self.spark.read.parquet(*paths)
+        _SCHEMAS[entry.remote_path] = (version, df.schema)
+        return df
+
     def _serve_warmed(self, key: str, local: str, groups: tuple[int, ...] | None, paths: list[str]) -> DataFrame | None:
-        """The DataFrame over a copy this manager just warmed, memoized for the next hit
-        when the copy is still ``key``'s live generation. None when the budget eviction
-        right after the warm already removed it (tiny budgets): the caller serves remote."""
+        """The DataFrame over a copy this manager just warmed or fetched from a peer,
+        memoized for the next hit when the copy is still ``key``'s live generation. None
+        when the budget eviction right after the commit already removed it (tiny
+        budgets): the caller serves remote."""
         entry = self.manifest.get(key)
         if entry is None:
             return None
@@ -214,20 +258,20 @@ class CacheManager:
     def warm(self, remote_path: str) -> str | None:
         """Materialize a remote parquet file/dir into the local cache; returns local path.
 
-        The copy itself is a distributed Spark job (each executor writes its own split),
-        mirroring the parallel FileDownloader (A19). Returns None when the path is gated
-        out by skip patterns or dummy mode.
+        The copy is made by ``_materialize``: a byte copy for a file that fits one
+        output part, a coalescing Spark job otherwise. Returns None when the path is
+        gated out by skip patterns or dummy mode.
         """
         if not self.cacheable(remote_path) or self.dummy:
             return None
         mtime, size = _mtime_size(remote_path)
         gen = self.manifest.next_generation(remote_path)
         local = self._local_dir(remote_path, gen)
-        # one round trip for the copy job's open; the per-split GETs run in parallel
-        # executor tasks, so wall-clock pays ~one more trip, not one per split
+        # two round trips with a session: the open, then the data GETs (a multi-part
+        # copy's GETs run in parallel tasks, so wall-clock pays ~one trip for them all)
         self._remote_penalty(2 if self.spark is not None else 1)
         try:
-            self._materialize(remote_path, local, size)
+            mtime, size = self._materialize(remote_path, local, mtime, size)
         except BaseException:
             # a failed warm (transient remote error, torn read under a concurrent
             # rewrite) must not leak its partial dir: it is in no manifest entry, so
@@ -253,42 +297,44 @@ class CacheManager:
         self.evict_to_budget()
         return True
 
-    def _materialize(self, remote_path: str, local: str, size: int) -> None:
-        if self.spark is not None:
-            # one output file per ~16 MiB of remote data. Two measured failure modes
-            # bound this from both sides: 32 tiny part-files for a small table make the
-            # HIT path as slow as the remote read (r2: warm == cold at sf0.1 before
-            # coalescing), and ONE part-file for a 124 MB table makes every warm scan a
-            # single task (r4 at sf1: the cached star join ran 16.7 s warm because the
-            # fact scan had zero parallelism — Spark splits files by byte range, but a
-            # sub-128MiB file is always one split). 16 MiB keeps small tables at one
-            # file and gives an 8-way scan per 128 MiB; on a cluster it also spreads the
-            # copy across executors.
-            n_parts = max(1, -(-size // (16 * 1024 * 1024)))
-            (
-                self.spark.read.parquet(remote_path)
-                .coalesce(n_parts)
-                .write.mode("overwrite")
-                .parquet(local)
-            )
-        else:
-            # sessionless mode (the rubix_cache DataSource planner runs in a python
-            # worker with no SparkSession): whole-file copy instead of a distributed job
+    def _materialize(self, remote_path: str, local: str, mtime: float, size: int) -> tuple[float, int]:
+        """Write the local copy of ``remote_path`` (stat'ed at ``mtime``, ``size``) into
+        ``local``; returns the (mtime, size) version it copied."""
+        if not os.path.isdir(remote_path) and (self.spark is None or size <= PART_BYTES):
+            # the remote's bytes as they are, read from one open handle whose fstat is
+            # the version recorded (footer.file_meta's rule): a concurrent rewrite can
+            # never pair one version's key with another's bytes. The fixed name keeps
+            # the copy visible to parquet_files whatever the remote key is called.
             os.makedirs(local, exist_ok=True)
-            if os.path.isdir(remote_path):
-                for root, _, files in os.walk(remote_path):
-                    for fn in files:
-                        shutil.copy2(os.path.join(root, fn), os.path.join(local, fn))
-            else:
-                shutil.copy2(remote_path, os.path.join(local, os.path.basename(remote_path)))
+            with open(remote_path, "rb") as src, open(os.path.join(local, "part-00000.parquet"), "wb") as dst:
+                st = os.fstat(src.fileno())
+                shutil.copyfileobj(src, dst)
+            return st.st_mtime, st.st_size
+        if self.spark is None:
+            # sessionless mode (the rubix_cache DataSource planner runs in a python
+            # worker with no SparkSession): the tree as it is, relative paths kept, so
+            # same-named part files of different (hive partition) dirs stay apart
+            shutil.copytree(remote_path, local)
+            return mtime, size
+        # one output file per ~16 MiB of remote data. Two measured failure modes
+        # bound this from both sides: 32 tiny part-files for a small table make the
+        # HIT path as slow as the remote read (r2: warm == cold at sf0.1 before
+        # coalescing), and ONE part-file for a 124 MB table makes every warm scan a
+        # single task (r4 at sf1: the cached star join ran 16.7 s warm because the
+        # fact scan had zero parallelism — Spark splits files by byte range, but a
+        # sub-128MiB file is always one split). 16 MiB keeps small tables at one
+        # file and gives an 8-way scan per 128 MiB; on a cluster it also spreads the
+        # copy across executors.
+        n_parts = max(1, -(-size // PART_BYTES))
+        self.spark.read.parquet(remote_path).coalesce(n_parts).write.mode("overwrite").parquet(local)
+        return mtime, size
 
     # ------------------------------------------------------------------ row-group granularity
     # The reference caches 1 MiB blocks with a per-block bitmap (FileMetadata.java:96-97)
     # so a selective query warms only the blocks it touches. Parquet's natural block is
     # the row group: these three methods give the same economics — footer-stats pruning
     # picks the relevant row groups, warm materializes ONLY those (one local file per
-    # group; at cluster scale each group is an independent copy task), and reads are
-    # served from the subset as long as it covers the request and is fresh.
+    # group, fetched by ``_fetch_runs``), and reads are served from the subset as long as it covers the request and is fresh.
 
     def relevant_row_groups(self, remote_path: str, column: str, lo=None, hi=None) -> list[int]:
         """Row-group pruning from parquet footer min/max statistics (conservative:
@@ -373,43 +419,26 @@ class CacheManager:
         return local if self._commit(entry, "warmed_files") else None
 
     def _fetch_runs(self, remote_path: str, local: str, runs: list[list[int]]) -> None:
-        """A19's parallel downloader at row-group granularity: each collated run is an
-        independent EXECUTOR task (``FileDownloader.java:194-239`` fans chunks across a
-        thread pool; here the fan-out is a Spark job, so at cluster scale each run is
-        fetched by whichever executor owns the split — the driver never materializes
-        data). Sessionless callers (the DataSource planner worker) fetch inline.
+        """A19's parallel downloader at row-group granularity: the collated runs are
+        fetched in-process on a pool of at most ``FETCH_THREADS`` threads
+        (``FileDownloader.java:194-239``), each run paying one remote trip, concurrently
+        like parallel ranged GETs. Groups are read and written one at a time, so memory
+        holds at most one row group per thread.
 
-        Local-mode note: executors share the driver's filesystem, so writes to ``local``
-        are immediately servable; on a real cluster ``local`` must be a shared or
-        per-node cache mount (docs/LOCALITY.md covers the deployment shape).
+        On a real cluster ``local`` must be a shared or per-node cache mount
+        (docs/LOCALITY.md covers the deployment shape).
         """
+        import pyarrow.parquet as pq
 
-        latency_s = self.remote_latency_s
+        def fetch(run: list[int]) -> None:
+            self._remote_penalty()  # one ranged GET per collated run
+            with pq.ParquetFile(remote_path) as pf:
+                for i in run:
+                    pq.write_table(pf.read_row_group(i), os.path.join(local, f"rg_{i:05d}.parquet"))
 
-        def fetch(run: list[int]) -> int:
-            import time as _time
-
-            import pyarrow.parquet as pq
-
-            if latency_s > 0.0:
-                _time.sleep(latency_s)  # one ranged GET per collated run, paid in-task
-            pf = pq.ParquetFile(remote_path)
-            tbl = pf.read_row_groups(run)
-            offset = 0
-            for i in run:
-                n = pf.metadata.row_group(i).num_rows
-                pq.write_table(tbl.slice(offset, n), os.path.join(local, f"rg_{i:05d}.parquet"))
-                offset += n
-            return len(run)
-
-        if not runs:
-            return
-        if self.spark is not None:
-            sc = self.spark.sparkContext
-            sc.parallelize(runs, len(runs)).map(fetch).collect()
-        else:
-            for run in runs:
-                fetch(run)
+        if runs:
+            with ThreadPoolExecutor(min(FETCH_THREADS, len(runs))) as pool:
+                list(pool.map(fetch, runs))
 
     def read_row_groups(self, remote_path: str, row_groups: list[int], warm_on_miss: bool = True) -> DataFrame:
         """Serve specific row groups: from the cached subset when it covers the request
@@ -493,14 +522,12 @@ class CacheManager:
             return df
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
             local = self._fetch_from_peer(remote_path)
-            if local is not None:
-                return self.spark.read.parquet(local)
-            if self._warmup is not None:
+            if local is None and self._warmup is not None:
                 # A10 parallel warm-up: serve the caller from remote NOW, warm behind
                 self._warmup.enqueue(remote_path)
                 self._remote_penalty()
                 return self.spark.read.parquet(remote_path)
-            local = self.warm(remote_path)
+            local = local or self.warm(remote_path)
             df = self._serve_warmed(remote_path, local, None, [local]) if local else None
             if df is not None:
                 return df
@@ -557,11 +584,9 @@ class CacheManager:
         reference's signature behavior (TestCachingInputStream.java:165-177).
         """
         try:
-            mtime, size = _mtime_size(remote_path)
+            return _mtime_size(remote_path) == _version(entry)
         except FileNotFoundError:
             return True
-        expected = entry.remote_size if entry.remote_size is not None else entry.size_bytes
-        return mtime == entry.last_modified and size == expected
 
     def flush_trash(self) -> None:
         """Delete every tombstoned dir now, grace or not (shutdown/test hook)."""

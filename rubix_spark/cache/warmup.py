@@ -5,12 +5,14 @@ The reference serves a cold read directly from remote and queues a background fe
 merges duplicates/overlaps per file, drops stale ones, and downloads in a bounded thread
 pool (``RemoteFetchProcessor.java:102-200``, ``FileDownloader.java:194-239``).
 
-Spark-side: the "download" is a distributed parquet copy submitted in a **separate fair
-scheduler pool** so warm-up jobs never starve foreground queries — the analog of the
-reference's dedicated remote-fetch thread pool.  Request coalescing is whole-file (our
-cache granularity), implemented as de-dup of queued paths; staleness is re-checked at
-execution time, so a request enqueued before the file changed warms the new content (the
-reference drops the stale request instead — same end state, one fetch later).
+Spark-side: the "download" is ``CacheManager.warm`` on the processor's own thread. A
+byte copy submits no job; the coalescing copy of a directory or of a file over one
+16 MiB part runs in a **separate fair scheduler pool** so warm-up jobs never starve
+foreground queries — the analog of the reference's dedicated remote-fetch thread pool.
+Request coalescing is whole-file (our cache granularity), implemented as de-dup of queued
+paths; staleness is re-checked at execution time, so a request enqueued before the file
+changed warms the new content (the reference drops the stale request instead — same end
+state, one fetch later).
 """
 
 from __future__ import annotations
@@ -58,7 +60,7 @@ class WarmupProcessor:
             if path is None:
                 return
             try:
-                # run the distributed copy in a dedicated scheduler pool so foreground
+                # a coalescing copy job runs in a dedicated scheduler pool so foreground
                 # queries keep their task slots (FAIR pool analog of the fetch pool)
                 sc.setLocalProperty("spark.scheduler.pool", self.pool_name)
                 entry = self.manager.manifest.get(path)

@@ -1,4 +1,4 @@
-"""Round-3 cache-layer fixes (ADVICE.md r2) + the distributed row-group warm path.
+"""Round-3 cache-layer fixes (ADVICE.md r2) + the Spark jobs a cache miss submits.
 
 - granularity isolation: whole-file and #rg entries for one remote path must live in
   DIFFERENT local dirs (the r2 collision silently duplicated rows and let either
@@ -6,12 +6,17 @@
 - evict race: a concurrently-deleted previous subset dir must degrade to a remote
   refetch, never propagate FileNotFoundError
 - TTL applies to row-group subset entries exactly as to whole-file entries (A16)
-- the collated fetch runs as a Spark job (one executor task per run —
-  FileDownloader.java:194-239 analog), not driver-side pyarrow
+- a miss submits no Spark job of its own: a whole-file warm under one output part is a
+  byte copy and the collated row-group fetch runs in-process (FileDownloader.java:194-239
+  analog), and a re-warm of a known remote version reuses its schema; only directories
+  and files of more than one part take the coalescing Spark job
+- the copies: a sessionless directory copy keeps relative paths, a single-file copy is
+  named ``*.parquet`` whatever the remote key is called
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 import time
@@ -20,7 +25,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from rubix_spark.cache import CacheManager
+from rubix_spark.cache import CacheManager, manager
 
 
 @pytest.fixture()
@@ -84,31 +89,111 @@ def test_ttl_expires_rowgroup_entries(spark, multi_rg_file, tmp_path):
     assert s["invalidations"] == 1 and s["misses"] == 1
 
 
-def test_collated_fetch_runs_as_spark_job(spark, multi_rg_file, tmp_path):
-    """The warm copy must fan out one executor task per collated run — the driver never
-    materializes row-group bytes when a session is available."""
-    calls = []
+_markers = itertools.count()
 
-    class _SC:
-        def __init__(self, sc):
-            self._sc = sc
 
-        def parallelize(self, data, n):
-            calls.append((list(data), n))
-            return self._sc.parallelize(data, n)
+def _jobs(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` submits, counted through the status tracker.
 
-    class _Spark:
-        def __init__(self, s):
-            self.sparkContext = _SC(s.sparkContext)
-            self._s = s
+    The tracker is fed by the listener bus, so a marker job in a group of its own runs
+    after ``fn``: once the marker shows, every job ``fn`` started has shown too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    marker = f"job-count-marker-{next(_markers)}"
+    sc.setJobGroup(marker, "flushes the listener bus")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.time() < deadline, "marker job never reached the status tracker"
+        time.sleep(0.02)
+    return len(set(tracker.getJobIdsForGroup(None)) - before)
 
-        def __getattr__(self, name):
-            return getattr(self._s, name)
 
-    cm = CacheManager(_Spark(spark), str(tmp_path / "cache"))
-    cm.warm_row_groups(multi_rg_file, [0, 1, 7])  # two collated runs: [0,1] and [7]
-    assert calls == [([[0, 1], [7]], 2)]
-    entry = cm.manifest.get(cm._rg_key(multi_rg_file))
-    assert entry.row_groups == [0, 1, 7]
-    got = _rows(spark.read.parquet(os.path.join(entry.local_path, "rg_00007.parquet")))
+def test_miss_warms_without_a_spark_job(spark, multi_rg_file, tmp_path):
+    """A whole-file warm under one output part is a byte copy and a row-group warm
+    fetches in-process: neither submits a job. Only the first copy of a remote version
+    then pays the schema inference job when it is served."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    assert _jobs(spark, lambda: cm.warm(multi_rg_file)) == 0
+    entry = cm.manifest.get(multi_rg_file)
+    assert os.listdir(entry.local_path) == ["part-00000.parquet"]
+    with open(multi_rg_file, "rb") as remote, open(os.path.join(entry.local_path, "part-00000.parquet"), "rb") as copy:
+        assert remote.read() == copy.read()
+    assert _jobs(spark, lambda: cm.warm_row_groups(multi_rg_file, [0, 1, 7])) == 0
+    sub = cm.manifest.get(cm._rg_key(multi_rg_file))
+    assert sub.row_groups == [0, 1, 7]
+    got = _rows(spark.read.parquet(os.path.join(sub.local_path, "rg_00007.parquet")))
     assert got == [(i, i * 2) for i in range(700, 800)]
+    assert _jobs(spark, lambda: cm.read(multi_rg_file)) == 1  # first copy: inference
+
+
+def test_rewarm_of_a_known_version_submits_no_job(spark, multi_rg_file, tmp_path):
+    """Evicted or invalidated copies of an unchanged remote come back without a job
+    before the caller's action, at both granularities."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    assert cm.read(multi_rg_file).count() == 1000
+    assert cm.read_row_groups(multi_rg_file, [2, 3]).count() == 200
+    cm.invalidate(multi_rg_file)
+    cm.invalidate(cm._rg_key(multi_rg_file))
+    out = {}
+    assert _jobs(spark, lambda: out.update(whole=cm.read(multi_rg_file))) == 0
+    assert _jobs(spark, lambda: out.update(sub=cm.read_row_groups(multi_rg_file, [2, 3]))) == 0
+    assert _rows(out["whole"]) == [(i, i * 2) for i in range(1000)]
+    assert _rows(out["sub"]) == [(i, i * 2) for i in range(200, 400)]
+    assert cm.stats()["misses"] == 4 and cm.stats()["warmed_files"] == 4
+
+
+@pytest.mark.parametrize("layout", ["directory", "over_one_part"])
+def test_coalescing_job_only_where_it_changes_the_layout(spark, multi_rg_file, tmp_path, monkeypatch, layout):
+    """A directory, and a file of more than one output part, still take the coalescing
+    Spark job; its copy is Spark's parts, not the remote's files."""
+    remote = multi_rg_file
+    if layout == "directory":
+        remote = str(tmp_path / "remote_dir")
+        os.makedirs(remote)
+        tbl = pq.read_table(multi_rg_file)
+        pq.write_table(tbl.slice(0, 500), os.path.join(remote, "a.parquet"))
+        pq.write_table(tbl.slice(500), os.path.join(remote, "b.parquet"))
+    else:
+        monkeypatch.setattr(manager, "PART_BYTES", os.path.getsize(multi_rg_file) // 2)
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    assert _jobs(spark, lambda: cm.warm(remote)) >= 1
+    local = cm.manifest.get(remote).local_path
+    assert "_SUCCESS" in os.listdir(local)
+    assert _rows(cm.read(remote)) == [(i, i * 2) for i in range(1000)]
+
+
+def test_garbage_copy_of_a_known_version_falls_back(spark, multi_rg_file, tmp_path):
+    """A copy built with a known schema still has its footers read first, so garbage
+    bytes fail inside the lookup's corruption fallback, not in the caller's action."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    assert cm.read(multi_rg_file).count() == 1000  # the version's schema is now known
+    cm.invalidate(multi_rg_file)
+    local = cm.warm(multi_rg_file)
+    with open(os.path.join(local, "part-00000.parquet"), "wb") as f:
+        f.write(b"not parquet at all" * 100)
+    assert _rows(cm.read(multi_rg_file)) == [(i, i * 2) for i in range(1000)]
+    assert cm.stats()["fallbacks"] == 1
+
+
+def test_sessionless_directory_copy_keeps_relative_paths(tmp_path):
+    """Hive partition dirs hold part files of the same name: the sessionless tree copy
+    must keep them apart, so the copy has the remote's files and rows."""
+    remote = tmp_path / "remote"
+    for part in ("p=0", "p=1"):
+        os.makedirs(remote / part)
+        pq.write_table(pa.table({"k": list(range(5))}), str(remote / part / "part-0.parquet"))
+    local = CacheManager(None, str(tmp_path / "cache")).resolve(str(remote))
+
+    def tree(root):
+        return sorted(os.path.relpath(os.path.join(d, f), root) for d, _, fs in os.walk(root) for f in fs)
+
+    assert local != str(remote)
+    assert tree(local) == tree(str(remote)) == ["p=0/part-0.parquet", "p=1/part-0.parquet"]
+    assert pq.read_table(local).num_rows == pq.read_table(str(remote)).num_rows == 10

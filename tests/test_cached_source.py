@@ -197,3 +197,21 @@ def test_empty_remote_dir_raises_file_not_found(spark, tmp_path):
         df = reader.format("rubix_cache").options(**opts)
         with pytest.raises(Exception, match="FileNotFoundError.*" + re.escape(str(remote))):
             df.load().collect()
+
+
+def test_suffixless_remote_key_warms_a_visible_copy(spark, multi_rg_remote, tmp_path):
+    """An object-store key need not end in ``.parquet``: its single-file copy is named
+    ``part-00000.parquet``, so the scan serves the remote's rows from the copy and
+    ``validate()`` finds the fresh entry whole."""
+    from rubix_spark.sources.cached_source import _manager
+
+    path = str(tmp_path / "remote_rg" / "facts")
+    os.rename(multi_rg_remote, path)
+    want = _rows(spark.read.parquet(path))
+    register_cache_source(spark)
+    cache_dir = str(tmp_path / "dsc_suffixless")
+    assert _rows(_read(spark, path, cache_dir)) == want  # read-through warm
+    assert _rows(_read(spark, path, cache_dir)) == want  # hit
+    cm = _manager(cache_dir)
+    assert os.listdir(cm.manifest.get(path).local_path) == ["part-00000.parquet"]
+    assert cm.validate() == {"checked": 1, "broken": 0, "repaired": 0, "orphans_swept": 0}

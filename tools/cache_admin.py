@@ -3,9 +3,10 @@
 invalidateFileMetadata / getCacheMetrics) plus the validator sweep, as a standalone
 command so an operator can inspect and manage a cache directory without a Spark job.
 
-Runs sessionless: ``CacheManager(spark=None, ...)`` warms by direct file copy (the
-cluster path is the distributed copy inside a job — see cache/manager.py). All output is
-one JSON document on stdout.
+Runs sessionless: ``CacheManager(spark=None, ...)`` warms by direct file copy, a
+directory's tree as it is (with a session, directories and files over one 16 MiB part
+are coalesced by a Spark job instead — see cache/manager.py). All output is one JSON
+document on stdout.
 
     python tools/cache_admin.py stats      --cache-dir /var/cache/rubix
     python tools/cache_admin.py list       --cache-dir /var/cache/rubix
