@@ -50,8 +50,8 @@ def _r13_shaped_out(extra_queries=()):
 
 def test_r13_shape_keeps_every_priority_timing():
     out = _r13_shaped_out()
-    line = bench.shrink_printed_line(out, PRIORITY)
-    assert len(line) <= 1950
+    line = bench.shrink_printed_line(out, PRIORITY, limit=1800)  # r13's budget: must trim
+    assert len(line) <= 1800
     parsed = json.loads(line)
     assert set(parsed["queries"]) >= set(PRIORITY), "PRIORITY timing dropped from bench line"
     # the r13 victims specifically (the three longest PRIORITY names)
@@ -63,9 +63,8 @@ def test_minhash_density_never_printed_when_tight():
     """The density block lives in BENCH_DETAIL.json / the scale artifacts; it is the
     first ballast overboard whenever the line is over budget."""
     out = _r13_shaped_out()
-    if len(json.dumps(out)) > 1950:
-        line = bench.shrink_printed_line(out, PRIORITY)
-        assert "minhash_density" not in json.loads(line)
+    line = bench.shrink_printed_line(out, PRIORITY, limit=len(json.dumps(out)) - 1)
+    assert "minhash_density" not in json.loads(line)
 
 
 def test_non_priority_rows_drop_before_any_block_matters():
