@@ -34,7 +34,7 @@ def _consume(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def shrink_printed_line(out: dict, priority, limit: int = 1950) -> str:
+def shrink_printed_line(out: dict, priority, limit: int = 1800) -> str:
     """Shrink the stdout JSON line to <= limit chars WITHOUT ever dropping a
     PRIORITY query timing.
 
@@ -42,13 +42,11 @@ def shrink_printed_line(out: dict, priority, limit: int = 1950) -> str:
     PRIORITY query's timing against the previous round; a PRIORITY key missing
     from the printed line makes the round "regressed" regardless of speed
     (r13: the minhash_density block's bytes pushed the line past 1800 and the
-    old trimmer deleted the 3 longest-named PRIORITY keys). The default limit
-    leaves 50 chars of that tail for anything printed after the line. Drop order:
+    old trimmer deleted the 3 longest-named PRIORITY keys). Drop order:
       1. diagnostic blocks that already live in BENCH_DETAIL.json
          (minhash_density first, then scenario blocks largest-first),
-      2. non-PRIORITY query timings, then the stall block,
-      3. the query timings' third decimal (BENCH_DETAIL.json keeps it),
-      4. nothing else — if the PRIORITY timings alone don't fit, raise.
+      2. non-PRIORITY query timings,
+      3. nothing else — if the PRIORITY timings alone don't fit, raise.
     `out` is mutated; BENCH_DETAIL.json must be written before calling.
     """
     priority_set = set(priority)
@@ -74,8 +72,6 @@ def shrink_printed_line(out: dict, priority, limit: int = 1950) -> str:
         del out["queries"][n]
     if len(line()) > limit:
         out.pop("stall", None)
-    if len(line()) > limit:
-        out["queries"] = {n: round(t, 2) for n, t in out["queries"].items()}
     s = line()
     if len(s) > limit:
         raise RuntimeError(

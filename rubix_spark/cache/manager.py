@@ -29,8 +29,8 @@ Reference parity map (operator ids from SURVEY.md §2.A):
                      entry's generation (one generation per manifest key); a
                      read-through miss leaves its DataFrame there for the next hit, and
                      the local files are checked before a memoized DataFrame is served.
-                     The Spark schema is kept per manifest key and remote version, so
-                     only the first copy of a version pays Spark's schema inference
+                     The Spark schema of a key's copy is kept with its footers' schema,
+                     so a later copy with the same footer schema skips Spark's inference
 - ``evict_to_budget()`` — A15: LRU by last_access down to ``budget_bytes``
                      (weigher/maximumWeight analog, ``BookKeeper.java:629-686``); like
                      the one removal listener of ``BookKeeper.java:723-746``, every
@@ -73,11 +73,11 @@ PART_BYTES = 16 * 1024 * 1024
 # Row-group fetch threads per warm, FileDownloader's pool size (FileDownloader.java:194-239).
 FETCH_THREADS = 10
 
-# The Spark schema of each manifest key's copies at one remote version:
-# {key: ((mtime, remote size), schema)}. One version per key, as in footer.py, and shared
-# by every manager in the process, so only the first copy of a version pays the schema
-# inference job of ``spark.read.parquet``.
-_SCHEMAS: dict[str, tuple[tuple[float, int], StructType]] = {}
+# The schemas of each manifest key's last inferred copy: {key: (arrow schema of its part
+# files' footers, Spark schema)}. One entry per key, as in footer.py, shared by every
+# manager in the process, so a later copy whose footers hold the same schema skips the
+# schema inference job of ``spark.read.parquet``.
+_SCHEMAS: dict[str, tuple[object, StructType]] = {}
 
 
 class CacheReadError(RuntimeError):
@@ -103,11 +103,6 @@ def _mtime_size(path: str) -> tuple[float, int]:
                 mt = max(mt, s.st_mtime)
         return mt, total
     return st.st_mtime, st.st_size
-
-
-def _version(entry: Entry) -> tuple[float, int]:
-    """The remote version ``entry`` copied: (mtime, remote size)."""
-    return entry.last_modified, entry.remote_size if entry.remote_size is not None else entry.size_bytes
 
 
 class CacheManager:
@@ -214,27 +209,29 @@ class CacheManager:
                 self._df_memo[entry.remote_path] = (entry.generation, dfs)
             df = dfs.get(groups)
         if df is None:
-            df = self._scan(entry, paths)
+            df = self._scan(entry.remote_path, paths)
             with self._lock:
                 dfs[groups] = df
         return df
 
-    def _scan(self, entry: Entry, paths: list[str]) -> DataFrame:
-        """``spark.read.parquet(*paths)`` over a copy of ``entry``'s remote version. The
-        first copy of a version pays Spark's schema inference job; later copies reuse
-        its schema once every part file's footer has been read, so a garbage copy still
-        fails here, inside the caller's corruption fallback, and not in its action."""
-        version = _version(entry)
-        known = _SCHEMAS.get(entry.remote_path)
-        if known is not None and known[0] == version:
-            files = [f for p in paths for f in footer.parquet_files(p)]
-            if not files:
-                raise FileNotFoundError(paths[0])
-            for f in files:
-                footer.file_meta(f)
+    def _scan(self, key: str, paths: list[str]) -> DataFrame:
+        """``spark.read.parquet(*paths)`` over a copy of ``key``. Every part file's
+        footer is read first, so a garbage copy fails here, inside the caller's
+        corruption fallback, and not in its action. When all footers hold the schema of
+        the key's last inferred copy, its Spark schema is reused and Spark's schema
+        inference job is skipped; the footers, not the remote's version, decide, so a
+        rewrite that changes the columns is always inferred again."""
+        files = [f for p in paths for f in footer.parquet_files(p)]
+        if not files:
+            raise FileNotFoundError(paths[0])
+        schemas = [footer.file_meta(f).schema for f in files]
+        same = all(sc.equals(schemas[0], check_metadata=True) for sc in schemas)
+        known = _SCHEMAS.get(key)
+        if same and known is not None and known[0].equals(schemas[0], check_metadata=True):
             return self.spark.read.schema(known[1]).parquet(*paths)
         df = self.spark.read.parquet(*paths)
-        _SCHEMAS[entry.remote_path] = (version, df.schema)
+        if same:
+            _SCHEMAS[key] = (schemas[0], df.schema)
         return df
 
     def _serve_warmed(self, key: str, local: str, groups: tuple[int, ...] | None, paths: list[str]) -> DataFrame | None:
@@ -584,9 +581,11 @@ class CacheManager:
         reference's signature behavior (TestCachingInputStream.java:165-177).
         """
         try:
-            return _mtime_size(remote_path) == _version(entry)
+            mtime, size = _mtime_size(remote_path)
         except FileNotFoundError:
             return True
+        expected = entry.remote_size if entry.remote_size is not None else entry.size_bytes
+        return mtime == entry.last_modified and size == expected
 
     def flush_trash(self) -> None:
         """Delete every tombstoned dir now, grace or not (shutdown/test hook)."""

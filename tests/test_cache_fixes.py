@@ -8,8 +8,8 @@
 - TTL applies to row-group subset entries exactly as to whole-file entries (A16)
 - a miss submits no Spark job of its own: a whole-file warm under one output part is a
   byte copy and the collated row-group fetch runs in-process (FileDownloader.java:194-239
-  analog), and a re-warm of a known remote version reuses its schema; only directories
-  and files of more than one part take the coalescing Spark job
+  analog), and a re-warm whose footers hold the key's known schema reuses it; only
+  directories and files of more than one part take the coalescing Spark job
 - the copies: a sessionless directory copy keeps relative paths, a single-file copy is
   named ``*.parquet`` whatever the remote key is called
 """
@@ -117,8 +117,8 @@ def _jobs(spark, fn) -> int:
 
 def test_miss_warms_without_a_spark_job(spark, multi_rg_file, tmp_path):
     """A whole-file warm under one output part is a byte copy and a row-group warm
-    fetches in-process: neither submits a job. Only the first copy of a remote version
-    then pays the schema inference job when it is served."""
+    fetches in-process: neither submits a job. Only the first copy of a key then pays
+    the schema inference job when it is served."""
     cm = CacheManager(spark, str(tmp_path / "cache"))
     assert _jobs(spark, lambda: cm.warm(multi_rg_file)) == 0
     entry = cm.manifest.get(multi_rg_file)
@@ -169,8 +169,34 @@ def test_coalescing_job_only_where_it_changes_the_layout(spark, multi_rg_file, t
     assert _rows(cm.read(remote)) == [(i, i * 2) for i in range(1000)]
 
 
+def test_rewrite_the_stat_cannot_see_is_inferred_again(spark, multi_rg_file, tmp_path):
+    """A rewrite that keeps the remote's (mtime, size) is invisible to the staleness
+    check, so the caller invalidates by hand. The schema is reused only when the copy's
+    footers hold it, so the re-warmed copy shows the column the rewrite added."""
+    remote = str(tmp_path / "remote_dir")
+    os.makedirs(remote)
+    part, pad = os.path.join(remote, "a.parquet"), os.path.join(remote, "_pad")
+    tbl = pq.read_table(multi_rg_file)
+    pq.write_table(tbl, part)
+    with open(pad, "wb") as f:
+        f.write(b"x" * 4096)
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    assert cm.read(remote).columns == ["k", "v"]
+    version, stats = manager._mtime_size(remote), {p: os.stat(p) for p in (part, pad)}
+    pq.write_table(tbl.append_column("w", pa.array([1] * 1000)), part)
+    with open(pad, "wb") as f:  # the same total size, then the same mtimes
+        f.write(b"x" * (4096 + stats[part].st_size - os.path.getsize(part)))
+    for p, st in stats.items():
+        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert manager._mtime_size(remote) == version
+    cm.invalidate(remote)
+    df = cm.read(remote)
+    assert df.columns == ["k", "v", "w"]
+    assert df.agg({"w": "sum"}).collect()[0][0] == 1000
+
+
 def test_garbage_copy_of_a_known_version_falls_back(spark, multi_rg_file, tmp_path):
-    """A copy built with a known schema still has its footers read first, so garbage
+    """Every part file's footer is read before a known schema is reused, so garbage
     bytes fail inside the lookup's corruption fallback, not in the caller's action."""
     cm = CacheManager(spark, str(tmp_path / "cache"))
     assert cm.read(multi_rg_file).count() == 1000  # the version's schema is now known
