@@ -13,8 +13,16 @@ surface Spark-first:
 - ``rubix_spark.cache``      — RubiX cache semantics (warm/read-through/evict/invalidate) built
                                on parquet materialization + a manifest (SURVEY.md §2.A)
 - ``rubix_spark.streaming``  — Structured Streaming S1/S2 (windowed aggs, sessionization)
+- ``rubix_spark.pyworker``   — Spark's Python worker daemon without the zips on ``sys.path``
 """
 
-from rubix_spark.session import get_session
-
 __all__ = ["get_session"]
+
+
+def __getattr__(name: str):
+    # lazy, so ``python -m rubix_spark.pyworker`` runs before anything imports pyspark
+    if name == "get_session":
+        from rubix_spark.session import get_session
+
+        return get_session
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

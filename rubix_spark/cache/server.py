@@ -94,7 +94,8 @@ class _Handler(socketserver.StreamRequestHandler):
         if entry is None:
             raise FileNotFoundError(f"not cached here: {p['path']}")
         paths = parquet_files(entry.local_path)
-        files = [{"name": os.path.basename(f), "size": os.path.getsize(f)} for f in paths]
+        # names relative to the copy's root, so a partitioned copy keeps its layout
+        files = [{"name": os.path.relpath(f, entry.local_path), "size": os.path.getsize(f)} for f in paths]
         return (
             {"files": files, "generation": entry.generation,
              "size_bytes": entry.size_bytes, "last_modified": entry.last_modified},
@@ -170,6 +171,15 @@ class CacheServer(socketserver.ThreadingTCPServer):
         return t
 
 
+def _inside(dest_dir: str, name: str) -> str:
+    """``dest_dir/name``, refused when a peer's ``name`` would land outside ``dest_dir``."""
+    root = os.path.realpath(dest_dir)
+    target = os.path.realpath(os.path.join(root, name))
+    if os.path.isabs(name) or not target.startswith(root + os.sep):
+        raise ValueError(f"peer file name leaves the destination dir: {name!r}")
+    return target
+
+
 class CacheClient:
     """Pooled, retrying client (A23 analog: the reference pools thrift connections and
     retries on transient failure — ``rubix-spi`` client pooling).
@@ -216,9 +226,8 @@ class CacheClient:
         """Download the peer's CACHED copy of ``path`` into ``dest_dir`` (A8/A9: the
         non-local read chain — LocalDataTransferServer serving a neighbor's blocks).
         Returns the fetch header (files, generation, remote size/mtime). Raises on a
-        peer miss; the caller falls back to the remote."""
-        import os
-
+        peer miss, and with ``ValueError`` before writing anything when a file name
+        is absolute or leaves ``dest_dir``; the caller falls back to the remote."""
         last: Exception | None = None
         with self._lock:
             for attempt in range(self.retries):
@@ -231,10 +240,16 @@ class CacheClient:
                     if not resp.get("ok"):
                         raise FileNotFoundError(resp.get("error", "peer fetch failed"))
                     header = resp["result"]
+                    try:
+                        targets = [_inside(dest_dir, f["name"]) for f in header["files"]]
+                    except ValueError:
+                        self.close()  # the refused files' bytes are still in the stream
+                        raise
                     os.makedirs(dest_dir, exist_ok=True)
-                    for f in header["files"]:
+                    for f, target in zip(header["files"], targets):
+                        os.makedirs(os.path.dirname(target), exist_ok=True)
                         remaining = f["size"]
-                        with open(os.path.join(dest_dir, f["name"]), "wb") as out:
+                        with open(target, "wb") as out:
                             while remaining:
                                 chunk = self._rfile.read(min(remaining, 1 << 20))
                                 if not chunk:

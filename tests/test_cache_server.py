@@ -8,8 +8,12 @@ cross-engine serving path, coordinated through the flock'd manifest)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+import threading
+
+import pytest
 
 from rubix_spark.cache.server import CacheClient, CacheServer
 from tests.conftest import SF_SMOKE
@@ -139,6 +143,81 @@ def test_nonlocal_read_chain_peer_serves_before_remote(tmp_path, spark):
         assert df2.count() == spark.read.parquet(lineitem).count()
     finally:
         node_a.shutdown()
+
+
+def test_peer_fetch_keeps_a_partitioned_copy(tmp_path):
+    """Hive partition dirs hold part files of the same name: a peer's copy must arrive
+    with its relative paths, or one partition overwrites the other and rows go missing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rubix_spark.cache.manager import CacheManager
+
+    remote = tmp_path / "remote.parquet"
+    for part in ("p=0", "p=1"):
+        (remote / part).mkdir(parents=True)
+        pq.write_table(pa.table({"k": list(range(5))}), str(remote / part / "part-0.parquet"))
+    peer = CacheServer(str(tmp_path / "node_a"))
+    peer.serve_background()
+    try:
+        peer.manager.warm(str(remote))
+        node_b = CacheManager(None, str(tmp_path / "node_b"), peer_client=CacheClient(*peer.address))
+        local = node_b._fetch_from_peer(str(remote))
+        assert local is not None and node_b.stats()["peer_fetches"] == 1
+        names = sorted(os.path.relpath(os.path.join(d, f), local) for d, _, fs in os.walk(local) for f in fs)
+        assert names == ["p=0/part-0.parquet", "p=1/part-0.parquet"]
+        assert pq.read_table(local).num_rows == 10
+    finally:
+        peer.shutdown()
+
+
+@pytest.mark.parametrize("hostile", ["../x", "/abs/x", "p=0/../../x", "."])
+def test_peer_file_name_outside_the_destination_is_refused(tmp_path, hostile):
+    """A peer names the files it streams; a name that is absolute or resolves outside
+    the destination is refused before any byte is written, and the manager degrades to
+    the remote without leaving a partial copy behind."""
+    import socketserver
+
+    from rubix_spark.cache.manager import CacheManager
+
+    if hostile.startswith("/"):
+        hostile = str(tmp_path / hostile.lstrip("/"))
+    body = b"abc"
+
+    class HostilePeer(socketserver.StreamRequestHandler):
+        def handle(self):
+            for line in self.rfile:
+                method = json.loads(line)["method"]
+                result = (
+                    {"state": "CACHED"} if method == "get_cache_status" else
+                    {"files": [{"name": hostile, "size": len(body)}], "generation": 1,
+                     "size_bytes": len(body), "last_modified": 0}
+                )
+                self.wfile.write((json.dumps({"ok": True, "result": result}) + "\n").encode())
+                if method == "fetch":
+                    self.wfile.write(body)
+                self.wfile.flush()
+
+    srv = socketserver.ThreadingTCPServer(("127.0.0.1", 0), HostilePeer)
+    srv.daemon_threads = True
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        dest = tmp_path / "dest" / "copy"
+        with pytest.raises(ValueError, match="leaves the destination"):
+            CacheClient(*srv.server_address).fetch("/remote/t.parquet", str(dest))
+        assert not dest.exists()
+
+        cache = tmp_path / "cache"
+        mgr = CacheManager(None, str(cache), peer_client=CacheClient(*srv.server_address))
+        assert mgr._fetch_from_peer("/remote/t.parquet") is None
+        assert mgr.stats()["peer_fetches"] == 0
+        assert not (cache / "fcache").exists() or os.listdir(cache / "fcache") == []
+        written = {os.path.relpath(os.path.join(d, f), tmp_path)
+                   for d, _, fs in os.walk(tmp_path) for f in fs}
+        assert not any(open(tmp_path / w, "rb").read() == body for w in written)
+    finally:
+        srv.shutdown()
+        srv.server_close()
 
 
 # ---------------------------------------------- adversarial request frames (r13)

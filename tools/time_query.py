@@ -29,19 +29,16 @@ def main() -> None:
 
     from rubix_spark import catalog
     from rubix_spark.queries import load_all
+    from rubix_spark.session import static_confs
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        # STATIC conf (ADVICE r9) — must ride the launch SparkConf here exactly as
-        # in session.py, or A/Bs run under the 100-entry cache while bench runs
-        # under 5000 and the two protocols diverge
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .getOrCreate()
-    )
+    builder = SparkSession.builder.master(f"local[{cpus}]").config("spark.sql.shuffle.partitions", cpus)
+    # the static confs ride the launch SparkConf exactly as in session.py (codegen
+    # cache size, zip-free Python workers), or A/Bs and the bench measure different
+    # engines
+    for k, v in static_confs().items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
     catalog.ensure_session_confs(spark)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
