@@ -28,6 +28,18 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
+def session_memo(spark: SparkSession, name: str) -> dict:
+    """The dict held on the session as attribute ``name``, created empty on first
+    use. Memos live ON the session object so they can never outlive it or leak
+    across sessions (the driver harness supplies its own session per round); a
+    test drops one by assigning ``spark.<name> = {}``."""
+    memo = getattr(spark, name, None)
+    if memo is None:
+        memo = {}
+        setattr(spark, name, memo)
+    return memo
+
+
 def ensure_session_confs(spark: SparkSession) -> None:
     """Make an arbitrary caller-provided session able to read the fixtures correctly.
 
@@ -70,15 +82,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DIV 1000 is lossless. Micros fixtures read as TimestampType directly.
 
     The DataFrame (a lazy plan + resolved FileIndex) is memoized per (session, dir,
-    name): every ``spark.read.parquet`` call re-lists the path and re-reads a footer
-    for schema inference — pure driver latency repeated per query over immutable
-    fixtures. The memo lives ON the session object so it can never outlive it or leak
-    across sessions (the driver harness supplies its own session per round).
+    name) in a ``session_memo``: every ``spark.read.parquet`` call re-lists the path
+    and re-reads a footer for schema inference — pure driver latency repeated per
+    query over immutable fixtures.
     """
-    memo = getattr(spark, "_rubix_table_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_table_memo = memo
+    memo = session_memo(spark, "_rubix_table_memo")
     key = (sf_dir.rstrip("/"), name)
     df = memo.get(key)
     if df is not None:
@@ -111,10 +119,7 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple = TABLES) -> N
     A different ``sf_dir`` for the same view name re-registers (the memo records where
     each view currently points).
     """
-    memo = getattr(spark, "_rubix_view_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_view_memo = memo
+    memo = session_memo(spark, "_rubix_view_memo")
     key = sf_dir.rstrip("/")
     for name in names:
         if memo.get(name) != key:
@@ -190,10 +195,9 @@ def analyze(
             )
     out: dict[str, dict] = {}
     # a re-ANALYZE invalidates any memoized per-column stat lookups (stats.catalog_max)
-    memo = getattr(spark, "_rubix_catalog_max_memo", None)
-    if memo:
-        for k in [k for k in memo if k[0].startswith(prefix)]:
-            del memo[k]
+    memo = session_memo(spark, "_rubix_catalog_max_memo")
+    for k in [k for k in memo if k[0].startswith(prefix)]:
+        del memo[k]
     for name in names:
         tbl = f"{prefix}{name}"
         path = f"{sf_dir.rstrip('/')}/{name}.parquet"
@@ -229,13 +233,8 @@ def analyze(
     if route:
         if set(TABLES) - set(names):
             raise ValueError("route=True requires analyzing all fixture tables")
-        routed = getattr(spark, "_rubix_analyzed_prefix", None)
-        if routed is None:
-            routed = {}
-            spark._rubix_analyzed_prefix = routed
-        routed[sf_dir.rstrip("/")] = prefix
-        memo = getattr(spark, "_rubix_table_memo", None)
-        if memo:
-            for k in [k for k in memo if k[0] == sf_dir.rstrip("/")]:
-                del memo[k]
+        session_memo(spark, "_rubix_analyzed_prefix")[sf_dir.rstrip("/")] = prefix
+        memo = session_memo(spark, "_rubix_table_memo")
+        for k in [k for k in memo if k[0] == sf_dir.rstrip("/")]:
+            del memo[k]
     return out

@@ -69,11 +69,6 @@ def dec_det(col: Column, scale: int = 4) -> Column:
     return round_det(col, scale).cast(f"decimal(18,{scale})")
 
 
-def duck_dec_det(expr: str, scale: int = 4) -> str:
-    """DuckDB SQL matching dec_det()."""
-    return f"CAST({duck_round(expr, scale)} AS DECIMAL(18,{scale}))"
-
-
 def money(agg: Column, alias: str) -> Column:
     """Exact decimal aggregate -> rounded double output column.
 

@@ -159,10 +159,7 @@ def _band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (session, sf_dir) like catalog.table: x1_minhash_lsh,
     x1_dedup_components and x1_incremental_neardup each consume it within one
     session — tokenize+checkpoint is paid once, not per caller."""
-    memo = getattr(spark, "_rubix_band_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_band_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_band_memo")
     key = sf_dir.rstrip("/")
     if key in memo:
         return memo[key]

@@ -30,18 +30,16 @@ import uuid
 
 from pyspark.sql import Column, SparkSession
 
+from rubix_spark import catalog
 from rubix_spark.cache.footer import file_meta, parquet_files
 
 
 def _invalidate_memo(spark: SparkSession, path: str) -> None:
     """Evict catalog.table's memoized DataFrame for the swapped path (its cached file
     index points at the deleted part files) and refresh Spark's own path caches."""
-    memo = getattr(spark, "_rubix_table_memo", None)
-    if memo:
-        norm = path.rstrip("/")
-        sf_dir, base = os.path.split(norm)
-        name = base[:-8] if base.endswith(".parquet") else base
-        memo.pop((sf_dir.rstrip("/"), name), None)
+    sf_dir, base = os.path.split(path.rstrip("/"))
+    name = base[:-8] if base.endswith(".parquet") else base
+    catalog.session_memo(spark, "_rubix_table_memo").pop((sf_dir.rstrip("/"), name), None)
     try:
         spark.catalog.refreshByPath(path)
     except Exception:

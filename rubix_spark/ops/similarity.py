@@ -1,18 +1,33 @@
 """X2 — similarity search over the ``embeddings`` table (``embedding: array<float>``).
 
-Three paths, mirroring how a 100 TB vector corpus is actually served:
+Every single-query row is filter-and-refine (the REPOSE / TraSS shape): a candidate
+generator prunes the corpus, then one exact re-rank and one top-k answer.
 
-- ``x2_ann_bruteforce`` — exact cosine top-k against a query vector.  The query vector is
-  a 1-row broadcast; the scan is embarrassingly parallel; top-k is
-  TakeOrderedAndProject (per-partition heaps + driver merge of k rows, never a full sort).
-- ``x2_ann_ivf``       — IVF-lite: a deterministic centroid set (first 16 vectors stands in
-  for a k-means codebook), every vector assigned to its nearest centroid.  The assignment
-  is a WRITTEN table bucketed by ``cid`` (``_ivf_index`` via
-  ``sources.bucketing.persisted_bucketed`` — built once per fixture generation, probed
-  forever); a probe bucket-prunes to its ``NPROBE`` nearest centroid buckets.
-- ``x2_ann_lsh``       — sign-LSH: 8 deterministic md5-derived hyperplanes → 8-bit bucket
-  key.  The (vec_id, bucket, embedding) index is likewise a WRITTEN bucketed table
-  (``_lsh_index``); serving reads ONLY the query's bucket file — no signature recompute.
+- **Query.** ``_query_vec`` reads only the query row, once per (session, fixture).
+- **Generator.** The only part that differs between the rows:
+  - ``x2_ann_bruteforce`` — the whole table;
+  - ``x2_ann_ivf`` — ``cid IN <NPROBE nearest centroids>`` on the WRITTEN assignment
+    index (``_ivf_index``, bucketed by ``cid`` via
+    ``sources.bucketing.persisted_bucketed`` — built once per fixture generation, probed
+    forever); the first 16 vectors stand in for a k-means codebook;
+  - ``x2_ann_lsh`` / ``x2_ann_lsh_multiprobe`` — ``bucket = qb`` / ``bucket IN <qb xor
+    masks>`` on the written sign-LSH index (``_lsh_index``: 8 md5-derived hyperplanes →
+    8-bit key), so serving reads only the probed bucket files;
+  - ``x2_ann_ivf_trained`` — ``cid IN`` probes over a pyspark.ml KMeans codebook;
+  - ``x2_ann_ivfpq`` — the top-64 product-quantization (ADC) candidates inside them.
+- **Re-rank and top-k.** ``_rerank`` scores the candidates with the literal-vector cosine
+  fold; ``_top_k`` orders ``_sim DESC, vec_id`` and keeps TOP_K (TakeOrderedAndProject:
+  per-partition heaps + a driver merge of k rows, never a full sort). Past its AT_SCALE
+  row count brute force scores with ``_bruteforce_np_exact``, a numpy kernel
+  bit-identical to the fold, and feeds the same ``_top_k``.
+- **Degenerate vectors.** A NULL embedding, a width other than the query's or a NULL
+  element scores NULL (zip_with pads with NULL; NULL poisons the fold), and so does a
+  zero norm (NULLIF); NaN components score NaN. NaN ranks first and NULL last in both
+  engines. ``_gather`` applies this rule to the numpy kernels' Arrow batches; the
+  k-means fits train on its finite rows only (``_trainable``).
+
+The kNN-join rows score 4 query vectors at once and share one per-query window tail
+(``_knn_top``).
 
 The build-once/serve-many split is the reference's own warm-once contract
 (``CachingFileSystem.java:227-260`` warms a block once and serves every later read from
@@ -68,13 +83,19 @@ def cosine(a: Column, b: Column) -> Column:
 # property that matters for CLAUDE.md invariant 10 is preserved), and the arithmetic
 # is bit-identical: same zip_with/aggregate fold, doubles formatted via repr
 # round-trip.
-def _arr_sql(vec: list[float]) -> str:
+def _arr_sql(vec: list[float] | None) -> str:
     # non-finite doubles have no bare-literal spelling ('nanD' fails to parse):
     # spell them through the string cast, which Spark folds to the same constant
-    # (NaN components reach here via a NaN-norm centroid — r13 review family)
-    def lit(x: float) -> str:
+    # (NaN components reach here via a NaN-norm centroid — r13 review family).
+    # A NULL element (or a NULL vector) is a typed NULL, so a degenerate query
+    # vector scores NULL exactly as the column it was read from did.
+    def lit(x: float | None) -> str:
+        if x is None:
+            return "CAST(NULL AS DOUBLE)"
         return f"{x!r}D" if x == x and abs(x) != float("inf") else f"double('{x!r}')"
 
+    if vec is None:
+        return "CAST(NULL AS ARRAY<DOUBLE>)"
     return "array(" + ", ".join(lit(x) for x in vec) + ")"
 
 
@@ -107,10 +128,83 @@ DUCK_DOT = (
 
 
 def _duck_cos(a: str, b: str) -> str:
+    # DuckDB's list sum skips NULLs where the Spark fold is NULL (zip_with pads a
+    # width mismatch with NULL; a NULL element poisons the sum): the guard restates
+    # the fold's rule, so a ragged or NULL-element vector scores NULL in both
     return (
+        f"CASE WHEN len({a}) = len({b}) AND list_count({a}) = len({a}) "
+        f"AND list_count({b}) = len({b}) THEN "
         f"{DUCK_DOT.format(a=a, b=b)} / "
-        f"(sqrt({DUCK_DOT.format(a=a, b=a)}) * sqrt({DUCK_DOT.format(a=b, b=b)}))"
+        f"(sqrt({DUCK_DOT.format(a=a, b=a)}) * sqrt({DUCK_DOT.format(a=b, b=b)})) END"
     )
+
+
+# ---------------------------------------------------------------------------
+# the shared skeleton: query read, Arrow gather, exact re-rank, top-k
+# ---------------------------------------------------------------------------
+def _query_vec(spark: SparkSession, sf_dir: str) -> list | None:
+    """The query row's embedding (float32 widened to Python floats; a NULL element
+    stays None, a NULL embedding is None), memoized per (session, fixture dir).
+    It reads the query row only: a degenerate codebook row cannot break the rows
+    that need nothing but the query."""
+    memo = catalog.session_memo(spark, "_rubix_query_memo")
+    key = sf_dir.rstrip("/")
+    if key not in memo:
+        emb = catalog.table(spark, sf_dir, "embeddings")
+        row = emb.where(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
+        if row is None:
+            raise ValueError(f"embeddings fixture is missing query vec_id {QUERY_VEC_ID}")
+        memo[key] = None if row.embedding is None else list(row.embedding)
+    return memo[key]
+
+
+def _trainable() -> Column:
+    """The rows the k-means fits train on: the DIM-wide rows ``_gather`` keeps, with
+    finite components only (MLlib's fit raises on NaN/Inf; numpy's Lloyd means would
+    turn NaN; NaN sorts greatest in Spark, so ``abs(x) < inf`` drops it). The predicate
+    is never NULL: Spark merges a filter on a later column (the probes'
+    ``prediction IN``) into this one, and a NULL left side would still run the
+    right side's ``array_to_vector`` on the bad row."""
+    return F.expr(
+        f"embedding IS NOT NULL AND size(embedding) = {DIM} "
+        "AND forall(embedding, x -> x IS NOT NULL AND abs(x) < double('inf'))"
+    )
+
+
+def _gather(col, d: int):
+    """``(ok, m)`` for an Arrow ``list<float>`` column: ``ok`` marks the rows the fold
+    scores — not NULL, exactly ``d`` wide, no NULL element — and ``m`` is their
+    float64 ``[ok.sum(), d]`` matrix, gathered off the values buffer (offsets are
+    absolute into it). Every other row's fold cosine is NULL: zip_with pads a width
+    mismatch with NULL and a NULL element poisons the fold."""
+    import numpy as np
+
+    offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    ok = np.diff(offs) == d
+    if col.null_count:
+        ok &= col.is_valid().to_numpy(zero_copy_only=False)
+    if col.values.null_count:
+        nulls = np.concatenate([[0], np.cumsum(col.values.is_null().to_numpy(zero_copy_only=False))])
+        ok &= nulls[offs[1:]] == nulls[offs[:-1]]
+    flat = col.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return ok, flat[offs[:-1][ok][:, None] + np.arange(d)[None, :]]
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """The one top-k: ``_sim`` DESC (NaN first, NULL last — both engines), ties on
+    vec_id, TOP_K rows, rounded like the oracle."""
+    return (
+        scored.orderBy(F.col("_sim").desc(), "vec_id")
+        .limit(TOP_K)
+        .select("vec_id", round_det(F.col("_sim"), 4).alias("sim"))
+    )
+
+
+def _rerank(cands: DataFrame, qv: list | None) -> DataFrame:
+    """The one exact re-rank: every candidate ``(vec_id, embedding)`` row scored by the
+    cosine fold against the literal query vector (no 1-row scan, broadcast or join),
+    then ``_top_k``."""
+    return _top_k(cands.select("vec_id", cosine_lit("embedding", qv).alias("_sim")))
 
 
 # ---------------------------------------------------------------------------
@@ -122,121 +216,73 @@ def _duck_cos(a: str, b: str) -> str:
 # 0.475 kernel; sf10 0.921 fold vs 0.550 kernel. Threshold: AT_SCALE["x2_ann_bruteforce"].
 
 
-def _bruteforce_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = catalog.table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(F.col("embedding").alias("qe"))
-    sim = cosine(F.col("embedding"), F.col("qe"))
-    return (
-        emb.crossJoin(F.broadcast(q))
-        .select("vec_id", sim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(TOP_K)
-        .select("vec_id", round_det(F.col("_sim"), 4).alias("sim"))
-    )
-
-
 def _bruteforce_np_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bit-identical vectorized form of the HOF fold (NOT the BLAS twin below).
+    """Bit-identical vectorized form of the fold.
 
     ``aggregate(zip_with(v,q,x*y), 0.0, acc+x)`` is a strict left fold in element
     order; numpy replicates that exact IEEE add sequence vectorized ACROSS rows by
     accumulating one DIMENSION at a time (``acc += m[:, d] * q[d]``) — each row
     sees the identical sequence of adds, so every cosine is bit-equal to the
     interpreted fold (asserted over all rows in tests/test_ann.py) and the DuckDB
-    oracle carries over unchanged. The BLAS matvec (x2_ann_bruteforce_np) is
-    faster still but sums in SIMD order — last-ulp diffs, rows-only gate."""
+    oracle carries over unchanged. Rows the fold scores NULL (``_gather``'s rule, a
+    zero norm) come out NULL, so they sort after every real sim downstream exactly
+    like the fold's NULLs: a bad row in a regenerated fixture degrades instead of
+    crashing (ADVICE r12)."""
     import numpy as np
 
-    emb = catalog.table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    row = emb.where(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
-    if row is None:
-        raise ValueError(f"embeddings fixture is missing query vec_id {QUERY_VEC_ID}")
-    q = np.asarray(row.embedding, dtype=np.float64)
-    q_norm = float(_py_dot(row.embedding, row.embedding)) ** 0.5
+    qv = _query_vec(spark, sf_dir)
+    clean = qv is not None and None not in qv
+    # a NULL query (element) makes every fold cosine NULL: width -1 keeps no row
+    d = len(qv) if clean else -1
+    q = np.asarray(qv if clean else [], dtype=np.float64)
+    q_norm = float(_py_dot(q, q)) ** 0.5
     k = TOP_K
 
-    d = len(q)
+    def first_k(ids, sims, null):
+        # the k first rows of ORDER BY _sim DESC, vec_id: NaN, then real, then NULL
+        cls = np.where(null, 2, np.where(np.isnan(sims), 0, 1))
+        sel = np.lexsort((ids, -np.where(cls == 1, sims, 0.0), cls))[:k]
+        return ids[sel], sims[sel], null[sel]
 
     def score(batches):
-        import numpy as np
         import pyarrow as pa
 
         ids = np.empty(0, dtype=np.int64)
         sims = np.empty(0, dtype=np.float64)
-        bad_ids = np.empty(0, dtype=np.int64)  # NULL-sim rows (fold semantics)
+        null = np.empty(0, dtype=bool)
         for b in batches:
-            col = b.column(1)
-            n = len(col)
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            # Rows the HOF fold maps to a NULL sim — NULL list, width != query's
-            # (zip_with pads with NULL), or a NULL element — are kept aside with
-            # sim NULL instead of raising (ADVICE r12): they sort after every
-            # real sim downstream exactly like the fold's NULLs, so a single bad
-            # row in a regenerated fixture degrades instead of crashing.
-            offs = col.offsets.to_numpy(zero_copy_only=False)
-            widths = np.diff(offs)
-            ok = widths == d
-            if col.null_count:
-                ok &= ~col.is_null().to_numpy(zero_copy_only=False)
-            if col.values.null_count:
-                cs = np.concatenate(
-                    [[0], np.cumsum(col.values.is_null().to_numpy(zero_copy_only=False))]
-                )
-                ok &= (cs[offs[1:] - offs[0]] - cs[offs[:-1] - offs[0]]) == 0
-            bids = b.column(0).to_numpy(zero_copy_only=False)
-            if not ok.all():
-                bad_ids = np.sort(np.concatenate([bad_ids, bids[~ok]]))[:k]
-                b = b.filter(pa.array(ok))
-                col = b.column(1).combine_chunks() if hasattr(b.column(1), "combine_chunks") else b.column(1)
-                n = len(col)
-                if n == 0:
-                    continue
-                offs = col.offsets.to_numpy(zero_copy_only=False)
-                bids = b.column(0).to_numpy(zero_copy_only=False)
-            flat = col.values.to_numpy(zero_copy_only=False)
-            m = flat[offs[0]:offs[-1]].astype(np.float64).reshape(n, d)
-            dq = np.zeros(n)
-            dv = np.zeros(n)
+            ok, m = _gather(b.column(1), d)
+            dq = np.zeros(len(m))
+            dv = np.zeros(len(m))
             for j in range(d):  # fold order: dimension-major == the HOF fold
                 c = m[:, j]
                 dq += c * q[j]
                 dv += c * c
-            # Zero-norm rows (denominator exactly 0) are NULL in the fold since
-            # the cosine() NULLIF guard (invariant 31e) — route them into the
-            # NULL pool; NaN from NaN *components* keeps a non-zero denominator
-            # and stays NaN (ranked first by both engines).
+            # zero-norm rows (denominator exactly 0) are NULL in the fold (the
+            # cosine() NULLIF guard, invariant 31e); NaN from NaN *components*
+            # keeps a non-zero denominator and stays NaN (ranked first)
             denom = np.sqrt(dv) * q_norm
-            zero = denom == 0.0
+            s = np.full(len(ok), np.nan)
             with np.errstate(invalid="ignore", divide="ignore"):
-                s = dq / denom
-            if zero.any():
-                bad_ids = np.sort(np.concatenate([bad_ids, bids[zero]]))[:k]
-                bids, s = bids[~zero], s[~zero]
-            ids = np.concatenate([ids, bids])
+                s[ok] = dq / denom
+            bad = ~ok
+            bad[ok] = denom == 0.0
+            ids = np.concatenate([ids, b.column(0).to_numpy(zero_copy_only=False)])
             sims = np.concatenate([sims, s])
+            null = np.concatenate([null, bad])
             if len(ids) > 8 * k:
-                key = -np.where(np.isnan(sims), np.inf, sims)  # NaN first, like desc
-                sel = np.lexsort((ids, key))[:k]
-                ids, sims = ids[sel], sims[sel]
+                ids, sims, null = first_k(ids, sims, null)
         if len(ids):
-            key = -np.where(np.isnan(sims), np.inf, sims)
-            sel = np.lexsort((ids, key))[:k]
-            ids, sims = ids[sel], sims[sel]
-        if len(ids) or len(bad_ids):
-            out_ids = pa.array(np.concatenate([ids, bad_ids]), pa.int64())
-            out_sims = pa.concat_arrays([
-                pa.array(sims, pa.float64()),
-                pa.array([None] * len(bad_ids), pa.float64()),
-            ])
-            yield pa.record_batch({"vec_id": out_ids, "_sim": out_sims})
+            ids, sims, null = first_k(ids, sims, null)
+            yield pa.record_batch({
+                "vec_id": pa.array(ids, pa.int64()),
+                "_sim": pa.array(sims, pa.float64(), mask=null),
+            })
 
-    part = emb.mapInArrow(score, "vec_id bigint, _sim double")
-    return (
-        part.orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(k)
-        .select("vec_id", round_det(F.col("_sim"), 4).alias("sim"))
-    )
+    emb = catalog.table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _top_k(emb.mapInArrow(score, "vec_id bigint, _sim double"))
 
 
 @register(
@@ -249,11 +295,12 @@ def _bruteforce_np_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT {TOP_K}
     """,
     doc=(
-        "Exact cosine top-k, size-adaptive (invariant 16): past "
+        "Exact cosine top-k, size-adaptive (invariant 16): the generator is the whole "
+        "table. Past "
         f"{AT_SCALE['x2_ann_bruteforce'][1]} footer rows the interpreted zip_with/aggregate "
-        "fold (~4.7 µs/row) yields to a mapInArrow numpy kernel whose "
-        "dimension-major accumulation reproduces the fold's IEEE add order "
-        "BIT-IDENTICALLY (same oracle, asserted per-row in tests/test_ann.py); "
+        "fold against the literal query vector (~4.7 µs/row) yields to a mapInArrow "
+        "numpy kernel whose dimension-major accumulation reproduces the fold's IEEE add "
+        "order BIT-IDENTICALLY (same oracle, asserted per-row in tests/test_ann.py); "
         "below it the fold avoids the Python worker spin-up. sf10 idle: 0.550 "
         "kernel vs 0.921 fold; sf1: 0.475 vs 0.411."
     ),
@@ -261,83 +308,7 @@ def _bruteforce_np_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     if at_scale("x2_ann_bruteforce", sf_dir):
         return _bruteforce_np_exact(spark, sf_dir)
-    return _bruteforce_hof(spark, sf_dir)
-
-
-@register(
-    "x2_ann_bruteforce_np",
-    None,  # rows-only: BLAS matmul sums in SIMD order — last-ulp diff vs the sequential oracle
-    doc=(
-        "Vectorized scale path for exact top-k: mapInArrow numpy kernel scores each "
-        "Arrow batch with one matvec (BLAS, C loop; zero-copy gather off the "
-        "ListArray values buffer) and keeps a per-partition top-k "
-        "heap, so the driver-side merge sees only k rows per partition — the same "
-        "economics as TakeOrderedAndProject but ~10-100x the interpreted HOF fold of "
-        "x2_ann_bruteforce, which remains the oracle-exact proof. Rows-only gate "
-        "(BLAS summation order differs from the sequential oracle in the last ulp)."
-    ),
-)
-def ann_bruteforce_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = catalog.table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    row = emb.where(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
-    if row is None:
-        raise ValueError(f"embeddings fixture is missing query vec_id {QUERY_VEC_ID}")
-    import numpy as np
-
-    q = np.asarray(row.embedding, dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    k = TOP_K
-
-    def topk_partition(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        def rank(s):
-            # the engines rank NaN sims FIRST under DESC (NaN compares greatest in
-            # Spark and DuckDB); np.lexsort on -s would bury NaN last instead
-            return -np.where(np.isnan(s), np.inf, s)
-
-        d = len(qn)
-        ids = np.empty(0, dtype=np.int64)
-        sims = np.empty(0, dtype=np.float64)
-        for b in batches:
-            col = b.column("embedding")
-            if len(col) == 0:
-                continue
-            # degrade NULL/off-width rows out of the candidate set exactly like
-            # the exact kernel (their fold sim is NULL -> never in the top-k).
-            # mapInArrow (round-14): the tile matrix gathers straight off the
-            # ListArray's contiguous values buffer (offsets are absolute into the
-            # shared child array); NULL elements arrive as NaN (to_numpy null
-            # fill) and rank first like every NaN sim.
-            offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            ok = np.diff(offs) == d
-            if col.null_count:
-                ok &= col.is_valid().to_numpy(zero_copy_only=False)
-            if not ok.any():
-                continue
-            flat = col.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            m = flat[offs[:-1][ok][:, None] + np.arange(d)[None, :]]
-            nrm = np.linalg.norm(m, axis=1)
-            s = (m @ qn) / np.where(nrm == 0.0, 1.0, nrm)
-            ids = np.concatenate(
-                [ids, b.column("vec_id").to_numpy(zero_copy_only=False)[ok]]
-            )
-            sims = np.concatenate([sims, s])
-            if len(ids) > 8 * k:  # cap scratch: re-prune between batches
-                order = np.lexsort((ids, rank(sims)))[:k]
-                ids, sims = ids[order], sims[order]
-        if len(ids):
-            order = np.lexsort((ids, rank(sims)))[:k]
-            yield pa.record_batch(
-                {
-                    "vec_id": pa.array(ids[order], pa.int64()),
-                    "sim": pa.array(np.floor(sims[order] * 10000 + 0.5) / 10000.0, pa.float64()),
-                }
-            )
-
-    part = emb.mapInArrow(topk_partition, "vec_id bigint, sim double")
-    return part.orderBy(F.col("sim").desc(), "vec_id").limit(k)
+    return _rerank(catalog.table(spark, sf_dir, "embeddings"), _query_vec(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -372,10 +343,7 @@ def _ivf_codebook(
     persisted build-pass artifact, so re-collecting it per query call was a wasted
     Spark job on every probe."""
     if memo_key is not None:
-        memo = getattr(emb.sparkSession, "_rubix_codebook_memo", None)
-        if memo is None:
-            memo = {}
-            emb.sparkSession._rubix_codebook_memo = memo
+        memo = catalog.session_memo(emb.sparkSession, "_rubix_codebook_memo")
         k = (memo_key, tuple(extra_ids))
         if k in memo:
             return memo[k]
@@ -508,22 +476,9 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange — tests/test_shuffle_ops.py); the assignment pass (_ivf_assign) runs only
     inside the one-time index build. Assignment equivalence with the oracle's
     cosine-argmax form is asserted via the oracle hash at every SF (tests/test_queries)."""
-    emb = catalog.table(spark, sf_dir, "embeddings")
-    cents, extras = _ivf_codebook(emb, (QUERY_VEC_ID,), memo_key=sf_dir)
-    qe = extras[QUERY_VEC_ID]
-    probe_cids = _probe_cids(cents, qe)
-    index = _ivf_index(spark, sf_dir)
-
-    # the query vector is already a driver value — score against it as a literal
-    # (same float32-widened doubles the oracle casts), no 1-row scan/broadcast/join
-    sim = cosine_lit("embedding", qe)
-    return (
-        index.where(F.col("cid").isin(probe_cids))
-        .select("vec_id", sim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(TOP_K)
-        .select("vec_id", round_det(F.col("_sim"), 4).alias("sim"))
-    )
+    cents, _ = _ivf_codebook(catalog.table(spark, sf_dir, "embeddings"), (), memo_key=sf_dir)
+    qv = _query_vec(spark, sf_dir)
+    return _rerank(_ivf_index(spark, sf_dir).where(F.col("cid").isin(_probe_cids(cents, qv))), qv)
 
 
 # ---------------------------------------------------------------------------
@@ -591,21 +546,20 @@ def _lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_col="bucket",
         n_buckets=32,
     )
-_DUCK_PLANES = f"""
-    SELECT p.i AS plane, j.i AS dim,
-           CAST(CAST(concat('0x', substr(md5(concat(p.i, '_', j.i)), 1, 8)) AS BIGINT) % 1000 - 500 AS DOUBLE) AS w
-    FROM (SELECT unnest(generate_series(0, {N_PLANES - 1})) AS i) p,
-         (SELECT unnest(generate_series(0, {DIM - 1})) AS i) j
-"""
-
-
-@register(
-    "x2_ann_lsh",
-    f"""
-    WITH planes AS ({_DUCK_PLANES}),
+# The oracle's sign-LSH keys and query bucket, shared by both LSH rows. A plane's
+# bit is 0 for a vector whose Spark dot is NULL (a NULL, ragged or NULL-element
+# embedding: IF(NULL > 0) is 0), where DuckDB's SUM would skip the NULLs.
+_DUCK_LSH_KEYS = f"""planes AS (
+        SELECT p.i AS plane, j.i AS dim,
+               CAST(CAST(concat('0x', substr(md5(concat(p.i, '_', j.i)), 1, 8)) AS BIGINT) % 1000 - 500 AS DOUBLE) AS w
+        FROM (SELECT unnest(generate_series(0, {N_PLANES - 1})) AS i) p,
+             (SELECT unnest(generate_series(0, {DIM - 1})) AS i) j
+    ),
     sigs AS (
         SELECT v.vec_id, pl.plane,
-               CASE WHEN SUM(CAST(v.embedding[pl.dim + 1] AS DOUBLE) * pl.w) > 0 THEN 1 ELSE 0 END AS bit
+               CASE WHEN SUM(CAST(v.embedding[pl.dim + 1] AS DOUBLE) * pl.w) > 0
+                         AND bool_and(len(v.embedding) = {DIM} AND list_count(v.embedding) = {DIM})
+                    THEN 1 ELSE 0 END AS bit
         FROM embeddings v, planes pl
         GROUP BY v.vec_id, pl.plane
     ),
@@ -616,7 +570,13 @@ _DUCK_PLANES = f"""
         SELECT k.bucket AS qb, v.embedding AS qe
         FROM keys k JOIN embeddings v ON v.vec_id = k.vec_id
         WHERE k.vec_id = {QUERY_VEC_ID}
-    )
+    )"""
+
+
+@register(
+    "x2_ann_lsh",
+    f"""
+    WITH {_DUCK_LSH_KEYS}
     SELECT v.vec_id, FLOOR(({_duck_cos('v.embedding', 'q.qe')}) * 10000 + 0.5) / 10000.0 AS sim
     FROM keys k JOIN embeddings v ON v.vec_id = k.vec_id, q
     WHERE k.bucket = q.qb
@@ -639,19 +599,8 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot folds, no posexplode/plane-join/shuffle) runs only inside the one-time index
     build. Sign bits match the oracle's SUM-based variant bit-for-bit (exact-in-double
     argument in ``_lsh_bucket``'s docstring)."""
-    emb = catalog.table(spark, sf_dir, "embeddings")
-    _, extras = _ivf_codebook(emb, (QUERY_VEC_ID,), memo_key=sf_dir)
-    qe = extras[QUERY_VEC_ID]
-    qb = _py_bucket(qe)
-    index = _lsh_index(spark, sf_dir)
-    sim = cosine_lit("embedding", qe)
-    return (
-        index.where(F.col("bucket") == F.lit(qb))
-        .select("vec_id", sim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(TOP_K)
-        .select("vec_id", round_det(F.col("_sim"), 4).alias("sim"))
-    )
+    qv = _query_vec(spark, sf_dir)
+    return _rerank(_lsh_index(spark, sf_dir).where(F.col("bucket") == F.lit(_py_bucket(qv))), qv)
 
 
 # ---------------------------------------------------------------------------
@@ -659,6 +608,29 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 N_QUERIES = 4
 KNN_K = 3
+
+
+def _knn_queries(emb: DataFrame) -> DataFrame:
+    return emb.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+    )
+
+
+def _knn_top(pairs: DataFrame) -> DataFrame:
+    """The one kNN tail over (qid, vec_id, embedding, qe) candidate pairs: drop the
+    self pair, score the cosine fold, keep each query's KNN_K best by ``s DESC,
+    vec_id`` (WindowGroupLimit), round like the oracle."""
+    from pyspark.sql.window import Window
+
+    scored = pairs.where(F.col("vec_id") != F.col("qid")).select(
+        "qid", "vec_id", cosine(F.col("embedding"), F.col("qe")).alias("s")
+    )
+    w = Window.partitionBy("qid").orderBy(F.col("s").desc(), "vec_id")
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= KNN_K)
+        .select("qid", "vec_id", round_det(F.col("s"), 4).alias("sim"))
+    )
 
 
 @register(
@@ -684,21 +656,8 @@ KNN_K = 3
     ),
 )
 def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     emb = catalog.table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
-    scored = (
-        emb.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine(F.col("embedding"), F.col("qe")).alias("s"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("s").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= KNN_K)
-        .select("qid", "vec_id", round_det(F.col("s"), 4).alias("sim"))
-    )
+    return _knn_top(emb.crossJoin(F.broadcast(_knn_queries(emb))))
 
 
 # ---------------------------------------------------------------------------
@@ -710,17 +669,16 @@ def _trained_kmeans(spark: SparkSession, sf_dir: str):
     The trained model is the OFFLINE index-build artifact (like the literal codebook of
     x2_ann_ivf) — memoized so probes/clustering queries don't re-fit; the fit itself
     dominates latency otherwise (~3 s vs ~1 s). Returns (model, vecs) where vecs carries
-    (vec_id, embedding, features).
+    (vec_id, embedding, features) for the ``_trainable`` rows only: a NULL embedding or
+    element fails ``array_to_vector`` (NOT_NULL_ASSERT_VIOLATION), a ragged or
+    non-finite row the fit.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    emb = catalog.table(spark, sf_dir, "embeddings")
+    emb = catalog.table(spark, sf_dir, "embeddings").where(_trainable())
     vecs = emb.select("vec_id", "embedding", array_to_vector("embedding").alias("features"))
-    memo = getattr(spark, "_rubix_kmeans_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_kmeans_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_kmeans_memo")
     model = memo.get(sf_dir)
     if model is None:
         # cache ONLY for the duration of the (eager) fit: KMeans re-scans its input
@@ -740,11 +698,23 @@ def _trained_kmeans(spark: SparkSession, sf_dir: str):
     return model, vecs
 
 
+def _trained_probe(spark: SparkSession, sf_dir: str, qv: list) -> DataFrame:
+    """(vec_id, embedding) rows of the NPROBE trained buckets nearest the query: the
+    probe set is ``_probe_cids`` over ``model.clusterCenters()``, driver-side."""
+    model, vecs = _trained_kmeans(spark, sf_dir)
+    cents = {i: [float(x) for x in c] for i, c in enumerate(model.clusterCenters())}
+    return (
+        model.transform(vecs)
+        .where(F.col("prediction").isin(_probe_cids(cents, qv)))
+        .select("vec_id", "embedding")
+    )
+
+
 @register(
     "x2_ann_ivf_trained",
     None,  # rows-only: k-means centroids are Spark-internal, not SQL-reproducible
     doc=(
-        "IVF with a *trained* codebook: pyspark.ml KMeans (k-means||, fixed seed) learns "
+        "IVF with a *trained* codebook: pyspark.ml KMeans (random init, fixed seed) learns "
         "16 centroids, vectors are assigned by the model, and the query probes its 4 "
         "nearest centroid buckets — the production build pass the deterministic-centroid "
         "variant (x2_ann_ivf) stands in for. Rows-only gate (centroids depend on MLlib "
@@ -752,30 +722,8 @@ def _trained_kmeans(spark: SparkSession, sf_dir: str):
     ),
 )
 def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    model, vecs = _trained_kmeans(spark, sf_dir)
-    emb = catalog.table(spark, sf_dir, "embeddings")
-    assigned = model.transform(vecs).withColumnRenamed("prediction", "cid")
-
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cid int, ce array<double>",
-    )
-    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(F.col("embedding").alias("qe"))
-    probes = (
-        centroids.crossJoin(F.broadcast(q))
-        .orderBy(cosine(F.col("ce"), F.col("qe")).desc(), "cid")
-        .limit(NPROBE)
-        .select("cid")
-    )
-    sim = cosine(F.col("embedding"), F.col("qe"))
-    return (
-        assigned.join(F.broadcast(probes), "cid")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", sim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(TOP_K)
-        .select("vec_id", round_det(F.col("_sim"), 4).alias("sim"))
-    )
+    qv = _query_vec(spark, sf_dir)
+    return _rerank(_trained_probe(spark, sf_dir, qv), qv)
 
 
 # ---------------------------------------------------------------------------
@@ -788,7 +736,8 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Corpus clustering over the embedding column: the trained KMeans codebook "
         "(shared with x2_ann_ivf_trained) partitions the corpus into topical buckets; "
         "output is per-cluster size plus exact min/max member ids (deterministic under "
-        "the fixed seed). The curation use: per-cluster sampling caps (domain balance), "
+        "the fixed seed); degenerate rows (NULL, ragged, NULL-element or non-finite "
+        "embeddings) are not clustered. The curation use: per-cluster sampling caps (domain balance), "
         "cluster-level dedup, and routing clusters to different filtering recipes. At "
         "100 TB assignment is a broadcast-codebook map-side transform — no shuffle "
         "until the per-cluster aggregate, which partial-aggregates."
@@ -823,21 +772,7 @@ _PROBE_MASKS = [0] + [1 << p for p in range(N_PLANES)] + [
 @register(
     "x2_ann_lsh_multiprobe",
     f"""
-    WITH planes AS ({_DUCK_PLANES}),
-    sigs AS (
-        SELECT v.vec_id, pl.plane,
-               CASE WHEN SUM(CAST(v.embedding[pl.dim + 1] AS DOUBLE) * pl.w) > 0 THEN 1 ELSE 0 END AS bit
-        FROM embeddings v, planes pl
-        GROUP BY v.vec_id, pl.plane
-    ),
-    keys AS (
-        SELECT vec_id, SUM(bit * (1 << plane)) AS bucket FROM sigs GROUP BY vec_id
-    ),
-    q AS (
-        SELECT k.bucket AS qb, v.embedding AS qe
-        FROM keys k JOIN embeddings v ON v.vec_id = k.vec_id
-        WHERE k.vec_id = {QUERY_VEC_ID}
-    )
+    WITH {_DUCK_LSH_KEYS}
     SELECT v.vec_id, FLOOR(({_duck_cos('v.embedding', 'q.qe')}) * 10000 + 0.5) / 10000.0 AS sim
     FROM keys k JOIN embeddings v ON v.vec_id = k.vec_id, q
     WHERE xor(k.bucket, q.qb) IN ({", ".join(str(m) for m in _PROBE_MASKS)})
@@ -855,19 +790,10 @@ _PROBE_MASKS = [0] + [1 << p for p in range(N_PLANES)] + [
     ),
 )
 def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = catalog.table(spark, sf_dir, "embeddings")
-    _, extras = _ivf_codebook(emb, (QUERY_VEC_ID,), memo_key=sf_dir)
-    qe = extras[QUERY_VEC_ID]
-    qb = _py_bucket(qe)
-    index = _lsh_index(spark, sf_dir)
-    sim = cosine_lit("embedding", qe)
-    return (
-        index.where(F.col("bucket").isin([qb ^ m for m in _PROBE_MASKS]))
-        .select("vec_id", sim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(TOP_K)
-        .select("vec_id", round_det(F.col("_sim"), 4).alias("sim"))
-    )
+    qv = _query_vec(spark, sf_dir)
+    qb = _py_bucket(qv)
+    probes = [qb ^ m for m in _PROBE_MASKS]
+    return _rerank(_lsh_index(spark, sf_dir).where(F.col("bucket").isin(probes)), qv)
 
 
 # ---------------------------------------------------------------------------
@@ -916,32 +842,18 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     emb = catalog.table(spark, sf_dir, "embeddings")
     cents, extras = _ivf_codebook(emb, tuple(range(N_QUERIES)), memo_key=sf_dir)
     assign = _ivf_index(spark, sf_dir)
     probe_pairs = [(qid, cid) for qid, qe in extras.items() for cid in _probe_cids(cents, qe)]
     probes = emb.sparkSession.createDataFrame(probe_pairs, "qid bigint, cid int")
-
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    scored = (
+    return _knn_top(
         # the isin duplicate of the join condition is what bucket-prunes the index
         # scan (pruning keys off filters, not join keys); the join then fans out
         # per-query inside the pruned buckets only
         assign.where(F.col("cid").isin(sorted({cid for _, cid in probe_pairs})))
         .join(F.broadcast(probes), "cid")
-        .join(F.broadcast(q), "qid")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine(F.col("embedding"), F.col("qe")).alias("s"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("s").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= KNN_K)
-        .select("qid", "vec_id", round_det(F.col("s"), 4).alias("sim"))
+        .join(F.broadcast(_knn_queries(emb)), "qid")
     )
 
 
@@ -1011,34 +923,26 @@ PQ_TRAIN_N = 512  # training sample (first N by vec_id) — bounded driver artif
 PQ_RERANK = 64    # exact-cosine re-rank depth
 
 
-def _pq_train(emb: DataFrame, memo_key: str | None = None):
+def _pq_train(spark: SparkSession, sf_dir: str):
     """Per-subspace codebooks: ndarray [M, KS, dim/M]. Deterministic k-means:
     init = every (n_train/KS)-th training row, 5 Lloyd iterations, argmin ties to the
     lower code. Memoized per (session, sf_dir) — this IS the offline build pass."""
     import numpy as np
 
-    spark = emb.sparkSession
-    if memo_key is not None:
-        memo = getattr(spark, "_rubix_pq_memo", None)
-        if memo is None:
-            memo = {}
-            spark._rubix_pq_memo = memo
-        if memo_key in memo:
-            return memo[memo_key]
+    memo = catalog.session_memo(spark, "_rubix_pq_memo")
+    if sf_dir in memo:
+        return memo[sf_dir]
+    # the sample keeps only _trainable rows (np.array on a ragged/None
+    # collection crashes the index build — r13 review): DIM wide is the corpus
+    # contract (TESTDATA.md fixed-width embeddings)
     rows = (
-        emb.where(F.col("vec_id") < PQ_TRAIN_N).select("vec_id", "embedding")
-        .orderBy("vec_id").collect()
+        catalog.table(spark, sf_dir, "embeddings")
+        .where((F.col("vec_id") < PQ_TRAIN_N) & _trainable())
+        .select("vec_id", "embedding").orderBy("vec_id").collect()
     )
-    # training degrades NULL/off-width rows out of the sample (np.array on a
-    # ragged/None collection crashes the index build — r13 review); the modal
-    # width is the corpus contract (TESTDATA.md fixed-width embeddings)
-    vecs = [r.embedding for r in rows if r.embedding is not None]
-    if not vecs:
+    if not rows:
         raise ValueError("PQ training sample has no usable embeddings")
-    from collections import Counter
-
-    width = Counter(len(v) for v in vecs).most_common(1)[0][0]
-    x = np.array([v for v in vecs if len(v) == width], dtype=np.float64)
+    x = np.array([r.embedding for r in rows], dtype=np.float64)
     n, dim = x.shape
     dsub = dim // PQ_M
     books = np.empty((PQ_M, PQ_KS, dsub))
@@ -1053,8 +957,7 @@ def _pq_train(emb: DataFrame, memo_key: str | None = None):
                 if len(sel):
                     cents[j] = sel.mean(axis=0)
         books[m] = cents
-    if memo_key is not None:
-        memo[memo_key] = books
+    memo[sf_dir] = books
     return books
 
 
@@ -1078,45 +981,23 @@ def _pq_train(emb: DataFrame, memo_key: str | None = None):
 def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    emb = catalog.table(spark, sf_dir, "embeddings")
-    # coarse stage: the TRAINED codebook (shared offline artifact with
-    # x2_ann_ivf_trained) — real IVF-PQ trains both quantizer levels
-    model, vecs = _trained_kmeans(spark, sf_dir)
-    books = _pq_train(emb, memo_key=sf_dir)
-    row = emb.where(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
-    if row is None:
-        raise ValueError(f"embeddings fixture is missing query vec_id {QUERY_VEC_ID}")
-    qe = np.array(row.embedding, dtype=np.float64)
-    cc = {i: [float(x) for x in c] for i, c in enumerate(model.clusterCenters())}
-    probe = _probe_cids(cc, qe.tolist())
-
+    qv = _query_vec(spark, sf_dir)
+    books = _pq_train(spark, sf_dir)
     dsub = books.shape[2]
     # ADC tables: lut[m][j] = dot(q_m, codebook[m][j]) -> approx dot(q, x) = sum of lookups
-    lut = np.einsum("mkd,md->mk", books, qe.reshape(PQ_M, dsub))
-
-    d_full = PQ_M * dsub
+    lut = np.einsum("mkd,md->mk", books, np.asarray(qv, dtype=np.float64).reshape(PQ_M, dsub))
 
     def score(batches):
         import pyarrow as pa
 
         for b in batches:
-            col = b.column("embedding")
-            n = len(col)
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            # mapInArrow (round-14): zero-copy gather off the ListArray values
-            # buffer (offsets absolute); off-width/NULL rows leave the candidate
-            # set (the pandas form crashed on them instead)
-            offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            ok = np.diff(offs) == d_full
-            if col.null_count:
-                ok &= col.is_valid().to_numpy(zero_copy_only=False)
+            # rows the fold scores NULL leave the candidate set (_gather)
+            ok, x = _gather(b.column("embedding"), PQ_M * dsub)
             if not ok.any():
                 continue
-            flat = col.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            x = flat[offs[:-1][ok][:, None] + np.arange(d_full)[None, :]]
-            n = len(x)
-            codes = np.empty((n, PQ_M), dtype=np.uint8)
+            codes = np.empty((len(x), PQ_M), dtype=np.uint8)
             for m in range(PQ_M):
                 xs = x[:, m * dsub:(m + 1) * dsub]
                 d2 = ((xs[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
@@ -1133,20 +1014,14 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    assigned = model.transform(vecs).withColumnRenamed("prediction", "cid")
+    # coarse stage: the TRAINED codebook's probes (shared offline artifact with
+    # x2_ann_ivf_trained) — real IVF-PQ trains both quantizer levels
     cand = (
-        assigned.where(F.col("cid").isin([int(c) for c in probe]))
-        .select("vec_id", "embedding")
+        _trained_probe(spark, sf_dir, qv)
         .mapInArrow(score, schema="vec_id bigint, approx double")
         .orderBy(F.col("approx").desc(), "vec_id")
         .limit(PQ_RERANK)
     )
     # exact re-rank of the surviving candidates (broadcast id list back onto the table)
-    sim = cosine_lit("embedding", qe.tolist())
-    return (
-        emb.join(F.broadcast(cand.select("vec_id")), "vec_id")
-        .select("vec_id", sim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(TOP_K)
-        .select("vec_id", round_det(F.col("_sim"), 4).alias("sim"))
-    )
+    emb = catalog.table(spark, sf_dir, "embeddings")
+    return _rerank(emb.join(F.broadcast(cand.select("vec_id")), "vec_id"), qv)

@@ -47,14 +47,3 @@ def salted_join(
     joined = salted_big.join(exploded_small, [on, "_salt"], how)
     return joined.drop("_salt")
 
-
-def salted_count(big: DataFrame, on: str, n_salts: int = 8) -> DataFrame:
-    """Skew-robust groupBy count: two-phase aggregate via (key, salt) then key.
-
-    Spark's partial aggregation already does this when the map side combines well; the
-    explicit form is for keys whose groups are too large even after partials (e.g.
-    collect_list-style aggregates).
-    """
-    salted = big.withColumn("_salt", (F.rand(seed=42) * n_salts).cast("int"))
-    partial = salted.groupBy(on, "_salt").agg(F.count("*").alias("_c"))
-    return partial.groupBy(on).agg(F.sum("_c").alias("cnt"))

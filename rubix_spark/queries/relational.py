@@ -791,10 +791,7 @@ def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rubix_spark.sources.stats import footer_topk_cutoff
 
     orders = catalog.table(spark, sf_dir, "orders")
-    memo = getattr(spark, "_rubix_topk_cutoff_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_topk_cutoff_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_topk_cutoff_memo")
     key = (sf_dir.rstrip("/"), "orders", "o_orderkey", 1000)
     if key not in memo:
         cut = footer_topk_cutoff(f"{sf_dir.rstrip('/')}/orders.parquet",

@@ -20,6 +20,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rubix_spark import catalog
+
 
 def write_bucketed(
     df: DataFrame,
@@ -132,10 +134,7 @@ def persisted_bucketed(
     # pruning. Scans that use neither still get one task per bucket — the layout's
     # intended granularity.
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    memo = getattr(spark, "_rubix_bucketed_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_bucketed_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_bucketed_memo")
     src_key = source_path.rstrip("/")
     # sort spec is part of the memo key too — same-session callers with a
     # different sort_col must not be served the first spec's frame (ADVICE r10)
@@ -300,7 +299,6 @@ def _denorm_build(spark: SparkSession, sf_dir: str, name: str):
     """Build fn + extra fingerprint sources for the widened fact layouts."""
     from pyspark.sql import functions as F
 
-    from rubix_spark import catalog
     from rubix_spark.sources.dictionaries import brand_dictionary, brand_probe
 
     root = sf_dir.rstrip("/")
@@ -375,8 +373,6 @@ def events_user_layout(spark: SparkSession, sf_dir: str, n_buckets: int = 32) ->
     dominant cost (r9 verdict weak row)."""
     from pyspark.sql import functions as F
 
-    from rubix_spark import catalog
-
     def build():
         ev = catalog.table(spark, sf_dir, "events")
         return ev.withColumn("us", F.unix_micros(F.col("ts").cast("timestamp")))
@@ -404,8 +400,6 @@ def bucketed_table(
 
     The orderkey FACT layouts are denormalized (see _denorm_build): they carry the
     materialized dimension keys in addition to the fixture columns."""
-    from rubix_spark import catalog
-
     if (name, bucket_col) in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
         build, extras = _denorm_build(spark, sf_dir, name)
         return persisted_bucketed(

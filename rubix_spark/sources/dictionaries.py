@@ -32,10 +32,7 @@ def brand_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted brand list (== dense_rank over brand) — a REBUILT layout and a fresh
     session's attach join always agree. brand_key is a FRESH name (invariant 12
     — both dictionary consumers derive from the same part scan)."""
-    memo = getattr(spark, "_rubix_brand_dict_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_brand_dict_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_brand_dict_memo")
     key = sf_dir.rstrip("/")
     if key not in memo:
         rows = (
@@ -83,10 +80,7 @@ def column_dictionary(spark: SparkSession, sf_dir: str, table: str, col: str) ->
     and the sort is total). Collected once per (session, sf_dir, table, col) and
     memoized; ingest pays it untimed, a query session pays one narrow distinct
     scan on first use (the session stat-store contract)."""
-    memo = getattr(spark, "_rubix_col_dict_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_col_dict_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_col_dict_memo")
     key = (sf_dir.rstrip("/"), table, col)
     if key not in memo:
         rows = catalog.table(spark, sf_dir, table).select(col).distinct().collect()
@@ -124,10 +118,7 @@ def region_nationkeys(spark: SparkSession, sf_dir: str, regions: tuple[str, ...]
     that pushes a region predicate INTO a denormalized fact scan (q4/q29 over the
     round-10 layouts). <=25-element collect, memoized per (session, sf_dir,
     regions); sorted so downstream In() filters are deterministic."""
-    memo = getattr(spark, "_rubix_region_nk_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_region_nk_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_region_nk_memo")
     key = (sf_dir.rstrip("/"), tuple(sorted(regions)))
     if key not in memo:
         nation = catalog.table(spark, sf_dir, "nation")

@@ -41,6 +41,7 @@ Untrusted columns are returned in ``scan`` and must be aggregated by the caller.
 
 from __future__ import annotations
 
+from rubix_spark import catalog
 from rubix_spark.cache.footer import file_meta, parquet_files
 
 _STR_TRUST_LEN = 8
@@ -175,10 +176,7 @@ def catalog_max(spark, table: str, cols: list[str]) -> dict[str, float]:
     (measured 0.08 → 0.50 s at sf1 un-memoized). Absent stats memoize too, so an
     unanalyzed column never re-pays the probe.
     """
-    memo = getattr(spark, "_rubix_catalog_max_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_catalog_max_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_catalog_max_memo")
     out: dict[str, float] = {}
     for col in cols:
         key = (table, col)
@@ -224,10 +222,7 @@ def session_float_max(spark, sf_dir: str, table: str, cols: list[str], df) -> di
         return {}
     from pyspark.sql import functions as F
 
-    memo = getattr(spark, "_rubix_float_max_memo", None)
-    if memo is None:
-        memo = {}
-        spark._rubix_float_max_memo = memo
+    memo = catalog.session_memo(spark, "_rubix_float_max_memo")
     key = (sf_dir.rstrip("/"), table)
     cached = memo.get(key) or {}
     missing = [c for c in cols if c not in cached]

@@ -154,6 +154,78 @@ def test_embedding_ops_match_oracle_on_adversarial_embeddings(
     _assert_parity(spark, name, adversarial_emb_dir, ("embeddings",))
 
 
+@pytest.fixture(scope="module")
+def degenerate_emb_dir(tmp_path_factory, adversarial_emb_dir):
+    """The adversarial embeddings (zero-norm row 70, NaN components in rows 5 and
+    80, clean query rows 0-3) plus a NULL element (row 30), a NULL embedding (row
+    31) and a ragged 62-wide row (32), all outside the 16-row IVF codebook."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(f"{adversarial_emb_dir}/embeddings.parquet")
+    rows = tbl.column("embedding").to_pylist()
+    rows[30][7] = None
+    rows[31] = None
+    rows[32] = rows[32][:62]
+    d = tmp_path_factory.mktemp("degenemb")
+    tbl = tbl.set_column(1, "embedding", pa.array(rows, pa.list_(pa.float32())))
+    pq.write_table(tbl, str(d / "embeddings.parquet"))
+    return str(d), rows
+
+
+def _fold_class(e, q) -> int:
+    """0 NaN, 1 real, 2 NULL: the class of the fold's cosine(e, q)."""
+    import math
+
+    if e is None or len(e) != len(q) or None in e:
+        return 2
+    denom = math.sqrt(sum(x * x for x in e)) * math.sqrt(sum(x * x for x in q))
+    if denom == 0.0:
+        return 2
+    return 0 if math.isnan(sum(x * y for x, y in zip(e, q)) / denom) else 1
+
+
+@pytest.mark.parametrize("name,kernel", [
+    ("x2_ann_bruteforce", False),
+    ("x2_ann_bruteforce", True),
+    ("x2_ann_ivf", False),
+    ("x2_ann_lsh", False),
+    ("x2_ann_lsh_multiprobe", False),
+    ("x2_ann_ivf_trained", False),
+    ("x2_ann_ivfpq", False),
+    ("x2_knn_join", False),
+    ("x2_knn_join_ivf", False),
+])
+def test_x2_rows_share_one_degenerate_vector_contract(
+    spark, degenerate_emb_dir, force_at_scale, name, kernel
+):
+    """One contract for every x2 ranking row: no crash; each returned sim is NULL
+    exactly when the fold's cosine is NULL and NaN exactly when it is NaN, and a
+    top-k ranks NaN first and NULL last (both engines); the oracle-bearing rows
+    still equal their DuckDB oracle."""
+    import math
+
+    d, rows = degenerate_emb_dir
+    if kernel:
+        force_at_scale(name)
+    got = [tuple(r) for r in REG[name].builder(spark, d).collect()]
+    assert got
+    for *qid, vec_id, sim in got:
+        cls = _fold_class(rows[vec_id], rows[qid[0] if qid else 0])
+        assert cls == (2 if sim is None else 0 if math.isnan(sim) else 1), (vec_id, sim)
+    if not name.startswith("x2_knn"):
+        classes = [_fold_class(rows[v], rows[0]) for v, _ in got]
+        assert classes == sorted(classes), got
+    if REG[name].oracle is not None:
+        _assert_parity(spark, name, d, ("embeddings",))
+
+
+def test_corpus_cluster_leaves_degenerate_rows_out(spark, degenerate_emb_dir):
+    d, rows = degenerate_emb_dir
+    got = REG["x2_corpus_cluster"].builder(spark, d).collect()
+    assert sum(r.n_docs for r in got) == len(rows) - 5  # NaN rows 5, 80 and rows 30-32
+
+
 def test_zero_norm_centroid_matches_oracle(spark, tmp_path_factory):
     """A zero vector INSIDE the codebook (first N_CENTROIDS rows): the oracle's
     cos(v, zero-centroid) is NULL and never wins the assignment ROW_NUMBER;

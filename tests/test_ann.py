@@ -1,13 +1,13 @@
 """ANN-specific correctness beyond the oracle gate.
 
-- the BLAS brute-force twin must agree with the oracle-exact HOF variant (same top-k
-  ids; sims equal at the rounded precision) — the twin is the 100 TB scoring path, the
-  HOF variant is the proof.
+- the size-adaptive brute-force kernel must reproduce the interpreted fold
+  bit-for-bit (every raw cosine, and the forced-branch top-k), also on NULL / ragged /
+  NULL-element rows — the kernel is the at-scale scoring path, the fold is the proof.
 - recall realism: the driver's embeddings are uniform random (no cluster structure),
   where any bucketed ANN sits at the nprobe/nlist floor by construction. Real corpora
   cluster; a mixture-of-Gaussians fixture here asserts that multiprobe-LSH and
   trained-IVF actually recall ≥ 0.8 of the exact top-10 when structure exists — i.e.
-  the parameters (NPROBE=4/16 lists, 8 planes + Hamming≤1 probing) are sound, not just
+  the parameters (NPROBE=4/16 lists, 8 planes + Hamming≤2 probing) are sound, not just
   plumbed.
 """
 
@@ -19,7 +19,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from rubix_spark.queries import AT_SCALE, load_all
-from tests.conftest import SF_SMOKE, SF_T2
+from tests.conftest import SF_T2
 
 REG = load_all()
 
@@ -74,10 +74,6 @@ def test_trained_ivf_recall_on_clustered(spark, clustered_dir):
     assert r >= 0.8, f"trained-IVF recall@10 = {r}"
 
 
-def test_bruteforce_np_is_exact_on_clustered(spark, clustered_dir):
-    assert _recall_at_10(spark, "x2_ann_bruteforce_np", clustered_dir) == 1.0
-
-
 def test_ivf_codebook_missing_ids_is_explicit(spark):
     """A fixture without the query vector must fail with the explicit ValueError, not
     an opaque KeyError (ADVICE r2)."""
@@ -117,16 +113,6 @@ def test_np_exact_branch_is_bit_identical(spark, force_at_scale):
     force_at_scale("x2_ann_bruteforce")
     forced = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce"].builder(spark, SF_T2).collect()]
     assert base == forced
-
-
-def test_bruteforce_np_matches_hof_exact(spark):
-    for sf in (SF_SMOKE, SF_T2):
-        hof = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce"].builder(spark, sf).collect()]
-        blas = [(r.vec_id, r.sim) for r in REG["x2_ann_bruteforce_np"].builder(spark, sf).collect()]
-        assert len(hof) == len(blas) == 10
-        assert [v for v, _ in hof] == [v for v, _ in blas]
-        for (_, a), (_, b) in zip(hof, blas):
-            assert abs(a - b) <= 1e-4, (a, b)  # rounded to 4 places; ulp drift only
 
 
 def test_ivfpq_recall_on_clustered(spark, clustered_dir):

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rubix_spark import catalog
-from rubix_spark.ops.skew import salted_count, salted_join
+from rubix_spark.ops.skew import salted_join
 from rubix_spark.ops.upsert import merge_upsert, scd2_apply
 from rubix_spark.sources.bucketing import bucketed_join, write_bucketed
 from tests.conftest import SF_SMOKE
@@ -227,13 +227,6 @@ def test_salted_join_matches_plain_join(spark):
         nation.withColumnRenamed("n_nationkey", "k"),
         on="k",
     ).select("c_custkey", "n_name")
-    assert _rows(salted) == _rows(plain)
-
-
-def test_salted_count_matches_plain(spark):
-    events = catalog.table(spark, SF_SMOKE, "events")
-    plain = events.groupBy("event_type").agg(F.count("*").alias("cnt"))
-    salted = salted_count(events, "event_type")
     assert _rows(salted) == _rows(plain)
 
 
