@@ -557,11 +557,12 @@ _DUCK_LSH_KEYS = f"""planes AS (
     ),
     sigs AS (
         SELECT v.vec_id, pl.plane,
-               CASE WHEN SUM(CAST(v.embedding[pl.dim + 1] AS DOUBLE) * pl.w) > 0
-                         AND bool_and(len(v.embedding) = {DIM} AND list_count(v.embedding) = {DIM})
+               CASE WHEN v.wf AND SUM(CAST(v.embedding[pl.dim + 1] AS DOUBLE) * pl.w) > 0
                     THEN 1 ELSE 0 END AS bit
-        FROM embeddings v, planes pl
-        GROUP BY v.vec_id, pl.plane
+        FROM (SELECT vec_id, embedding,
+                     len(embedding) = {DIM} AND list_count(embedding) = {DIM} AS wf
+              FROM embeddings) v, planes pl
+        GROUP BY v.vec_id, pl.plane, v.wf
     ),
     keys AS (
         SELECT vec_id, SUM(bit * (1 << plane)) AS bucket FROM sigs GROUP BY vec_id
