@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 
 from rubix_spark import catalog
 from rubix_spark.fns import duck_sum_fast, money_from_units, money_sum_fast
-from rubix_spark.queries import REGISTRY, at_scale, register
+from rubix_spark.queries import REGISTRY, register
 
 _ASOF_ORACLE = """
     WITH p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
@@ -204,10 +204,46 @@ _RANGE_ORACLE = f"""
     """
 
 
-def _range_join_body(base: DataFrame) -> DataFrame:
-    """The RANGE-frame window over a (event_id, user_id, us, event_type, cv, cf)
-    stream — shared by the shuffle and layout forms; [p_us - WINDOW, p_us) on
-    integer micros == rangeBetween(-WINDOW, -1)."""
+@register(
+    "x7_range_join",
+    _RANGE_ORACLE,
+    doc=(
+        "Range (interval) join: each purchase gathers the same user's clicks from the "
+        "preceding 10 minutes. The oracle states it as the theta join; the engine runs "
+        "it as ONE RANGE-frame window over the unioned event stream (round-7, the "
+        "q9/q18 lesson applied to interval joins) — and since round-11 the stream is "
+        "the WRITTEN user-bucketed (user_id, us)-sorted events layout "
+        "(sources/bucketing.events_user_layout), so the window consumes the bucket "
+        "partitioning and two-level sort directly: ZERO Exchange, ZERO Sort at any "
+        "scale (the per-run user_id shuffle of the whole stream was this row's "
+        "dominant cost — r9/r10 verdict weak row). Measured vs the raw-scan window "
+        "(docs/PROBES.md proto_x7_layout): sf0.1 0.250 vs 0.354, sf1 0.303 vs 0.468, "
+        "sf10 0.426 vs 1.074 — no inversion. Click values sum as long "
+        "ten-thousandths (exact, the dec() contract)."
+    ),
+)
+def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from rubix_spark.sources.bucketing import events_user_layout
+
+    ev = events_user_layout(spark, sf_dir)
+    # cv is NULL for every non-contributing row (r12 s2 — was otherwise(0)): SUM
+    # skips NULLs, so the window sum carries EXACT SQL semantics for free — all
+    # matched clicks NULL-valued -> sv NULL -> click_v NULL, matching the oracle
+    # (adversarial-events parity: the 0-fold read 0.0 there). cf stays 0/1
+    # non-null because the n_clicks > 0 filter needs a non-null count.
+    click = F.col("event_type") == "click"
+    has_v = click & F.col("value").isNotNull()
+    # us is materialized at ingest, NULL iff ts is NULL: Spark puts all NULL order
+    # values in ONE shared window frame, so a NULL-ts purchase would count NULL-ts
+    # clicks — the oracle's theta join drops them (ADVICE r7)
+    base = ev.where(
+        F.col("event_type").isin("click", "purchase") & F.col("us").isNotNull()
+    ).select(
+        "event_id", "user_id", F.col("us").alias("us"), "event_type",
+        F.when(has_v, F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long")).alias("cv"),
+        F.when(click, 1).otherwise(0).alias("cf"),
+    )
+    # [p_us - WINDOW, p_us) on integer micros == rangeBetween(-WINDOW, -1)
     w = Window.partitionBy("user_id").orderBy("us").rangeBetween(-_WINDOW_US, -1)
     # NULL keys/timestamps never join (SQL semantics; the oracle is an INNER
     # join on user_id with ts comparisons) — without this the window's NULL
@@ -226,78 +262,6 @@ def _range_join_body(base: DataFrame) -> DataFrame:
             money_from_units(F.col("sv"), "click_v"),
         )
     )
-
-
-def _range_cols(us_col):
-    # cv is NULL for every non-contributing row (r12 s2 — was otherwise(0)):
-    # SUM skips NULLs, so the window sum carries EXACT SQL semantics for free —
-    # all matched clicks NULL-valued -> sv NULL -> click_v NULL, matching the
-    # oracle (adversarial-events parity: the 0-fold read 0.0 there). cf stays
-    # 0/1 non-null because the n_clicks > 0 filter needs a non-null count.
-    click = F.col("event_type") == "click"
-    has_v = click & F.col("value").isNotNull()
-    return [
-        "event_id", "user_id", us_col.alias("us"), "event_type",
-        F.when(has_v, F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long")).alias("cv"),
-        F.when(click, 1).otherwise(0).alias("cf"),
-    ]
-
-
-@register(
-    "x7_range_join",
-    _RANGE_ORACLE,
-    doc=(
-        "Range (interval) join: each purchase gathers the same user's clicks from the "
-        "preceding 10 minutes. The oracle states it as the theta join; the engine runs "
-        "it as ONE RANGE-frame window over the unioned event stream (round-7, the "
-        "q9/q18 lesson applied to interval joins) — and since round-11 the stream is "
-        "the WRITTEN user-bucketed (user_id, us)-sorted events layout "
-        "(sources/bucketing.events_user_layout), so the window consumes the bucket "
-        "partitioning and two-level sort directly: ZERO Exchange, ZERO Sort at any "
-        "scale (the per-run user_id shuffle of the whole stream was this row's "
-        "dominant cost — r9/r10 verdict weak row). Measured (docs/PROBES.md proto_x7_layout): "
-        "sf0.1 0.250 vs 0.354 shuffle, sf1 0.303 vs 0.468, sf10 0.426 vs 1.074 — no "
-        "inversion, so the size branch exists only to keep the shuffle body "
-        "driver-oracle-exercised at sf0.01 (AT_SCALE x7_range_join: 50k events rows; the layout "
-        "branch is oracle-pinned by tests/test_denorm_layout.py). Click values sum "
-        "as long ten-thousandths (exact, the dec() contract)."
-    ),
-)
-def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from rubix_spark.sources.bucketing import events_user_layout
-
-    if not at_scale("x7_range_join", sf_dir):
-        return REGISTRY["x7_range_join_shuffle"].builder(spark, sf_dir)
-    ev = events_user_layout(spark, sf_dir)
-    # us is materialized at ingest; NULL iff ts is NULL (see the shuffle form's
-    # NULL-frame note — ADVICE r7)
-    base = ev.where(
-        F.col("event_type").isin("click", "purchase") & F.col("us").isNotNull()
-    ).select(*_range_cols(F.col("us")))
-    return _range_join_body(base)
-
-
-@register(
-    "x7_range_join_shuffle",
-    _RANGE_ORACLE,
-    doc=(
-        "Layout-less ablation of x7_range_join (the graded form until round-10): the "
-        "same RANGE-frame window, but over the raw events scan — both event classes "
-        "shuffle ONCE on user_id per run. Holds the sf0.01 driver-correctness slot "
-        "via the graded row's size branch."
-    ),
-)
-def range_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = catalog.table(spark, sf_dir, "events")
-    # ts is TIMESTAMP_NTZ; the session tz is pinned UTC, so the cast is lossless.
-    # ts.isNotNull: Spark puts all NULL order values in ONE shared window frame, so a
-    # NULL-ts purchase would count NULL-ts clicks — the oracle's theta join and the
-    # bucketized form both drop them (ADVICE r7)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    base = ev.where(
-        F.col("event_type").isin("click", "purchase") & F.col("ts").isNotNull()
-    ).select(*_range_cols(us))
-    return _range_join_body(base)
 
 
 @register(

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from rubix_spark import catalog
 from rubix_spark.fns import round_det
 from rubix_spark.ops import _tok
-from rubix_spark.queries import REGISTRY, at_scale, register, table_rows
+from rubix_spark.queries import REGISTRY, register, table_rows
 
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
@@ -385,6 +385,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # best SQL-expressible form; the BLAS twin (x1_embedding_neardup_np) is the
 # scale path.
 from rubix_spark.ops.similarity import DUCK_DOT as _DUCK_DOT  # noqa: E402
+from rubix_spark.ops.similarity import _DUCK_FOLD  # noqa: E402
 from rubix_spark.ops.similarity import dot as _dot  # noqa: E402
 
 
@@ -397,13 +398,16 @@ from rubix_spark.ops.similarity import dot as _dot  # noqa: E402
         FROM embeddings
     ),
     e AS (
-        SELECT vec_id, label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE) / nrm) AS ne
-        FROM n
+        SELECT vec_id, label, ne, list_count(ne) = len(ne) AS ok
+        FROM (SELECT vec_id, label,
+                     list_transform(embedding, x -> CAST(x AS DOUBLE) / nrm) AS ne
+              FROM n)
     ),
     scored AS (
+        -- DUCK_DOT's guard with its NULL-element half computed once per vector
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               list_aggregate(list_transform(list_zip(a.ne, b.ne), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), 'sum') AS s
+               CASE WHEN a.ok AND b.ok AND len(a.ne) = len(b.ne)
+                    THEN {_DUCK_FOLD.format(a='a.ne', b='b.ne')} END AS s
         FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
     )
     SELECT vec_a, vec_b, FLOOR(s * 10000 + 0.5) / 10000.0 AS sim
@@ -719,23 +723,14 @@ def _hub_components_from_bands(bands: DataFrame) -> DataFrame:
         "the bucket hubs only and members attach by min-hub in one join — half the "
         "diameter, |hubs| labels instead of |docs| (sf10 protocol row 9.52 -> "
         "3.57 s; equivalences in the _hub_components docstring, pinned vs pairs/"
-        "star CC in tests/test_denorm_layout). Below the AT_SCALE "
-        "x1_dedup_components threshold (2000 documents rows) the "
-        "all-pairs list stays (driver's sf0.01 scale keeps both bodies "
-        "oracle-exercised). Oracle restates it as a recursive-CTE transitive "
-        "closure over the clique pairs (equivalent closure)."
+        "star CC in tests/test_denorm_layout). Same-session A/B, hub contraction "
+        "wins at every timed point: sf0.1 0.66 vs 0.96 s (all-pairs list), sf1 "
+        "2.25 vs 3.03 (star), sf10 6.98 vs 13.11 (star). Oracle restates it as a "
+        "recursive-CTE transitive closure over the clique pairs (equivalent "
+        "closure)."
     ),
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Size-adaptive (invariant 16, re-measured r12 session 2): hub contraction
-    # wins at EVERY timed point — same-session A/B vs the previous branch winner:
-    # sf0.1 0.66 vs 0.96 pairs, sf1 2.25 vs 3.03 star, sf10 6.98 vs 13.11 star
-    # (protocol row: 9.52 -> 3.57 s) — so the threshold only preserves the
-    # all-pairs path on the driver's sf0.01 correctness scale (500 docs), where
-    # both bodies stay oracle-exercised (forced-branch test covers hub there).
-    if not at_scale("x1_dedup_components", sf_dir):
-        edges = minhash_lsh(spark, sf_dir)
-        return connected_components(edges, "doc_a", "doc_b")
     return _hub_components(spark, sf_dir)
 
 
@@ -824,12 +819,16 @@ SEM_TILE_ROWS = 4096  # semantic_dedup_np hash-block size; tests lower it to for
     nr AS (SELECT vec_id, cid, embedding,
                   sqrt({_DUCK_DOT.format(a='embedding', b='embedding')}) AS nrm
            FROM assign),
-    e AS (SELECT vec_id, cid, list_transform(embedding, x -> CAST(x AS DOUBLE) / nrm) AS ne
-          FROM nr),
+    e AS (SELECT vec_id, cid, ne, list_count(ne) = len(ne) AS ok
+          FROM (SELECT vec_id, cid,
+                       list_transform(embedding, x -> CAST(x AS DOUBLE) / nrm) AS ne
+                FROM nr)),
     dropped AS (
         SELECT DISTINCT b.vec_id
         FROM e a JOIN e b ON a.cid = b.cid AND a.vec_id < b.vec_id
-        WHERE {_DUCK_DOT.format(a='a.ne', b='b.ne')} >= {SEM_TAU}
+        -- DUCK_DOT's guard with its NULL-element half computed once per vector
+        WHERE a.ok AND b.ok AND len(a.ne) = len(b.ne)
+          AND {_DUCK_FOLD.format(a='a.ne', b='b.ne')} >= {SEM_TAU}
     )
     SELECT e.vec_id, e.cid, CAST(d.vec_id IS NULL AS INT) AS kept
     FROM e LEFT JOIN dropped d ON e.vec_id = d.vec_id

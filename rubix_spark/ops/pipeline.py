@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from rubix_spark import catalog
 from rubix_spark.fns import avg_units_det, duck_avg_units, round_det
 from rubix_spark.ops import _tok
-from rubix_spark.queries import REGISTRY, at_scale, register
+from rubix_spark.queries import register
 
 CHUNK_TOKENS = 50
 CHUNK_STRIDE = 40
@@ -570,8 +570,8 @@ def _two_level_cum(t):
     """(doc_id, n_tok, blk) -> + cum: block-local running total + broadcast block
     offsets; the integer telescoping is bit-identical to a single global window.
     ``t`` must already be checkpointed — both the cumsum and totals sides consume
-    it (invariant 3). Shared by the per-query pack core and the layout ingest so
-    the two branches agree exactly."""
+    it (invariant 3). Shared by the e2e shards' pack core and the docs_ntok
+    layout ingest."""
     from pyspark.sql import Window
 
     w_in = (
@@ -599,13 +599,13 @@ def docs_ntok_layout(spark: SparkSession, sf_dir: str):
     pipeline table. The per-query x9_pack plan collapses to scan (3 pruned int
     cols, never text) -> bin_id projection -> ONE aggregate exchange; the Arrow
     text kernel, the checkpoint, and both full shuffles of the counts table move
-    to the fingerprint-guarded write path. Measured (docs/PROBES.md proto_x9_pack, idle
-    min-of-5): sf0.1 0.322 vs 0.706 shuffle, sf1 0.606 vs 0.845, sf10 0.654 vs
-    1.530 — no inversion at any SF (invariant 16).
+    to the fingerprint-guarded write path. Measured vs computing all of it per
+    query (docs/PROBES.md proto_x9_pack, idle min-of-5): sf0.1 0.322 vs 0.706,
+    sf1 0.606 vs 0.845, sf10 0.654 vs 1.530 — no inversion at any SF (invariant 16).
 
-    The ingest cumsum runs the same two-level prefix sum the query used to run
-    per-invocation (block-local window + broadcast block offsets — bit-identical
-    integer telescoping), so layout and shuffle branches agree exactly."""
+    The ingest cumsum is the two-level prefix sum (block-local window + broadcast
+    block offsets — integer telescoping, bit-identical to the oracle's single
+    global window)."""
     from pyspark.sql import Window
 
     from rubix_spark.sources.bucketing import persisted_bucketed
@@ -666,15 +666,10 @@ def _two_level_prefix_bins(t):
         "per-bin doc/token counts. Round-11: the graded row reads the WRITTEN "
         "docs_ntok layout (token counts + global cumsum materialized at ingest — "
         "see docs_ntok_layout), so the per-query plan is scan -> bin projection -> "
-        "one aggregate exchange, no text, no Python, no window. Size branch "
-        "(AT_SCALE x9_pack: 2000 documents rows) keeps the full-compute shuffle body "
-        "driver-oracle-exercised at sf0.01; the layout branch is oracle-pinned by "
-        "tests/test_denorm_layout.py."
+        "one aggregate exchange, no text, no Python, no window."
     ),
 )
 def x9_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if not at_scale("x9_pack", sf_dir):
-        return REGISTRY["x9_pack_shuffle"].builder(spark, sf_dir)
     lay = docs_ntok_layout(spark, sf_dir)
     start = F.col("cum") - F.col("n_tok")
     return (
@@ -685,38 +680,6 @@ def x9_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("bin_tokens"),
             F.min("doc_id").alias("first_doc"),
         )
-    )
-
-
-@register(
-    "x9_pack_shuffle",
-    REGISTRY["x9_pack"].oracle,
-    doc=(
-        "Layout-less ablation of x9_pack (the graded form until round-10): Arrow "
-        "token-count kernel + checkpoint + the two-level distributed prefix sum, "
-        "all per invocation. Holds the sf0.01 driver-correctness slot via the "
-        "graded row's size branch."
-    ),
-)
-def x9_pack_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: the oracle's global ORDER BY cumsum would funnel the whole corpus
-    through ONE window task. Instead: block-local cumsum (window partitioned by
-    doc_id range) + a tiny per-block offset table (one row per ~256 docs, cumsum'd in
-    a single cheap window over #blocks rows, broadcast back). Integer telescoping makes
-    the two-level sum bit-identical to the oracle's single window."""
-    # checkpoint the narrow (doc_id, n_tok, blk) table: both the block-local cumsum and
-    # the block-totals side consume it, and without the checkpoint each re-runs the
-    # Arrow token-count kernel over the full corpus (invariant 3 — at 100 TB you'd
-    # materialize this counts table once anyway)
-    t = (
-        _ntok_df(spark, sf_dir)
-        .withColumn("blk", (F.col("doc_id") / PACK_BLOCK).cast("bigint"))
-        .localCheckpoint(eager=True)
-    )
-    return _two_level_prefix_bins(t).groupBy("bin_id").agg(
-        F.count("*").alias("docs"),
-        F.sum("n_tok").alias("bin_tokens"),
-        F.min("doc_id").alias("first_doc"),
     )
 
 

@@ -121,21 +121,25 @@ def cosine_lit(col: str, vec: list[float]) -> Column:
     )
 
 
-DUCK_DOT = (
+_DUCK_FOLD = (
     "list_aggregate(list_transform(list_zip({a}, {b}), "
     "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), 'sum')"
+)
+# DuckDB's list sum skips NULLs where the Spark fold is NULL (zip_with pads a width
+# mismatch with NULL; a NULL element poisons the sum): the guard restates the fold's
+# rule, so a ragged or NULL-element vector's dot is NULL in both engines
+DUCK_DOT = (
+    "CASE WHEN len({a}) = len({b}) AND list_count({a}) = len({a}) "
+    "AND list_count({b}) = len({b}) THEN " + _DUCK_FOLD + " END"
 )
 
 
 def _duck_cos(a: str, b: str) -> str:
-    # DuckDB's list sum skips NULLs where the Spark fold is NULL (zip_with pads a
-    # width mismatch with NULL; a NULL element poisons the sum): the guard restates
-    # the fold's rule, so a ragged or NULL-element vector scores NULL in both
+    # the guarded numerator is NULL unless both vectors are well-formed and equally
+    # wide, so the norms need no guard of their own
     return (
-        f"CASE WHEN len({a}) = len({b}) AND list_count({a}) = len({a}) "
-        f"AND list_count({b}) = len({b}) THEN "
         f"{DUCK_DOT.format(a=a, b=b)} / "
-        f"(sqrt({DUCK_DOT.format(a=a, b=a)}) * sqrt({DUCK_DOT.format(a=b, b=b)})) END"
+        f"(sqrt({_DUCK_FOLD.format(a=a, b=a)}) * sqrt({_DUCK_FOLD.format(a=b, b=b)}))"
     )
 
 
@@ -322,9 +326,19 @@ def _py_dot(a, b) -> float:
     return acc
 
 
+def _well_formed(v) -> bool:
+    """False for a vector whose every fold dot is NULL: a NULL vector or one with a
+    NULL element."""
+    return v is not None and None not in v
+
+
 def _py_cos(a, b) -> float:
     import math
 
+    if not (_well_formed(a) and _well_formed(b)) or len(a) != len(b):
+        # the SQL cosine is NULL (the fold's NULL-element / width rule), ranked
+        # like a zero-norm vector's below
+        return float("-inf")
     denom = math.sqrt(_py_dot(a, a)) * math.sqrt(_py_dot(b, b))
     if denom == 0.0:
         # zero-norm vector: the SQL cosine is NULL (NULLIF guard) and NULL sorts
@@ -349,7 +363,9 @@ def _ivf_codebook(
             return memo[k]
     top = max([N_CENTROIDS - 1, *extra_ids])
     rows = emb.where(F.col("vec_id") <= top).select("vec_id", "embedding").collect()
-    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in rows}
+    # a NULL embedding or element stays None: such a centroid scores NULL and never
+    # wins an assignment (_ivf_assign) or a probe slot (_py_cos)
+    vecs = {r.vec_id: None if r.embedding is None else list(r.embedding) for r in rows}
     missing = sorted(set(extra_ids) - set(vecs))
     if missing or not vecs:
         raise ValueError(
@@ -416,8 +432,9 @@ def _ivf_assign(emb: DataFrame, cents: dict) -> DataFrame:
     """
     import math
 
-    # Zero-norm centroids are skipped rather than normalized (x/0 would raise
-    # driver-side): the oracle's cos(v, zero-centroid) is NULL (invariant 35),
+    # Zero-norm and NULL / NULL-element centroids are skipped rather than
+    # normalized (x/0 or None would raise driver-side): the oracle's
+    # cos(v, such a centroid) is NULL (invariant 35),
     # and a NULL score never wins ROW_NUMBER(ORDER BY cos DESC) — dropping the
     # struct reproduces exactly that. All-zero codebook (or a zero query
     # vector): every score is NULL/0 on both engines and the tie rule picks the
@@ -434,7 +451,7 @@ def _ivf_assign(emb: DataFrame, cents: dict) -> DataFrame:
             F.lit(-cid).alias("mcid"),
         )
         for cid, ce in cents.items()
-        if _py_dot(ce, ce) > 0.0 or math.isnan(_py_dot(ce, ce))
+        if _well_formed(ce) and (_py_dot(ce, ce) > 0.0 or math.isnan(_py_dot(ce, ce)))
     ]
     if not scored:
         return emb.select("vec_id", "embedding", F.lit(min(cents)).alias("cid"))
@@ -883,12 +900,15 @@ def _proj_matrix() -> list[list[float]]:
     f"""
     SELECT vec_id,
            {", ".join(
-               "FLOOR(" + DUCK_DOT.format(a="embedding", b="["
+               "CASE WHEN wf THEN FLOOR(" + _DUCK_FOLD.format(a="embedding", b="["
                    + ", ".join(repr(x) for x in row) + "]")
-               + " * 10000 + 0.5) / 10000.0 AS p" + str(i)
+               + " * 10000 + 0.5) / 10000.0 END AS p" + str(i)
                for i, row in enumerate(_proj_matrix())
            )}
-    FROM embeddings
+    -- DUCK_DOT's guard against the DIM-wide literal rows, once per vector
+    FROM (SELECT vec_id, embedding,
+                 len(embedding) = {DIM} AND list_count(embedding) = {DIM} AS wf
+          FROM embeddings)
     """,
     doc=(
         "Random-projection dimensionality reduction: each 64-dim embedding is sketched "

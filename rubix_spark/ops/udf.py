@@ -23,7 +23,7 @@ from pyspark.sql.types import DoubleType
 from rubix_spark import catalog
 from rubix_spark.fns import round_det
 from rubix_spark.ops import _tok
-from rubix_spark.queries import REGISTRY, at_scale, register
+from rubix_spark.queries import register
 
 
 # return types passed as DataType objects (not DDL strings) so the UDFs can be defined
@@ -50,75 +50,6 @@ def median_value(v: pd.Series) -> float:
     return float(v.median())
 
 
-def _median_arrow(tbl):
-    """applyInArrow kernel: one (user_id, raw median) row per group, never touching
-    pandas — the batch stays an Arrow table and numpy reduces its buffer. Mirrors
-    pd.Series.median exactly: NULLs dropped, NaN skipped (skipna), empty -> NULL."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    v = pc.drop_null(tbl.column("value")).to_numpy()
-    v = v[~np.isnan(v)]
-    med = float(np.median(v)) if len(v) else None
-    return pa.table({
-        "user_id": pa.array([tbl.column("user_id")[0].as_py()], pa.int64()),
-        "med_raw": pa.array([med], pa.float64()),
-    })
-
-
-def _median_map(batches):
-    """mapInArrow kernel: ALL groups in the partition reduced in one pass — lexsort
-    by (user_id, value), segment offsets via np.unique, interpolated median as the
-    mean of the two middle elements per segment. Per-group Python dispatch count:
-    zero. Matches pd.Series.median: NULLs (NaN after to_numpy) skipped, all-NaN or
-    all-NULL group -> NULL. A NULL group KEY (never present in the fixtures, but
-    GROUP BY semantics require it) is carried as an explicit boolean mask and
-    reduced as its own side group — no sentinel value, so a legitimate user_id
-    anywhere in the int64 domain (including int64-min, the old sentinel — ADVICE
-    r12) can never be confused with NULL."""
-    import numpy as np
-    import pyarrow as pa
-
-    us, vs, ns = [], [], []
-    for b in batches:
-        ucol, vcol = b.column(0), b.column(1)
-        if ucol.null_count:
-            nmask = ucol.is_null().to_numpy(zero_copy_only=False)
-            ucol = ucol.fill_null(0)
-        else:
-            nmask = np.zeros(len(ucol), dtype=bool)
-        us.append(ucol.to_numpy(zero_copy_only=False).astype(np.int64, copy=False))
-        vs.append(vcol.to_numpy(zero_copy_only=False))
-        ns.append(nmask)
-    if not us:
-        return
-    u = np.concatenate(us)
-    v = np.concatenate(vs)
-    nm = np.concatenate(ns)
-    null_med = None
-    if nm.any():
-        nv = v[nm]
-        nv = nv[~np.isnan(nv)]
-        null_med = float(np.median(nv)) if nv.size else None
-        u, v = u[~nm], v[~nm]
-    all_u = np.unique(u)  # keeps all-NULL-value groups in the output
-    valid = ~np.isnan(v)
-    uv, vv = u[valid], v[valid]
-    order = np.lexsort((vv, uv))
-    uv, vv = uv[order], vv[order]
-    grp_u, starts, counts = np.unique(uv, return_index=True, return_counts=True)
-    med = (vv[starts + (counts - 1) // 2] + vv[starts + counts // 2]) / 2.0
-    out = np.full(len(all_u), np.nan)
-    out[np.searchsorted(all_u, grp_u)] = med
-    keys = pa.array(all_u, pa.int64())
-    meds = pa.array(out, pa.float64(), from_pandas=True)
-    if nm.any():
-        keys = pa.concat_arrays([keys, pa.array([None], pa.int64())])
-        meds = pa.concat_arrays([meds, pa.array([null_med], pa.float64())])
-    yield pa.record_batch({"user_id": keys, "med_raw": meds})
-
-
 @register(
     "x4_udf_grouped_median",
     "SELECT user_id, FLOOR(median(value) * 100 + 0.5) / 100.0 AS med FROM events GROUP BY user_id",
@@ -126,103 +57,32 @@ def _median_map(batches):
         "Per-user exact interpolated median — the ENGINE-NATIVE body (r12 verdict "
         "#2): Spark's built-in sort-based `median` aggregate, zero Python. This is "
         "the control the Python API ladder is priced against, and it wins at every "
-        "SF (idle min-of-N vs the mapInArrow kernel: sf0.1 0.24 vs 0.44, sf1 0.30 "
-        "vs 0.49, sf10 1.60 vs 2.44 s) — the lesson of the X4 surface: when the "
-        "engine has the exact aggregate, the best UDF is no UDF. Since r13 the "
-        "aggregate reads the WRITTEN user-bucketed events layout (the x7 move "
-        "applied to aggregation: the ObjectHashAggregate consumes the bucket "
-        "partitioning, ZERO Exchange and no partial/final split — plan-pinned in "
-        "tests/test_shuffle_ops.py), past the AT_SCALE x4_udf_grouped_median "
-        "threshold (50k events rows); below, "
-        "the raw-scan ablation x4_udf_grouped_median_shuffle holds the sf0.01 "
-        "driver slot. Idle min-of-N layout vs shuffle, no inversion at any SF "
-        "(r13 session 4): sf0.1 0.092 vs 0.198, sf1 0.268 vs 0.460, sf10 "
-        "0.67-0.83 vs 1.82 s — the per-run user_id exchange plus the raw scan's "
-        "partial/final split was most of the row's cost. The ladder "
-        "lives on as x4_udf_grouped_median_arrow (mapInArrow, one "
-        "dispatch/partition) > _grouped (applyInArrow, one dispatch/group) > "
-        "_pandas (UDAF, pandas hop), all on the same DuckDB oracle. Semantics "
-        "note: Spark's median and DuckDB's quantile_cont both SKIP NULLs and "
-        "return NULL for an all-NULL group, matching the kernels; on NaN inputs "
-        "(absent from every fixture and the adversarial corpus by contract) the "
-        "in-engine aggregates sort NaN greatest while the kernel twins skip it — "
-        "the kernels' model test pins the skipna contract, this body pins the "
-        "engine-native one."
+        "SF (idle min-of-N vs a mapInArrow numpy kernel: sf0.1 0.24 vs 0.44, sf1 "
+        "0.30 vs 0.49, sf10 1.60 vs 2.44 s; per-group applyInArrow 4.59 s at sf10) "
+        "— the lesson of the X4 surface: when the engine has the exact aggregate, "
+        "the best UDF is no UDF. Since r13 the aggregate reads the WRITTEN "
+        "user-bucketed events layout (the x7 move applied to aggregation: the "
+        "ObjectHashAggregate consumes the bucket partitioning, ZERO Exchange and "
+        "no partial/final split — plan-pinned in tests/test_shuffle_ops.py). Idle "
+        "min-of-N layout vs the raw-scan body, no inversion at any SF (r13 session "
+        "4): sf0.1 0.092 vs 0.198, sf1 0.268 vs 0.460, sf10 0.67-0.83 vs 1.82 s — "
+        "the per-run user_id exchange plus the raw scan's partial/final split was "
+        "most of the row's cost. The Python rung that stays registered is "
+        "x4_udf_grouped_median_pandas (grouped-aggregate pandas UDF, the UDAF API "
+        "shape) on the same DuckDB oracle. Semantics note: Spark's median and "
+        "DuckDB's quantile_cont both SKIP NULLs and return NULL for an all-NULL "
+        "group; on NaN inputs (absent from every fixture and the adversarial "
+        "corpus by contract) the in-engine aggregate sorts NaN greatest while "
+        "pandas' median skips it."
     ),
 )
 def udf_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rubix_spark.sources.bucketing import events_user_layout
 
-    if not at_scale("x4_udf_grouped_median", sf_dir):
-        return REGISTRY["x4_udf_grouped_median_shuffle"].builder(spark, sf_dir)
     ev = events_user_layout(spark, sf_dir)
     return (
         ev.groupBy("user_id")
         .agg(round_det(F.median("value")).alias("med"))
-    )
-
-
-@register(
-    "x4_udf_grouped_median_shuffle",
-    "SELECT user_id, FLOOR(median(value) * 100 + 0.5) / 100.0 AS med FROM events GROUP BY user_id",
-    doc=(
-        "Layout-less ablation of x4_udf_grouped_median (the graded body until "
-        "r13): the same engine-native median over the raw events scan — one "
-        "user_id exchange per run. Holds the sf0.01 driver-correctness slot via "
-        "the graded row's size branch."
-    ),
-)
-def udf_grouped_median_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = catalog.table(spark, sf_dir, "events")
-    return (
-        events.groupBy("user_id")
-        .agg(round_det(F.median("value")).alias("med"))
-    )
-
-
-@register(
-    "x4_udf_grouped_median_arrow",
-    "SELECT user_id, FLOOR(median(value) * 100 + 0.5) / 100.0 AS med FROM events GROUP BY user_id",
-    doc=(
-        "Per-user median as ONE vectorized mapInArrow pass over "
-        "repartition(user_id): the kernel reduces every group in the partition "
-        "with a single lexsort + segmented gather, so the Python cost is one "
-        "dispatch per PARTITION, not per group — the fastest PYTHON rung of the "
-        "X4 ladder (a consume-only kernel ties it at sf10, so the residual is "
-        "entirely the exchange + Arrow in-transfer; the compute is free). The "
-        "graded body is the JVM-native median (r13); this twin is the measured "
-        "price of insisting on a Python kernel: sf0.1 0.44 vs 0.24, sf1 0.49 vs "
-        "0.30, sf10 2.44 vs 1.60 s."
-    ),
-)
-def udf_grouped_median_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = catalog.table(spark, sf_dir, "events")
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        events.select("user_id", "value")
-        .repartition(n, "user_id")
-        .mapInArrow(_median_map, schema="user_id bigint, med_raw double")
-        .select("user_id", round_det(F.col("med_raw")).alias("med"))
-    )
-
-
-@register(
-    "x4_udf_grouped_median_grouped",
-    "SELECT user_id, FLOOR(median(value) * 100 + 0.5) / 100.0 AS med FROM events GROUP BY user_id",
-    doc=(
-        "Per-user median via applyInArrow (Spark 4 grouped-map over pyarrow "
-        "tables) — the measured price of per-GROUP Python dispatch (~35 µs/group: "
-        "4.59 s vs the map form's 2.37 at sf10). API-surface twin of "
-        "x4_udf_grouped_median; same oracle."
-    ),
-)
-def udf_grouped_median_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = catalog.table(spark, sf_dir, "events")
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInArrow(_median_arrow, schema="user_id bigint, med_raw double")
-        .select("user_id", round_det(F.col("med_raw")).alias("med"))
     )
 
 

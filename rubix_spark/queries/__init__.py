@@ -38,21 +38,16 @@ def register(name: str, oracle: Optional[str], doc: str = ""):
 
 
 # Size dispatch (invariant 16): a size-adaptive builder runs its at-scale body when
-# the footer row count of ``table`` is >= ``rows``, and its small body below. Each
-# threshold sits between the crossover points measured in its builder's doc string.
-# Tests force the at-scale body with ``monkeypatch.setitem(AT_SCALE, name, (table, 0))``.
+# the footer row count of ``table`` is >= ``rows``, and its small body below. An entry
+# exists only where its builder's doc string records a measured crossover, and the
+# threshold sits between the measured points; a body kept only so that it runs at
+# sf0.01 is a fork, not a size branch. Tests force the at-scale body with
+# ``monkeypatch.setitem(AT_SCALE, name, (table, 0))``.
 AT_SCALE: dict[str, tuple[str, int]] = {
-    "q3_agg_having": ("lineitem", 300_000),  # below: q3_strkey_shuffle
-    "q28_tpch_q1": ("lineitem", 300_000),  # below: q28_strkey_shuffle
-    "q4_star_join": ("lineitem", 300_000),  # below: q4_star_join_shuffle
     "q30_yoy_delta": ("lineitem", 2_000_000),  # below: q30_yoy_delta_shuffle
     "q30_brand_dict": ("part", 100_000),  # below: the plain p_brand string probe
     "q31_agg_live": ("orders", 4_000_000),  # below: q31_strkey_shuffle
-    "x1_dedup_components": ("documents", 2_000),  # below: all-pairs CC
     "x2_ann_bruteforce": ("embeddings", 100_000),  # below: the interpreted HOF fold
-    "x4_udf_grouped_median": ("events", 50_000),  # below: x4_udf_grouped_median_shuffle
-    "x7_range_join": ("events", 50_000),  # below: x7_range_join_shuffle
-    "x9_pack": ("documents", 2_000),  # below: x9_pack_shuffle
 }
 
 

@@ -1,174 +1,21 @@
-"""Layout-ablation twins: the graded fact queries WITHOUT the bucketed warehouse.
+"""The small bodies of two size-adaptive graded rows, registered as ablations.
 
-Round 5 shipped the bucketed layout as `*_bucketed` twins while the graded rows kept
-shuffling; round 6 inverted that (the verdict's top item): `q4_star_join`,
-`q9_cte_self_join`, `q13_distinct_buckets`, `q19_composed` and `q30_yoy_delta` now run
-the layout (`sources/bucketing.bucketed_table` — written once, fingerprint-guarded,
-reused across sessions), and THIS module keeps their original per-run-shuffle bodies as
-`*_shuffle` ablations with the same oracles. The ablations exist to (a) measure what
-the layout buys at every SF (BASELINE.md §4), (b) guard invariant 16 — a partitioning
-win at one SF must be re-checked at others — and (c) serve the cold-start case where a
-query runs once against data no warehouse has laid out.
-
-Each ablation registers with the ORIGINAL query's oracle: same answer, different layout.
+``q30_yoy_delta`` and ``q31_agg_live`` each have a measured crossover (their builders'
+doc strings record it): below their ``AT_SCALE`` thresholds these raw-scan bodies win,
+so the graded rows dispatch here, and past them the layout bodies win. Each body
+registers under its own name with the ORIGINAL query's oracle: same answer, different
+layout. Layout twins without a crossover (the layout body wins at every measured
+scale) are not kept; their last numbers are in docs/PROBES.md.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from rubix_spark import catalog
-from rubix_spark.fns import dec, dec_det, money, money_sum_fast, round_det
 from rubix_spark.queries import REGISTRY, register
-import rubix_spark.queries.relational  # noqa: F401  (source of the oracles)
-import rubix_spark.queries.extended  # noqa: F401
-
-
-@register(
-    "q4_star_join_shuffle",
-    REGISTRY["q4_star_join"].oracle,
-    doc=(
-        "q4_star_join without the warehouse layout: lineitem⋈orders shuffles on "
-        "orderkey per run (the round-5 graded plan). Dimensions pre-filtered "
-        "identically. Same oracle as q4_star_join."
-    ),
-)
-def q4_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = catalog.load(spark, sf_dir, ("customer", "orders", "lineitem", "supplier", "nation", "region"))
-    nr = (
-        t["nation"]
-        .join(F.broadcast(t["region"].where(F.col("r_name") == "ASIA")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("n_nationkey", "n_name")
-    )
-    cust = (
-        t["customer"]
-        .join(F.broadcast(nr.select("n_nationkey")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", "c_nationkey")
-    )
-    # same narrow supplier probe + name-on-aggregate as the graded body (the ablation
-    # differs only in layout)
-    supp = (
-        t["supplier"]
-        .join(F.broadcast(nr.select("n_nationkey")), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", "s_nationkey")
-    )
-    g = (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .where(F.col("c_nationkey") == F.col("s_nationkey"))
-        .groupBy("s_nationkey")
-        .agg(money_sum_fast(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), "revenue"))
-    )
-    return g.join(F.broadcast(nr), F.col("s_nationkey") == F.col("n_nationkey")).select(
-        "n_name", "revenue"
-    )
-
-
-@register(
-    "q9_cte_self_join_shuffle",
-    REGISTRY["q9_cte_self_join"].oracle,
-    doc=(
-        "q9's lag-window form over the raw orders scan: one exchange on o_custkey "
-        "feeds both the groupBy and the window. Same oracle as q9_cte_self_join."
-    ),
-)
-def q9_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = catalog.table(spark, sf_dir, "orders")
-    s = (
-        orders.groupBy("o_custkey", F.to_date("o_orderdate").alias("d"))
-        .agg(money_sum_fast("o_totalprice", "t"))
-    )
-    w = Window.partitionBy("o_custkey").orderBy("d")
-    return (
-        s.select(
-            "o_custkey", "d", "t",
-            F.lag("t").over(w).alias("prev_t"),
-            F.lag("d").over(w).alias("_prev_d"),
-        )
-        .where(F.col("_prev_d") == F.date_sub(F.col("d"), 1))
-        .drop("_prev_d")
-    )
-
-
-@register(
-    "q13_distinct_buckets_shuffle",
-    REGISTRY["q13_distinct_buckets"].oracle,
-    doc=(
-        "q13's Expand-free decomposition over the raw orders scan: the exact distinct "
-        "shuffles every o_custkey. Same oracle as q13_distinct_buckets."
-    ),
-)
-def q13_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = catalog.table(spark, sf_dir, "orders")
-    in_b1 = F.col("o_totalprice").between(0, 50000)
-    in_b2 = F.col("o_totalprice") > 50000
-
-    # same long-unit aggregate expression as the graded row, so the ablation delta
-    # attributes to the layout alone
-    unitp = F.floor(F.col("o_totalprice") * 10000 + F.lit(0.5)).cast("long")
-
-    def cond_avg(cond, alias):
-        # exact integer average (round-8, same form as the graded row — fns.avg_units_det)
-        from rubix_spark.fns import avg_units_det
-
-        return avg_units_det(F.sum(F.when(cond, unitp)), F.count(F.when(cond, F.lit(1))), 4, alias)
-
-    dc = orders.select("o_custkey").distinct().agg(F.count("o_custkey").alias("dc"))
-    sums = orders.agg(cond_avg(in_b1, "b1"), cond_avg(in_b2, "b2"))
-    return dc.crossJoin(sums)
-
-
-@register(
-    "q19_composed_shuffle",
-    REGISTRY["q19_composed"].oracle,
-    doc=(
-        "q19 with the round-5 broadcast of a (custkey, nation) map onto the raw orders "
-        "scan — the map is |customer| rows, so this variant's broadcast GROWS with the "
-        "fact table (the documented scale ceiling the bucketed graded row removes). "
-        "Same oracle as q19_composed."
-    ),
-)
-def q19_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from rubix_spark.fns import money_from_units
-
-    t = catalog.load(spark, sf_dir, ("orders", "customer", "nation"))
-    # same narrow nationkey probe + name-on-aggregate as the graded body (round-8):
-    # the ablation differs only in LAYOUT (broadcast cust map vs co-located SMJ)
-    cust = t["customer"].select("c_custkey", "c_nationkey")
-    r0 = (
-        t["orders"]
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_nationkey", "o_orderpriority")
-        .agg(F.sum(F.floor(F.col("o_totalprice") * 10000 + F.lit(0.5)).cast("long")).alias("s"))
-    )
-    r = (
-        r0.join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name", "o_orderpriority")
-        .agg(money_from_units(F.sum("s"), "t"))
-    )
-    w = Window.partitionBy("n_name").orderBy(F.col("t").desc(), "o_orderpriority")
-    return r.select("n_name", "o_orderpriority", "t", F.rank().over(w).alias("rk"))
-
-
-@register(
-    "q20_time_bucket_shuffle",
-    REGISTRY["q20_time_bucket"].oracle,
-    doc=(
-        "q20 computing the hour key per scan over the raw events table (no hypertable "
-        "layout); one small aggregate exchange. Same oracle as q20_time_bucket."
-    ),
-)
-def q20_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = catalog.table(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
-        .agg(F.count("*").alias("c"), money_sum_fast("value", "v"))
-    )
+import rubix_spark.queries.extended  # noqa: F401  (source of the oracles)
 
 
 @register(
@@ -218,40 +65,3 @@ def q31_strkey(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     return _q31_finalize(spark, [(r.o_orderstatus, r.o_orderpriority, r.c, r.s) for r in base])
-
-
-@register(
-    "q3_strkey_shuffle",
-    REGISTRY["q3_agg_having"].oracle,
-    doc=(
-        "q3 without the dictionary-id layout: the 6-group aggregate hash-keys the "
-        "raw l_returnflag/l_linestatus STRINGS straight off the fixture parquet "
-        "(the r1-r12 graded plan). Same oracle — the ablation measures what the "
-        "materialized int keys buy (invariant 29)."
-    ),
-)
-def q3_strkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = catalog.table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(F.count("*").alias("cnt"), money_sum_fast("l_extendedprice", "rev"))
-        .where(F.col("cnt") > 10)
-    )
-
-
-@register(
-    "q28_strkey_shuffle",
-    REGISTRY["q28_tpch_q1"].oracle,
-    doc=(
-        "q28 (TPC-H Q1) without the dictionary-id layout: string group keys off "
-        "the fixture parquet; identical aggregate list (_q28_agg_exprs). Same "
-        "oracle as q28_tpch_q1."
-    ),
-)
-def q28_strkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from rubix_spark.queries.extended import _q28_agg_exprs
-
-    li = catalog.table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
-    )
-    return li.groupBy("l_returnflag", "l_linestatus").agg(*_q28_agg_exprs())

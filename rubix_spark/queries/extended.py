@@ -617,9 +617,8 @@ def q27(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # NOTE invariant 24: helpers live ABOVE the decorator, never between it and its def
 def _q28_agg_exprs() -> list:
-    """The TPC-H Q1 aggregate list (long fast-path sums) — shared by the graded
-    dictionary-key body and the q28_strkey_shuffle ablation, which differ only in
-    what keys the groupBy."""
+    """The TPC-H Q1 aggregate list (long fast-path sums) over the dictionary-keyed
+    groupBy."""
 
     def units(col: F.Column, m: int) -> F.Column:  # exact integer units of 1/m
         return F.sum(F.floor(col * m + F.lit(0.5)).cast("long"))
@@ -678,14 +677,11 @@ def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rubix_spark.sources.bucketing import bucketed_table
     from rubix_spark.sources.dictionaries import column_dictionary, dict_decode_expr
 
-    # invariant 29 (r12): past the threshold the scan + 6-group aggregate key on
-    # the layout's l_rf_sid/l_ls_sid ints; strings decode on the 6-row result.
-    # Measured idle min-of-5, no inversion: sf0.1 0.332 vs 0.348, sf1 0.351 vs
-    # 0.353 (tie), sf10 0.643 vs 0.818 strkey (0.83x DuckDB, from 1.32x) — the
+    # invariant 29 (r12): the scan + 6-group aggregate key on the layout's
+    # l_rf_sid/l_ls_sid ints; strings decode on the 6-row result. Measured idle
+    # min-of-5 vs string keys off the raw scan, no inversion: sf0.1 0.332 vs 0.348,
+    # sf1 0.351 vs 0.353 (tie), sf10 0.643 vs 0.818 (0.83x DuckDB, from 1.32x) — the
     # numeric aggregate list dominates, so the string-decode save is the margin.
-    if not at_scale("q28_tpch_q1", sf_dir):
-        return REGISTRY["q28_strkey_shuffle"].builder(spark, sf_dir)
-
     li = bucketed_table(spark, sf_dir, "lineitem", "l_orderkey").where(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )

@@ -38,7 +38,7 @@ from rubix_spark.fns import (
     money_sum_fast,
     round_det,
 )
-from rubix_spark.queries import REGISTRY, at_scale, register, table_rows
+from rubix_spark.queries import register, table_rows
 
 
 # ---------------------------------------------------------------------------
@@ -154,26 +154,20 @@ def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "Partial (map-side) + final hash agg; 6 groups, so the shuffle is tiny "
-        "regardless of SF. Size-adaptive (invariant 29, r12): past "
-        "the AT_SCALE q3_agg_having threshold the aggregate rides the "
+        "regardless of SF. Since r12 (invariant 29) the aggregate rides the "
         "denormalized lineitem layout's l_rf_sid/l_ls_sid dictionary ids — two "
         "INTS hash-key the scan "
         "and the returnflag/linestatus STRINGS are never decoded from parquet; "
         "the <=9-row aggregate decodes ids via the memoized dictionaries "
-        "(dict_decode_expr). Measured idle min-of-5, no inversion (invariant 16): "
-        "sf0.1 0.245 vs 0.286, sf1 0.241 vs 0.280, sf10 0.505 vs 0.668 strkey — "
-        "so the threshold is 300k (sf0.01 keeps the string body on the driver's "
-        "correctness scale; forced-branch oracle test covers the layout body). "
-        "String-keyed body lives on as the q3_strkey_shuffle ablation."
+        "(dict_decode_expr). Measured idle min-of-5 vs the string-keyed raw "
+        "scan, no inversion (invariant 16): sf0.1 0.245 vs 0.286, sf1 0.241 vs "
+        "0.280, sf10 0.505 vs 0.668."
     ),
 )
 def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rubix_spark.fns import money_sum_fast
     from rubix_spark.sources.bucketing import bucketed_table
     from rubix_spark.sources.dictionaries import column_dictionary, dict_decode_expr
-
-    if not at_scale("q3_agg_having", sf_dir):
-        return REGISTRY["q3_strkey_shuffle"].builder(spark, sf_dir)
 
     li = bucketed_table(spark, sf_dir, "lineitem", "l_orderkey")
     agg = (
@@ -223,22 +217,16 @@ _Q4_ORACLE = f"""
         "probe plan (customer map into 15M orders rows + supplier map into the "
         "11.8M-row SMJ output): measured 2.37 -> 0.57 s same-session at sf10. At "
         "sf1000 the replaced customer broadcast (~150M entries) is infeasible — the "
-        "materialized int never stops being a local scan filter. Size-adaptive "
-        "(invariant 16, re-measured round-10): the old 2M-row toy-scale inversion "
-        "was the probe plan's broadcast-build cost and is GONE with the probes — "
-        "the layout now wins at sf0.1 too (0.50 vs 0.83 shuffle-first order, ties "
-        "worst case), so the threshold drops to 300k (sf0.1 rides the layout; "
-        "sf0.01 keeps the shuffle body on the driver's correctness scale, where "
-        "both branches stay oracle-exercised — tests/test_denorm_layout.py). "
-        "Layout-less ablation: q4_star_join_shuffle."
+        "materialized int never stops being a local scan filter. Re-measured "
+        "round-10 (invariant 16): the old 2M-row toy-scale inversion was the probe "
+        "plan's broadcast-build cost and is GONE with the probes — the layout wins "
+        "at sf0.1 too (0.50 vs 0.83 for the per-run orderkey shuffle, ties worst "
+        "case)."
     ),
 )
 def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rubix_spark.sources.bucketing import bucketed_table
     from rubix_spark.sources.dictionaries import region_nationkeys
-
-    if not at_scale("q4_star_join", sf_dir):
-        return REGISTRY["q4_star_join_shuffle"].builder(spark, sf_dir)
 
     asia = region_nationkeys(spark, sf_dir, ("ASIA",))
     li = (
@@ -488,8 +476,7 @@ def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "CTE self-join expressed as a lag window over the custkey-bucketed warehouse "
         "layout: the bucket partitioning satisfies both the groupBy and the window, so "
-        "the plan has zero exchanges (see builder comment; ablation: "
-        "q9_cte_self_join_shuffle)."
+        "the plan has zero exchanges (see builder comment)."
     ),
 )
 def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -502,7 +489,6 @@ def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     # custkey-bucketed warehouse layout, which satisfies BOTH the (custkey, d) groupBy
     # and the custkey window partition — the whole query plans with ZERO Exchange
     # (pinned in tests/test_shuffle_ops.py; sf10 4.86→1.51 s measured on the r5 twin).
-    # Layout-less ablation: q9_cte_self_join_shuffle.
     from rubix_spark.fns import money_sum_fast
     from rubix_spark.sources.bucketing import bucketed_table
 
@@ -628,7 +614,7 @@ def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the groups (= exact COUNT(DISTINCT), NULL group skipped by count(col) per "
         "ADVICE r5) and re-sums the partials (decimal sums are exactly associative, "
         "so two-level summation is bit-identical to one level). One scan instead of "
-        "the r5 plan's two. Ablation: q13_distinct_buckets_shuffle."
+        "the r5 plan's two."
     ),
 )
 def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -903,8 +889,7 @@ def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         "semantics are preserved by the nation attach: unmatched/NULL custkeys "
         "materialize NULL natkeys, whose groups the inner broadcast join drops "
         "exactly as the oracle's customer+nation joins do (c_custkey is unique, so "
-        "the ingest left join never changes row counts). "
-        "Layout-less ablation: q19_composed_shuffle."
+        "the ingest left join never changes row counts)."
     ),
 )
 def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -943,8 +928,7 @@ def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         "start = trunc). Round-6: events is stored with the hour key MATERIALIZED and "
         "bucketed by it (the hypertable-chunk layout a time-series warehouse keeps), "
         "so the aggregation consumes the bucket partitioning with zero exchange — the "
-        "grouping column is computed once at ingest instead of per scan. Ablation: "
-        "q20_time_bucket_shuffle."
+        "grouping column is computed once at ingest instead of per scan."
     ),
 )
 def q20(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,34 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from rubix_spark import catalog
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist df bucketed (and optionally sorted) by key into the session catalog."""
-    import shutil
-
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # the in-memory catalog forgets tables across sessions but their warehouse dirs
-    # survive — clear the location so saveAsTable doesn't refuse it
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.format("parquet").saveAsTable(table)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on: str) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — plan must contain no Exchange."""
-    return spark.table(left_table).join(spark.table(right_table), on)
-
-
 # ---------------------------------------------------------------------------
 # Persistent warehouse layout: write a fixture table bucketed ONCE, reuse forever
 # ---------------------------------------------------------------------------

@@ -4,17 +4,16 @@ Two prior programs compose here, each leaving the other's blind spot:
 
 - The adversarial corpora (test_adversarial_relational / test_kernel_properties)
   run every oracle-bearing query on NULL-key / dangling-key / unicode / hot-key
-  data — but the corpora are tiny, so every size-adaptive body picks its SMALL
-  branch: the layout paths (bucketed warehouse, denorm sentinel natkeys,
-  dictionary ids, ingest-time cumsums, hub contraction) never see the edges.
-- The forced-branch suite (test_denorm_layout) pins each layout body against its
-  oracle — but only on the FRIENDLY generated fixture (no NULL group keys, no
+  data — but the corpora are tiny, so every size-adaptive body (``AT_SCALE``)
+  picks its SMALL branch there.
+- The forced-branch suite (test_denorm_layout) pins each at-scale body against
+  its oracle — but only on the FRIENDLY generated fixture (no NULL group keys, no
   dangling FKs, no empty docs).
 
-This module forces the layout branches (the same env knobs) onto the
-adversarial corpora, so the code path that actually runs at sf10+ is the one
-proven at the contract's edges. Fixtures are imported from the sibling modules
-(pytest resolves fixtures through the module namespace).
+This module forces the at-scale branches onto the adversarial corpora, so the
+code path that actually runs at sf10+ is the one proven at the contract's edges.
+Fixtures are imported from the sibling modules (pytest resolves fixtures through
+the module namespace).
 """
 
 from __future__ import annotations
@@ -70,9 +69,6 @@ def _assert_parity(spark, name: str, sf_dir: str, tables) -> None:
 # (row, AT_SCALE branches forced); q31_grouping_sets reads the materialized rollup at
 # every size, so forcing q31_agg_live leaves it unchanged; q31_agg_live runs that branch.
 @pytest.mark.parametrize("name,branches", [
-    ("q3_agg_having", ("q3_agg_having",)),
-    ("q28_tpch_q1", ("q28_tpch_q1",)),
-    ("q4_star_join", ("q4_star_join",)),
     ("q30_yoy_delta", ("q30_yoy_delta",)),
     # dictionary-probe variant of the q30 tail (brand rides as an int id)
     ("q30_yoy_delta", ("q30_yoy_delta", "q30_brand_dict")),
@@ -98,27 +94,6 @@ def test_q5_decomposition_branch_on_adversarial_warehouse(
     real = stats.parquet_row_count
     monkeypatch.setattr(stats, "parquet_row_count", lambda p: max(real(p), 10**6))
     _assert_parity(spark, "q5_theta_join", adversarial_wh_dir, _REL)
-
-
-# ---------------------------------------------------------------------------
-# Events layout branch (user-bucketed (user_id, us)-sorted written layout)
-# ---------------------------------------------------------------------------
-def test_x7_range_join_layout_on_adversarial_events(
-    spark, adversarial_events_dir, force_at_scale
-):
-    force_at_scale("x7_range_join")
-    _assert_parity(spark, "x7_range_join", adversarial_events_dir, ("events",))
-
-
-# ---------------------------------------------------------------------------
-# Documents layout branches (ntok/cumsum layout; hub-contraction clustering)
-# ---------------------------------------------------------------------------
-@pytest.mark.parametrize("name", ["x9_pack", "x1_dedup_components"])
-def test_docs_layout_branch_on_adversarial_docs(
-    spark, adversarial_docs_dir, force_at_scale, name
-):
-    force_at_scale(name)
-    _assert_parity(spark, name, adversarial_docs_dir, ("documents",))
 
 
 # ---------------------------------------------------------------------------
@@ -173,6 +148,28 @@ def degenerate_emb_dir(tmp_path_factory, adversarial_emb_dir):
     return str(d), rows
 
 
+@pytest.fixture(scope="module")
+def degenerate_codebook_emb_dir(tmp_path_factory, degenerate_emb_dir):
+    """degenerate_emb_dir plus a NULL embedding (row 9) and a NULL element (row
+    12) INSIDE the 16-row IVF codebook: such a centroid scores NULL and never wins
+    an assignment or a probe slot."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src, rows = degenerate_emb_dir
+    tbl = pq.read_table(f"{src}/embeddings.parquet")
+    rows = [None if r is None else list(r) for r in rows]
+    rows[9] = None
+    rows[12][40] = None
+    d = tmp_path_factory.mktemp("degencodebook")
+    tbl = tbl.set_column(1, "embedding", pa.array(rows, pa.list_(pa.float32())))
+    pq.write_table(tbl, str(d / "embeddings.parquet"))
+    return str(d), rows
+
+
+_DEGENERATE_DIRS = ["degenerate_emb_dir", "degenerate_codebook_emb_dir"]
+
+
 def _fold_class(e, q) -> int:
     """0 NaN, 1 real, 2 NULL: the class of the fold's cosine(e, q)."""
     import math
@@ -185,6 +182,7 @@ def _fold_class(e, q) -> int:
     return 0 if math.isnan(sum(x * y for x, y in zip(e, q)) / denom) else 1
 
 
+@pytest.mark.parametrize("emb", _DEGENERATE_DIRS)
 @pytest.mark.parametrize("name,kernel", [
     ("x2_ann_bruteforce", False),
     ("x2_ann_bruteforce", True),
@@ -197,7 +195,7 @@ def _fold_class(e, q) -> int:
     ("x2_knn_join_ivf", False),
 ])
 def test_x2_rows_share_one_degenerate_vector_contract(
-    spark, degenerate_emb_dir, force_at_scale, name, kernel
+    spark, request, force_at_scale, name, kernel, emb
 ):
     """One contract for every x2 ranking row: no crash; each returned sim is NULL
     exactly when the fold's cosine is NULL and NaN exactly when it is NaN, and a
@@ -205,7 +203,7 @@ def test_x2_rows_share_one_degenerate_vector_contract(
     still equal their DuckDB oracle."""
     import math
 
-    d, rows = degenerate_emb_dir
+    d, rows = request.getfixturevalue(emb)
     if kernel:
         force_at_scale(name)
     got = [tuple(r) for r in REG[name].builder(spark, d).collect()]
@@ -218,6 +216,23 @@ def test_x2_rows_share_one_degenerate_vector_contract(
         assert classes == sorted(classes), got
     if REG[name].oracle is not None:
         _assert_parity(spark, name, d, ("embeddings",))
+
+
+@pytest.mark.parametrize("emb", _DEGENERATE_DIRS)
+@pytest.mark.parametrize("name", [
+    "x2_embedding_project", "x1_embedding_neardup", "x1_semantic_dedup",
+])
+def test_embedding_dots_share_one_null_rule(spark, request, name, emb):
+    """Every DuckDB dot follows the Spark fold's rule: a NULL, NULL-element or
+    ragged vector's dot is NULL (a projection row is all-NULL, a pair never
+    scores), and a NULL codebook row neither crashes nor wins a cluster."""
+    d, rows = request.getfixturevalue(emb)
+    if name == "x2_embedding_project":
+        for r in REG[name].builder(spark, d).collect():
+            e = rows[r.vec_id]
+            bad = e is None or None in e or len(e) != len(rows[0])
+            assert (r.p0 is None) == bad, (r.vec_id, r.p0)
+    _assert_parity(spark, name, d, ("embeddings",))
 
 
 def test_corpus_cluster_leaves_degenerate_rows_out(spark, degenerate_emb_dir):
@@ -356,22 +371,19 @@ def test_priority_window_matches_oracle_on_directory_fixture(
     assert s == o, f"{name}: spark={len(s)} rows, oracle={len(o)} rows"
 
 
-@pytest.mark.parametrize("name,branch", [
-    # the branch deciders and layout ingests all read footers through the isdir path
-    ("q3_agg_having", "q3_agg_having"),
-    ("q4_star_join", "q4_star_join"),
-    ("q30_yoy_delta", "q30_yoy_delta"),
-    ("q31_grouping_sets", "q31_agg_live"),
-    ("q31_agg_live", "q31_agg_live"),
-    ("x7_range_join", "x7_range_join"),
-    ("x4_udf_grouped_median", "x4_udf_grouped_median"),
-    ("x9_pack", "x9_pack"),
-    ("x2_ann_bruteforce", "x2_ann_bruteforce"),
+@pytest.mark.parametrize("name,branches", [
+    # the branch deciders and layout ingests all read footers through the isdir
+    # path; x9_pack's docs_ntok ingest sits outside the PRIORITY sweep above
+    ("q30_yoy_delta", ("q30_yoy_delta",)),
+    ("q31_grouping_sets", ("q31_agg_live",)),
+    ("q31_agg_live", ("q31_agg_live",)),
+    ("x9_pack", ()),
+    ("x2_ann_bruteforce", ("x2_ann_bruteforce",)),
 ])
 def test_layout_branch_matches_oracle_on_directory_fixture(
-    spark, adversarial_dirlayout_dir, force_at_scale, name, branch
+    spark, adversarial_dirlayout_dir, force_at_scale, name, branches
 ):
-    force_at_scale(branch)
+    force_at_scale(*branches)
     q = REG[name]
     o = _duck_rows_dirs(q.oracle, adversarial_dirlayout_dir, _ALL_TABLES)
     s = _canon(tuple(r) for r in q.builder(spark, adversarial_dirlayout_dir).collect())

@@ -68,45 +68,6 @@ def test_repetition_kernel_matches_explode_on_adversarial_text(spark, adversaria
     assert len(k) > 50  # the random docs actually produced 3-grams
 
 
-def test_median_map_kernel_matches_pandas_model(spark):
-    """_median_map (ONE mapInArrow pass) vs a driver-side model with the exact
-    pd.Series.median semantics: NULL/NaN skipped, all-NaN group -> NULL, NULL
-    group key kept as its own group."""
-    import math
-
-    from rubix_spark.ops.udf import _median_map
-
-    rng = random.Random(23)
-    rows = []
-    for _ in range(3000):
-        uid = rng.choice([None, 1, 2, 3, 5, 8, 13, 21, 34, 55])
-        v = rng.choice([None, float("nan"), rng.uniform(-100, 100),
-                        rng.uniform(-100, 100), rng.uniform(-100, 100)])
-        rows.append((uid, v))
-    rows.append((99, None))            # all-NULL group
-    rows.append((98, float("nan")))    # all-NaN group
-    df = spark.createDataFrame(rows, "user_id bigint, value double")
-    got = {
-        r.user_id: r.med_raw
-        for r in df.repartition(8, "user_id")
-        .mapInArrow(_median_map, "user_id bigint, med_raw double")
-        .collect()
-    }
-    # driver model
-    from collections import defaultdict
-    groups = defaultdict(list)
-    for uid, v in rows:
-        groups[uid].append(v)
-    assert set(got) == set(groups)
-    for uid, vals in groups.items():
-        clean = sorted(v for v in vals if v is not None and not math.isnan(v))
-        if not clean:
-            assert got[uid] is None, uid
-            continue
-        mid = (clean[(len(clean) - 1) // 2] + clean[len(clean) // 2]) / 2.0
-        assert got[uid] == mid, (uid, got[uid], mid)
-
-
 @pytest.fixture(scope="module")
 def adversarial_emb_dir(tmp_path_factory):
     # dim must be the engine contract's DIM: the JL projection matrix and the
@@ -284,9 +245,7 @@ def adversarial_events_dir(tmp_path_factory):
 
 @pytest.mark.parametrize("name", [
     "q20_time_bucket", "q22_json_extract", "x4_udf_scalar",
-    "x4_udf_grouped_median", "x4_udf_grouped_median_arrow",
-    "x4_udf_grouped_median_grouped",
-    "x4_udf_grouped_median_pandas", "x4_udf_grouped_map",
+    "x4_udf_grouped_median", "x4_udf_grouped_median_pandas", "x4_udf_grouped_map",
     "x7_asof_join", "x7_asof_join_pandas", "x7_range_join",
     "x8_pivot", "x8_unpivot", "x10_rollup_cascade",
 ])

@@ -9,27 +9,11 @@ from pyspark.sql import functions as F
 from rubix_spark import catalog
 from rubix_spark.ops.skew import salted_join
 from rubix_spark.ops.upsert import merge_upsert, scd2_apply
-from rubix_spark.sources.bucketing import bucketed_join, write_bucketed
 from tests.conftest import SF_SMOKE
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Same-bucketed tables join without a shuffle — the 100 TB repeated-join strategy."""
-    orders = catalog.table(spark, SF_SMOKE, "orders")
-    lineitem = catalog.table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders.withColumnRenamed("o_orderkey", "k"), "orders_b", "k", 4)
-    write_bucketed(lineitem.withColumnRenamed("l_orderkey", "k"), "lineitem_b", "k", 4)
-    # pin a sort-merge join (tiny test tables would broadcast, hiding the property)
-    joined = spark.table("orders_b").hint("merge").join(spark.table("lineitem_b"), "k")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert bucketed_join(spark, "orders_b", "lineitem_b", "k") is not None
-    expected = orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]).count()
-    assert joined.count() == expected
 
 
 def _pinned_smj_plan(spark, name: str) -> str:
@@ -46,13 +30,11 @@ def _pinned_smj_plan(spark, name: str) -> str:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_q4_graded_fact_join_is_exchange_free(spark, force_at_scale):
+def test_q4_graded_fact_join_is_exchange_free(spark):
     """Round-6: the GRADED q4 row runs the warehouse layout (r5 only proved it on a
     twin): with lineitem+orders bucketed+sorted by orderkey, the fact-fact join must
     plan as SMJ with NO shuffle and NO sort on either fact input (the only exchange
-    left is the tiny post-join groupBy). Round-7: q4 is size-adaptive (toy-scale
-    inversion, invariant 16) — force the layout branch the big SFs take."""
-    force_at_scale("q4_star_join")
+    left is the tiny post-join groupBy)."""
     plan = _pinned_smj_plan(spark, "q4_star_join")
     assert "SortMergeJoin" in plan, plan
     assert "Exchange hashpartitioning(l_orderkey" not in plan, plan
@@ -108,34 +90,31 @@ def test_q20_graded_agg_is_exchange_free(spark):
     assert "Exchange hashpartitioning" not in plan, plan
 
 
-def test_x7_range_join_layout_is_exchange_and_sort_free(spark, force_at_scale):
+def test_x7_range_join_layout_is_exchange_and_sort_free(spark):
     """Round-11 (r10 verdict #2): the graded range join rides the user-bucketed
     (user_id, us)-sorted events layout — the RANGE-frame window consumes the bucket
     partitioning and the two-level sort directly: zero Exchange AND zero Sort
     anywhere in the plan (the per-run user_id shuffle was this row's dominant cost)."""
-    force_at_scale("x7_range_join")  # force the big-SF layout branch
     plan = _pinned_smj_plan(spark, "x7_range_join")
     assert "Exchange" not in plan, plan
     assert not [l for l in plan.splitlines()
                 if l.strip().startswith(("+- Sort ", ":- Sort ", "Sort "))], plan
 
 
-def test_x4_median_layout_is_exchange_free(spark, force_at_scale):
+def test_x4_median_layout_is_exchange_free(spark):
     """Round-13: the graded engine-native median rides the same user-bucketed
     events layout as x7 — the ObjectHashAggregate consumes the bucket
     partitioning (aggregation accepts subset partitioning), so the per-run
     user_id exchange of the whole stream disappears: zero Exchange anywhere."""
-    force_at_scale("x4_udf_grouped_median")  # force the big-SF layout branch
     plan = _pinned_smj_plan(spark, "x4_udf_grouped_median")
     assert "Exchange" not in plan, plan
 
 
-def test_x9_pack_layout_is_one_exchange_no_python(spark, force_at_scale):
+def test_x9_pack_layout_is_one_exchange_no_python(spark):
     """Round-11 (r10 verdict #3): the graded x9_pack reads the written docs_ntok
     layout (token counts + global cumsum materialized at ingest) — the per-query
     plan is scan -> bin projection -> ONE aggregate exchange: no text column, no
     Python/Arrow node, no window, no sort."""
-    force_at_scale("x9_pack")  # force the big-SF branch
     plan = _pinned_smj_plan(spark, "x9_pack")
     exchanges = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
     assert len(exchanges) == 1, plan

@@ -2,7 +2,7 @@
 min-of-N with per-run prints so a host stall is visible, bench-like session confs,
 layouts prebuilt untimed).  Usage:
 
-    python tools/time_query.py q4_star_join q4_star_join_shuffle [--sf DIR] [--n 5]
+    python tools/time_query.py q30_yoy_delta q30_yoy_delta_shuffle [--sf DIR] [--n 5]
 """
 
 from __future__ import annotations
