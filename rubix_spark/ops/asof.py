@@ -239,7 +239,7 @@ def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.where(
         F.col("event_type").isin("click", "purchase") & F.col("us").isNotNull()
     ).select(
-        "event_id", "user_id", F.col("us").alias("us"), "event_type",
+        "event_id", "user_id", "us", "event_type",
         F.when(has_v, F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long")).alias("cv"),
         F.when(click, 1).otherwise(0).alias("cf"),
     )

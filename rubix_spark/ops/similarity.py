@@ -432,29 +432,27 @@ def _ivf_assign(emb: DataFrame, cents: dict) -> DataFrame:
     """
     import math
 
-    # Zero-norm and NULL / NULL-element centroids are skipped rather than
-    # normalized (x/0 or None would raise driver-side): the oracle's
-    # cos(v, such a centroid) is NULL (invariant 35),
-    # and a NULL score never wins ROW_NUMBER(ORDER BY cos DESC) — dropping the
-    # struct reproduces exactly that. All-zero codebook (or a zero query
-    # vector): every score is NULL/0 on both engines and the tie rule picks the
-    # smallest cid. A NaN-COMPONENT centroid (norm NaN, not zero) is the
-    # opposite case and must be KEPT: its cosine is NaN and BOTH engines rank
-    # NaN greatest under ORDER BY cos DESC / greatest(), so dropping it would
-    # hand the win to a different centroid than the oracle (r13 review; the
-    # NaN/NaN normalized constants reproduce the NaN score exactly). Fixture
-    # codebooks have neither, so generated expressions and measured plans are
-    # unchanged.
+    # A zero-norm or NULL / NULL-element centroid is not normalized (x/0 or None
+    # would raise driver-side): it scores a NULL literal, as the oracle's
+    # cos(v, such a centroid) is NULL (invariant 35). A NULL field orders below
+    # every score in greatest(), so it never wins over a scored centroid, and a
+    # row every centroid scores NULL (a NULL or ragged row, a degenerate
+    # codebook) takes the smallest cid of ALL centroids — the oracle's
+    # ROW_NUMBER(ORDER BY NULL DESC, cid). A NaN-COMPONENT centroid (norm NaN,
+    # not zero) is the opposite case and must be scored: its cosine is NaN and
+    # BOTH engines rank NaN greatest under ORDER BY cos DESC / greatest() (r13
+    # review; the NaN/NaN normalized constants reproduce the NaN score exactly).
+    # Fixture codebooks have neither, so generated expressions and measured
+    # plans are unchanged.
+    def score(ce) -> Column:
+        if _well_formed(ce) and (_py_dot(ce, ce) > 0.0 or math.isnan(_py_dot(ce, ce))):
+            return dot_lit("embedding", [x / math.sqrt(_py_dot(ce, ce)) for x in ce])
+        return F.lit(None).cast("double")
+
     scored = [
-        F.struct(
-            dot_lit("embedding", [x / math.sqrt(_py_dot(ce, ce)) for x in ce]).alias("cs"),
-            F.lit(-cid).alias("mcid"),
-        )
+        F.struct(score(ce).alias("cs"), F.lit(-cid).alias("mcid"))
         for cid, ce in cents.items()
-        if _well_formed(ce) and (_py_dot(ce, ce) > 0.0 or math.isnan(_py_dot(ce, ce)))
     ]
-    if not scored:
-        return emb.select("vec_id", "embedding", F.lit(min(cents)).alias("cid"))
     return emb.select("vec_id", "embedding", (-F.greatest(*scored).getField("mcid")).alias("cid"))
 
 

@@ -241,11 +241,14 @@ def test_corpus_cluster_leaves_degenerate_rows_out(spark, degenerate_emb_dir):
     assert sum(r.n_docs for r in got) == len(rows) - 5  # NaN rows 5, 80 and rows 30-32
 
 
-def test_zero_norm_centroid_matches_oracle(spark, tmp_path_factory):
+@pytest.mark.parametrize("bad", ["zero", "null"])
+def test_zero_norm_centroid_matches_oracle(spark, tmp_path_factory, bad):
     """A zero vector INSIDE the codebook (first N_CENTROIDS rows): the oracle's
     cos(v, zero-centroid) is NULL and never wins the assignment ROW_NUMBER;
-    _ivf_assign must skip it rather than divide by zero driver-side
-    (invariant 35's centroid case)."""
+    _ivf_assign must score it NULL rather than divide by zero driver-side
+    (invariant 35's centroid case). A NULL centroid at cid 0 scores NULL the same
+    way, and a NULL member, which every centroid scores NULL, takes cid 0 as the
+    oracle's tie rule does."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -253,13 +256,17 @@ def test_zero_norm_centroid_matches_oracle(spark, tmp_path_factory):
     from rubix_spark.ops.similarity import DIM
 
     rng = np.random.default_rng(47)
-    m = rng.normal(size=(300, DIM)).astype(np.float32)
-    m[2] = 0.0        # zero CENTROID (N_CENTROIDS = 16 > 2)
-    m[100] = 0.0      # zero member too
+    m = rng.normal(size=(300, DIM)).astype(np.float32).tolist()
+    if bad == "zero":
+        m[2] = [0.0] * DIM    # zero CENTROID (N_CENTROIDS = 16 > 2)
+        m[100] = [0.0] * DIM  # zero member too
+    else:
+        m[0] = None           # NULL centroid with the smallest cid
+        m[100] = None         # NULL member
     d = tmp_path_factory.mktemp("zerocent")
     pq.write_table(pa.table({
         "vec_id": pa.array(range(len(m)), pa.int64()),
-        "embedding": pa.array(m.tolist(), pa.list_(pa.float32())),
+        "embedding": pa.array(m, pa.list_(pa.float32())),
         "label": pa.array([0] * len(m), pa.int32()),
     }), str(d / "embeddings.parquet"))
     for name in ("x2_ann_ivf", "x1_semantic_dedup", "x2_knn_join_ivf"):
