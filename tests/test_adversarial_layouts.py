@@ -70,8 +70,9 @@ def _assert_parity(spark, name: str, sf_dir: str, tables) -> None:
 # every size, so forcing q31_agg_live leaves it unchanged; q31_agg_live runs that branch.
 @pytest.mark.parametrize("name,branches", [
     ("q30_yoy_delta", ("q30_yoy_delta",)),
-    # dictionary-probe variant of the q30 tail (brand rides as an int id)
-    ("q30_yoy_delta", ("q30_yoy_delta", "q30_brand_dict")),
+    # dictionary-probe variant of the q30 tail (brand rides as an int id); only
+    # the small body consults q30_brand_dict, so q30_yoy_delta stays unforced
+    ("q30_yoy_delta", ("q30_brand_dict",)),
     ("q31_grouping_sets", ("q31_agg_live",)),
     ("q31_agg_live", ("q31_agg_live",)),
 ])
@@ -235,34 +236,170 @@ def test_embedding_dots_share_one_null_rule(spark, request, name, emb):
     _assert_parity(spark, name, d, ("embeddings",))
 
 
+# One vector of each class the fold's rule tells apart, 4 wide (values exact in
+# float32, so every product and sum is exact in both engines).
+_VEC_CLASSES = {
+    "clean": [0.5, -1.0, 2.0, 0.25],
+    "zero": [0.0, 0.0, 0.0, 0.0],
+    "nan": [0.5, float("nan"), 2.0, 0.25],
+    "null": None,
+    "null_elem": [0.5, None, 2.0, 0.25],
+    "short": [0.5, -1.0, 2.0],
+    "long": [0.5, -1.0, 2.0, 0.25, 1.0],
+}
+
+
+def _model_dot(a, b):
+    """The fold's rule: NULL unless both vectors are non-NULL, NULL-free and
+    equally wide; otherwise the sequential sum (NaN propagates)."""
+    if a is None or b is None or None in a or None in b or len(a) != len(b):
+        return None
+    return sum(x * y for x, y in zip(a, b))
+
+
+def _model_cos(a, b):
+    """NULL where the dot is NULL or a norm is zero (the NULLIF guard)."""
+    import math
+
+    d = _model_dot(a, b)
+    if d is None:
+        return None
+    denom = math.sqrt(_model_dot(a, a)) * math.sqrt(_model_dot(b, b))
+    return None if denom == 0.0 else d / denom
+
+
+def _same_cell(got, want) -> bool:
+    import math
+
+    if want is None or got is None:
+        return got is None and want is None
+    if math.isnan(want) or math.isnan(got):
+        return math.isnan(want) and math.isnan(got)
+    return math.isclose(got, want, rel_tol=1e-12, abs_tol=1e-15)
+
+
+def _spark_scores(spark, a, fn_col, fn_lit) -> dict:
+    """{class: (column form, literal form)} of ``fn(a, class vector)`` in Spark."""
+    from pyspark.sql import functions as F
+
+    names = list(_VEC_CLASSES)
+    schema = ", ".join(["a array<float>"] + [f"b_{n} array<float>" for n in names])
+    df = spark.createDataFrame([(a, *(_VEC_CLASSES[n] for n in names))], schema)
+    row = df.select(
+        *[fn_col(F.col("a"), F.col(f"b_{n}")).alias(f"c_{n}") for n in names],
+        *[fn_lit("a", _VEC_CLASSES[n]).alias(f"l_{n}") for n in names],
+    ).collect()[0]
+    return {n: (row[f"c_{n}"], row[f"l_{n}"]) for n in names}
+
+
+def _duck_vec(v) -> str:
+    # a SQL literal: a bound Python NaN would reach DuckDB as NULL
+    if v is None:
+        return "CAST(NULL AS FLOAT[])"
+    cells = ["NULL" if x is None else f"'{x!r}'::FLOAT" for x in v]
+    return f"CAST([{', '.join(cells)}] AS FLOAT[])"
+
+
+def _duck_scores(expr_of) -> dict:
+    """{(class a, class b): DuckDB value of ``expr_of('a', 'b')``}."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        return {
+            (na, nb): con.execute(
+                f"SELECT {expr_of('a', 'b')} FROM "
+                f"(SELECT {_duck_vec(va)} AS a, {_duck_vec(vb)} AS b)"
+            ).fetchone()[0]
+            for na, va in _VEC_CLASSES.items()
+            for nb, vb in _VEC_CLASSES.items()
+        }
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("cls", list(_VEC_CLASSES))
+def test_dot_null_rule_is_one_rule(spark, cls):
+    """Spark's column fold, its literal-vector form and DuckDB's DUCK_DOT give the
+    same dot of one vector class against every class: NULL for a NULL,
+    NULL-element or differently wide operand, NaN through a NaN component."""
+    from rubix_spark.ops.similarity import DUCK_DOT, dot, dot_lit
+
+    a = _VEC_CLASSES[cls]
+    sp = _spark_scores(spark, a, dot, dot_lit)
+    duck = _duck_scores(lambda x, y: DUCK_DOT.format(a=x, b=y))
+    for nb, vb in _VEC_CLASSES.items():
+        want = _model_dot(a, vb)
+        got = {"spark": sp[nb][0], "spark_lit": sp[nb][1], "duckdb": duck[(cls, nb)]}
+        assert all(_same_cell(g, want) for g in got.values()), (cls, nb, want, got)
+
+
+@pytest.mark.parametrize("cls", list(_VEC_CLASSES))
+def test_cosine_null_rule_is_one_rule(spark, cls):
+    """The four cosines — Spark's column and literal forms, DuckDB's _duck_cos and
+    the driver-side _py_cos that ranks IVF probes — agree per class pair: NULL
+    (-inf driver-side, which ranks last like NULL) for a malformed or zero-norm
+    operand, NaN through a NaN component, the same value otherwise."""
+    from rubix_spark.ops.similarity import _duck_cos, _py_cos, cosine, cosine_lit
+
+    a = _VEC_CLASSES[cls]
+    sp = _spark_scores(spark, a, cosine, cosine_lit)
+    duck = _duck_scores(_duck_cos)
+    for nb, vb in _VEC_CLASSES.items():
+        want = _model_cos(a, vb)
+        py = _py_cos(a, vb)
+        got = {
+            "spark": sp[nb][0], "spark_lit": sp[nb][1], "duckdb": duck[(cls, nb)],
+            "py": None if py == float("-inf") else py,
+        }
+        assert all(_same_cell(g, want) for g in got.values()), (cls, nb, want, got)
+
+
 def test_corpus_cluster_leaves_degenerate_rows_out(spark, degenerate_emb_dir):
     d, rows = degenerate_emb_dir
     got = REG["x2_corpus_cluster"].builder(spark, d).collect()
     assert sum(r.n_docs for r in got) == len(rows) - 5  # NaN rows 5, 80 and rows 30-32
 
 
-@pytest.mark.parametrize("bad", ["zero", "null"])
+@pytest.mark.parametrize(
+    "bad", ["zero", "null", "null_elem", "ragged", "nan", "null_last", "all_null"])
 def test_zero_norm_centroid_matches_oracle(spark, tmp_path_factory, bad):
     """A zero vector INSIDE the codebook (first N_CENTROIDS rows): the oracle's
     cos(v, zero-centroid) is NULL and never wins the assignment ROW_NUMBER;
     _ivf_assign must score it NULL rather than divide by zero driver-side
-    (invariant 35's centroid case). A NULL centroid at cid 0 scores NULL the same
-    way, and a NULL member, which every centroid scores NULL, takes cid 0 as the
-    oracle's tie rule does."""
+    (invariant 35's centroid case). A NULL, NULL-element or ragged centroid at
+    cid 0 scores NULL the same way, and a member of that kind, which every
+    centroid scores NULL, takes cid 0 as the oracle's tie rule does. A NaN
+    centroid scores NaN, which both engines rank first. A NULL centroid with the
+    largest cid, and a codebook of NULL rows only, follow the same rules."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from rubix_spark.ops.similarity import DIM
+    from rubix_spark.ops.similarity import DIM, N_CENTROIDS
 
     rng = np.random.default_rng(47)
     m = rng.normal(size=(300, DIM)).astype(np.float32).tolist()
     if bad == "zero":
         m[2] = [0.0] * DIM    # zero CENTROID (N_CENTROIDS = 16 > 2)
         m[100] = [0.0] * DIM  # zero member too
-    else:
+    elif bad == "null":
         m[0] = None           # NULL centroid with the smallest cid
         m[100] = None         # NULL member
+    elif bad == "null_elem":
+        m[0][5] = None
+        m[100][7] = None
+    elif bad == "ragged":
+        m[0] = m[0][:DIM - 2]
+        m[100] = m[100][:DIM - 2]
+    elif bad == "nan":
+        m[0][5] = float("nan")  # NaN CENTROID: every well-formed row scores NaN
+    elif bad == "null_last":
+        m[N_CENTROIDS - 1] = None
+        m[100] = None
+    else:
+        for i in range(N_CENTROIDS):
+            m[i] = None
     d = tmp_path_factory.mktemp("zerocent")
     pq.write_table(pa.table({
         "vec_id": pa.array(range(len(m)), pa.int64()),
@@ -380,12 +517,15 @@ def test_priority_window_matches_oracle_on_directory_fixture(
 
 @pytest.mark.parametrize("name,branches", [
     # the branch deciders and layout ingests all read footers through the isdir
-    # path; x9_pack's docs_ntok ingest sits outside the PRIORITY sweep above
+    # path; x9_pack's docs_ntok ingest and q28_tpch_q1's dictionary-id decode sit
+    # outside the PRIORITY sweep above, and so does q30's brand dictionary probe
     ("q30_yoy_delta", ("q30_yoy_delta",)),
     ("q31_grouping_sets", ("q31_agg_live",)),
     ("q31_agg_live", ("q31_agg_live",)),
     ("x9_pack", ()),
     ("x2_ann_bruteforce", ("x2_ann_bruteforce",)),
+    ("q28_tpch_q1", ()),
+    ("q30_yoy_delta", ("q30_brand_dict",)),
 ])
 def test_layout_branch_matches_oracle_on_directory_fixture(
     spark, adversarial_dirlayout_dir, force_at_scale, name, branches

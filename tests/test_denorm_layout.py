@@ -1,14 +1,18 @@
 """Round-10 denormalized fact layouts (sources/bucketing._denorm_build).
 
-Two claims need repo-side proof:
+Three claims need repo-side proof:
 1. The materialized columns EQUAL the joins they replace (ingest correctness).
 2. The size-branched graded bodies (``AT_SCALE``) match their DuckDB oracles when
    the at-scale branch is FORCED — the sf0.01 oracle gate only exercises the small
    branch (row counts sit under the thresholds), so without this the at-scale
    bodies would ship oracle-unchecked.
+3. The rows with one layout body at every size match their oracles at sf0.01,
+   the scale the driver's correctness gate runs.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -17,7 +21,7 @@ from pyspark.sql import functions as F
 from rubix_spark import catalog
 from rubix_spark.queries import load_all
 from rubix_spark.sources.bucketing import bucketed_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, SF_T2
 from tests.oracle_utils import compare
 
 REGISTRY = load_all()
@@ -117,12 +121,40 @@ def test_lineitem_dictionary_ids_match(spark):
     ("q31_grouping_sets", "q31_agg_live"),
     ("q31_agg_live", "q31_agg_live"),
     ("x2_ann_bruteforce", "x2_ann_bruteforce"),
+    # q30's brand dictionary probe (only its small body consults the entry)
+    ("q30_yoy_delta", "q30_brand_dict"),
 ])
 def test_forced_layout_branch_matches_oracle(spark, force_at_scale, name, branch):
     force_at_scale(branch)
     q = REGISTRY[name]
     problems = compare(q.builder(spark, SF_SMOKE), q.oracle, SF_SMOKE)
     assert not problems, f"{name} (layout branch): " + "; ".join(problems)
+
+
+# Rows that run their layout body at every size (no ``AT_SCALE`` entry). Until
+# their size branches went, sf0.01 ran a small body; test_queries checks every row
+# at sf0.001 only, so this pins the body the driver's correctness scale now runs.
+_LAYOUT_ONLY_ROWS = [
+    "q3_agg_having", "q28_tpch_q1", "q4_star_join", "x4_udf_grouped_median",
+    "x7_range_join", "x9_pack", "x1_dedup_components",
+]
+
+
+@pytest.mark.parametrize("name", _LAYOUT_ONLY_ROWS)
+def test_layout_body_matches_oracle_at_t2(spark, name):
+    from rubix_spark.queries import AT_SCALE
+    from rubix_spark.sources.bucketing import warehouse_root
+
+    if not os.path.isdir(SF_T2):
+        pytest.skip(f"{SF_T2} not present")
+    assert name not in AT_SCALE
+    q = REGISTRY[name]
+    df = q.builder(spark, SF_T2)
+    if name != "x1_dedup_components":  # hub contraction: no written layout to read
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert warehouse_root() in plan, f"{name} reads no written layout:\n{plan}"
+    problems = compare(df, q.oracle, SF_T2)
+    assert not problems, f"{name} at sf0.01: " + "; ".join(problems)
 
 
 def test_natkey_null_sentinel_contract(spark, tmp_path):

@@ -68,6 +68,42 @@ def test_repetition_kernel_matches_explode_on_adversarial_text(spark, adversaria
     assert len(k) > 50  # the random docs actually produced 3-grams
 
 
+def test_median_value_kernel_matches_pandas_model(spark):
+    """median_value (x4_udf_grouped_median_pandas' grouped-aggregate UDF) vs a
+    driver-side model with the exact pd.Series.median semantics: NULL/NaN skipped,
+    all-NULL and all-NaN groups -> NULL, NULL group key kept as its own group, odd
+    and even group sizes interpolated."""
+    import math
+
+    from rubix_spark.ops.udf import median_value
+
+    rng = random.Random(23)
+    rows = []
+    for _ in range(3000):
+        uid = rng.choice([None, 1, 2, 3, 5, 8, 13, 21, 34, 55])
+        v = rng.choice([None, float("nan"), rng.uniform(-100, 100),
+                        rng.uniform(-100, 100), rng.uniform(-100, 100)])
+        rows.append((uid, v))
+    rows += [(99, None), (98, float("nan")), (97, 1.5), (96, 1.0), (96, 4.0)]
+    df = spark.createDataFrame(rows, "user_id bigint, value double")
+    got = {
+        r.user_id: r.med
+        for r in df.groupBy("user_id").agg(median_value("value").alias("med")).collect()
+    }
+    from collections import defaultdict
+    groups = defaultdict(list)
+    for uid, v in rows:
+        groups[uid].append(v)
+    assert set(got) == set(groups)
+    for uid, vals in groups.items():
+        clean = sorted(v for v in vals if v is not None and not math.isnan(v))
+        if not clean:
+            assert got[uid] is None, (uid, got[uid])
+            continue
+        mid = (clean[(len(clean) - 1) // 2] + clean[len(clean) // 2]) / 2.0
+        assert math.isclose(got[uid], mid, rel_tol=1e-12, abs_tol=1e-12), (uid, got[uid], mid)
+
+
 @pytest.fixture(scope="module")
 def adversarial_emb_dir(tmp_path_factory):
     # dim must be the engine contract's DIM: the JL projection matrix and the

@@ -7,6 +7,10 @@ sort, window-group-limit pushdown, Arrow (not pickle) Python evaluation.
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from rubix_spark.queries import load_all
 from tests.conftest import SF_SMOKE
 
@@ -232,3 +236,17 @@ def test_substring_dedup_shuffles_hash_not_text(spark):
     assert not any(("text" in l) or ("sh#" in l) for l in exchanges), exchanges
     assert any("h1#" in l and "h2#" in l for l in exchanges), exchanges
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("name", ["q3_agg_having", "q28_tpch_q1"])
+def test_report_aggregate_keys_on_dictionary_ids(spark, name):
+    """Invariant 29, at every size: q3 and q28 group the lineitem layout on its
+    l_rf_sid/l_ls_sid ints. The scan never reads the returnflag/linestatus strings
+    and every aggregate keys on the two ids; the strings decode on the result."""
+    plan = _plan(spark, name)
+    scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
+    assert scans and all("l_rf_sid" in s and "l_ls_sid" in s for s in scans), plan
+    assert not any("l_returnflag" in s or "l_linestatus" in s for s in scans), plan
+    aggs = [l for l in plan.splitlines() if "HashAggregate(keys=[" in l]
+    assert aggs and all(
+        re.search(r"keys=\[l_rf_sid#\d+, l_ls_sid#\d+\]", a) for a in aggs), plan
