@@ -3,10 +3,13 @@
 Reference parity map (operator ids from SURVEY.md §2.A):
 
 - ``_lookup()``    — A2's routing (CachingInputStream.java:315-500), the one hit/miss
-                     decision behind ``read()``, ``read_row_groups()`` and ``resolve()``:
-                     TTL, staleness, row-group coverage, counters, and A5's corruption
-                     fallback (local failure → invalidate + remote read,
-                     ``CachedReadRequestChain.java:204-223``)
+                     decision behind ``read()``, ``read_row_groups()``, ``read_range()``
+                     and ``resolve()``: TTL, staleness, row-group coverage, counters,
+                     and A5's corruption fallback (local failure → invalidate + remote
+                     read, ``CachedReadRequestChain.java:204-223``). ``read_range()``
+                     offers the path's whole-file copy first and its row-group subset
+                     only when that copy does not hit, so each range read counts one hit
+                     or one miss
 - ``warm()``       — A6/A10/A18 read-through + async warm-up: a file that fits one
                      ``PART_BYTES`` output part is copied byte for byte from one open
                      handle, the remote's bytes as they are (``RemoteReadRequestChain
@@ -16,6 +19,11 @@ Reference parity map (operator ids from SURVEY.md §2.A):
 - row-group fetch  — A4/A19: collated runs fetched in-process on a pool of at most
                      ``FETCH_THREADS`` threads, the 10-thread remote-fetch pool of
                      ``FileDownloader.java:194-239``
+- one copy per path — the A14 block bitmap (``FileMetadata.java:96-97``) is one piece
+                     of state per file, so a fully read file answers every later ranged
+                     read. Here the whole-file copy ``<path>`` is that authority: it
+                     serves ``read_range()``, its commit replaces the row-group subset
+                     ``<path>#rg``, and ``invalidate(path)`` drops both
 - staleness        — A16: remote mtime/size vs manifest ⇒ invalidate + new generation
                      (``BookKeeper.java:295-305, 774-777``)
 - generations      — A17: monotonic per-path counter; local dirs carry ``_g<N>`` suffixes
@@ -45,8 +53,8 @@ Cluster posture: on a real cluster the local copy lands on executor-local storag
 (per-node NVMe) and task placement follows parquet block locality; RubiX's consistent-hash
 split ownership (A12/A21) is replaced by Spark's own locality preferences, and its
 cross-node cache plane (A8/A20) by the shuffle service — documented design decisions, not
-gaps. Granularity is whole files (a Spark scan re-reads whole row groups anyway, so block
-granularity buys nothing at parquet level).
+gaps. The sub-file block is parquet's row group (a Spark scan re-reads whole row groups
+anyway, so smaller blocks buy nothing at parquet level).
 """
 
 from __future__ import annotations
@@ -243,7 +251,7 @@ class CacheManager:
         if entry is None:
             return None
         if entry.local_path != local:  # a newer warm superseded it: serve, don't memoize
-            return self.spark.read.parquet(*paths)
+            return self._scan(key, paths)
         return self._memo_df(entry, groups, paths)
 
     def _local_dir(self, remote_path: str, generation: int) -> str:
@@ -284,12 +292,19 @@ class CacheManager:
         """Commit a copy just written to ``entry.local_path`` through the manifest CAS
         (A13). When a newer generation won the race (A17) the copy is discarded;
         otherwise the key's memoized DataFrames go, ``counter`` counts the copy and the
-        cache evicts down to its budget."""
+        cache evicts down to its budget. A whole-file copy also replaces the path's
+        row-group subset, which it answers every range read for: the subset leaves the
+        manifest and its dir is tombstoned, so in-flight scans over it still finish."""
         if not self.manifest.put(entry):
             shutil.rmtree(entry.local_path, ignore_errors=True)
             return False
+        keys = [entry.remote_path]
+        if entry.row_groups is None:
+            keys.append(self._rg_key(entry.remote_path))
+            self.manifest.remove(keys[1])
         with self._lock:
-            self._df_memo.pop(entry.remote_path, None)
+            for key in keys:
+                self._df_memo.pop(key, None)
             self._counters[counter] += 1
         self.evict_to_budget()
         return True
@@ -329,9 +344,14 @@ class CacheManager:
     # ------------------------------------------------------------------ row-group granularity
     # The reference caches 1 MiB blocks with a per-block bitmap (FileMetadata.java:96-97)
     # so a selective query warms only the blocks it touches. Parquet's natural block is
-    # the row group: these three methods give the same economics — footer-stats pruning
-    # picks the relevant row groups, warm materializes ONLY those (one local file per
-    # group, fetched by ``_fetch_runs``), and reads are served from the subset as long as it covers the request and is fresh.
+    # the row group: these methods give the same economics — footer-stats pruning picks
+    # the relevant row groups, warm materializes ONLY those (one local file per group,
+    # fetched by ``_fetch_runs``) under the key ``<path>#rg``, and reads are served from
+    # the subset as long as it covers the request and is fresh. The bitmap is one piece
+    # of state per file, so a whole-file copy outranks the subset: ``read_range`` serves
+    # from it when it hits, and its commit removes the subset (``_commit``).
+    # ``read_row_groups`` returns exactly the groups asked for, so it reads the subset
+    # alone.
 
     def relevant_row_groups(self, remote_path: str, column: str, lo=None, hi=None) -> list[int]:
         """Row-group pruning from parquet footer min/max statistics (conservative:
@@ -457,13 +477,18 @@ class CacheManager:
         return self.spark.read.parquet(remote_path)
 
     def read_range(self, remote_path: str, column: str, lo=None, hi=None, warm_on_miss: bool = True) -> DataFrame:
-        """Predicate-driven cached read: prune row groups by footer stats, serve/warm
-        only those, and re-apply the predicate as the residual filter (stats pruning is
-        conservative, so the filter — not the pruning — defines the result)."""
-        rgs = self.relevant_row_groups(remote_path, column, lo, hi)
-        if not rgs:
-            return self.spark.read.parquet(remote_path).where("1=0")
-        df = self.read_row_groups(remote_path, rgs, warm_on_miss=warm_on_miss)
+        """Predicate-driven cached read: a fresh whole-file copy serves the range as a
+        hit; otherwise prune row groups by footer stats and serve/warm only those. The
+        predicate is re-applied as the residual filter either way (stats pruning is
+        conservative, so the filter — not the pruning — defines the result). A whole
+        copy that fails its lookup (expired, stale or unreadable) is dropped as
+        ``_lookup`` drops it, and the row-group path counts the read's one miss or hit."""
+        df = self._lookup(remote_path, remote_path, self._serve_whole, count_miss=False)
+        if df is None:
+            rgs = self.relevant_row_groups(remote_path, column, lo, hi)
+            if not rgs:
+                return self.spark.read.parquet(remote_path).where("1=0")
+            df = self.read_row_groups(remote_path, rgs, warm_on_miss=warm_on_miss)
         c = df[column]
         if lo is not None:
             df = df.where(c >= lo)
@@ -473,7 +498,8 @@ class CacheManager:
 
     # ------------------------------------------------------------------ read path
     def _lookup(
-        self, key: str, remote_path: str, serve: Callable[[Entry], T], want: Iterable[int] = ()
+        self, key: str, remote_path: str, serve: Callable[[Entry], T], want: Iterable[int] = (),
+        count_miss: bool = True,
     ) -> T | None:
         """The one hit/miss decision (CachingInputStream.java:315-500) for manifest
         ``key`` over ``remote_path``: ``serve(entry)`` on a hit, None on a miss.
@@ -482,11 +508,13 @@ class CacheManager:
         in ``want`` and fresh; an expired or stale entry is invalidated. When ``serve``
         fails on the local copy the entry is invalidated and the read counts as a
         fallback and a miss (corruption fallback, CachedReadRequestChain.java:204-223),
-        or raises CacheReadError in strict mode."""
+        or raises CacheReadError in strict mode. Only ``key`` is dropped: the other
+        granularity of the path answers its own lookups. ``count_miss=False`` leaves
+        the miss to a lookup the caller makes next."""
         entry = self.manifest.get(key)
         ttl = self.ttl_seconds
         if entry is not None and ttl is not None and time.time() - entry.last_access > ttl:
-            self.invalidate(key)
+            self._drop(key)
             entry = None
         if entry is not None and set(want) <= set(entry.row_groups or ()):
             if self._fresh(entry, remote_path):
@@ -499,14 +527,19 @@ class CacheManager:
                 except Exception:
                     if self.strict:
                         raise CacheReadError(f"cached read failed for {key}")
-                    self.invalidate(key)
+                    self._drop(key)
                     with self._lock:
                         self._counters["fallbacks"] += 1
             else:
-                self.invalidate(key)
-        with self._lock:
-            self._counters["misses"] += 1
+                self._drop(key)
+        if count_miss:
+            with self._lock:
+                self._counters["misses"] += 1
         return None
+
+    def _serve_whole(self, entry: Entry) -> DataFrame:
+        """The memoized DataFrame over a whole-file entry's copy."""
+        return self._memo_df(entry, None, [entry.local_path])
 
     def read(self, remote_path: str, warm_on_miss: bool = True) -> DataFrame:
         """RubiX's per-read routing at file granularity.
@@ -514,7 +547,7 @@ class CacheManager:
         CACHED+fresh → local parquet; stale → invalidate, re-warm; miss → warm inline
         (read-through, A6) or serve remote directly when warming is off / path gated.
         """
-        df = self._lookup(remote_path, remote_path, lambda e: self._memo_df(e, None, [e.local_path]))
+        df = self._lookup(remote_path, remote_path, self._serve_whole)
         if df is not None:
             return df
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
@@ -593,12 +626,22 @@ class CacheManager:
 
     # ------------------------------------------------------------------ invalidation
     def invalidate(self, remote_path: str) -> None:
-        """Drop the cached copy and bump the generation (BookKeeper.invalidateFileMetadata)."""
-        entry = self.manifest.remove(remote_path)
+        """Drop every cached copy of ``remote_path``, the whole file and its row-group
+        subset, and bump their generations (BookKeeper.invalidateFileMetadata): an
+        in-place rewrite that keeps mtime and size must leave no copy serving. A
+        ``<path>#rg`` key drops the subset alone."""
+        self._drop(remote_path)
+        if not remote_path.endswith("#rg"):
+            self._drop(self._rg_key(remote_path))
+
+    def _drop(self, key: str) -> None:
+        """Drop manifest ``key``'s copy and memo and bump its generation, counting one
+        invalidation when there was a copy."""
+        entry = self.manifest.remove(key)
         with self._lock:
-            self._df_memo.pop(remote_path, None)
+            self._df_memo.pop(key, None)
         if entry:
-            self.manifest.next_generation(remote_path)
+            self.manifest.next_generation(key)
             with self._lock:
                 self._counters["invalidations"] += 1
 
@@ -647,7 +690,7 @@ class CacheManager:
             if not ok:
                 broken += 1
                 if repair:
-                    self.invalidate(entry.remote_path)
+                    self._drop(entry.remote_path)
                     repaired += 1
         orphans_swept = 0
         if repair:

@@ -3,8 +3,9 @@
 The reference keeps, per cached file, a bitmap mdfile plus a generation number
 (``rubix-bookkeeper/.../FileMetadata.java:96-97, 125-182``) and checks staleness by
 ``lastModified`` (``BookKeeper.java:295-305, 774-777``).  We cache whole parquet
-files/directories (Spark's natural unit — a row-group re-read costs the same scan task),
-so the manifest is one entry per remote path:
+files/directories (Spark's natural unit — a row-group re-read costs the same scan task)
+and row-group subsets under a ``<path>#rg`` key, which a whole-file copy of the path
+replaces (``CacheManager._commit``), so the manifest is one entry per key:
 
     remote_path -> {local_path, size_bytes, last_modified, generation, last_access, state}
 

@@ -17,7 +17,8 @@ stays open for pipelining (the client pools it).
 Methods (reference analog in parens):
 - ``get_cache_status(path)``   — CACHED/stale/absent + entry metadata (getCacheStatus)
 - ``warm(path)``               — read-through warm, returns local path (readData/setAllCached)
-- ``invalidate(path)``         — drop cached copies (invalidateFileMetadata)
+- ``invalidate(path)``         — drop the path's cached copies, whole file and row-group
+                                 subset (invalidateFileMetadata)
 - ``get_cache_metrics()``      — counter map (getCacheMetrics)
 - ``list_entries()``           — manifest dump (admin surface)
 - ``validate(repair)``         — local-copy sweep

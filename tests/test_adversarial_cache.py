@@ -382,30 +382,39 @@ def test_peer_fetch_of_just_evicted_entry(remotes, tmp_path):
 
 
 def test_rowgroup_subset_vs_whole_file_overlap(remotes, tmp_path):
-    """The two granularities of one path must never share state: warming a subset
-    then the whole file (and vice versa) keeps both entries independently correct,
-    and invalidating one never harms the other."""
+    """The two granularities of one path never share a directory. A whole-file warm
+    replaces the subset warmed before it: the subset leaves the manifest and its dir
+    is tombstoned. A subset warmed after the whole copy lives beside it, and dropping
+    either entry never harms the other's data."""
     p = remotes[2]  # 1000 rows, 10 row groups
     cm = CacheManager(None, str(tmp_path / "cache"))
-    cm.manifest.RECLAIM_GRACE = 0.0
 
     sub = cm.warm_row_groups(p, [1, 3])
     whole = cm.warm(p)
-    assert sub != whole and os.path.isdir(sub) and os.path.isdir(whole)
+    assert sub != whole and os.path.isdir(whole)
+    assert cm.manifest.get(p + "#rg") is None
+    assert sub in cm.manifest._tombstones and os.path.isdir(sub)  # inside its grace
     _check_serve_fresh(cm, remotes)
 
     # whole-file copy holds ALL rows exactly once (an rg/whole dir share would
     # silently duplicate the subset's rows into the whole-file read)
     assert _canon(_read_dir(whole)) == _canon(pq.read_table(p))
 
+    cm.manifest.RECLAIM_GRACE = 0.0
+    sub = cm.warm_row_groups(p, [1, 3])
+    assert sub != whole and os.path.isdir(sub)
+    _check_serve_fresh(cm, remotes)
     cm.invalidate(p + "#rg")
     assert cm.manifest.get(p + "#rg") is None
     assert cm.manifest.get(p) is not None
     assert _canon(_read_dir(cm.manifest.get(p).local_path)) == _canon(pq.read_table(p))
 
-    # re-warm the subset, then kill the whole-file entry: subset stays intact
+    # re-warm the subset, then lose the whole-file copy: the repair drops only the
+    # whole-file entry, and the subset stays intact
     cm.warm_row_groups(p, [0, 9])
-    cm.invalidate(p)
+    shutil.rmtree(cm.manifest.get(p).local_path)
+    assert cm.validate()["repaired"] == 1
+    assert cm.manifest.get(p) is None
     e = cm.manifest.get(p + "#rg")
     assert e is not None and sorted(e.row_groups) == [0, 9]
     _check_serve_fresh(cm, remotes)

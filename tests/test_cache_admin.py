@@ -44,6 +44,18 @@ def test_warm_list_stats_invalidate_roundtrip(remote, tmp_path, capsys):
     assert json.loads(capsys.readouterr().out) == out
 
 
+def test_invalidate_drops_the_row_group_subset_too(remote, tmp_path):
+    from rubix_spark.cache.manager import CacheManager
+
+    cache = str(tmp_path / "cache")
+    n = f"{remote}/nation.parquet"
+    main(["warm", "--cache-dir", cache, n])
+    assert CacheManager(None, cache).warm_row_groups(n, [0]) is not None
+    assert len(main(["list", "--cache-dir", cache])["entries"]) == 2
+    main(["invalidate", "--cache-dir", cache, n])
+    assert main(["list", "--cache-dir", cache])["entries"] == []
+
+
 def test_validate_repairs_and_evict_respects_budget(remote, tmp_path):
     cache = str(tmp_path / "cache")
     n, r = f"{remote}/nation.parquet", f"{remote}/region.parquet"

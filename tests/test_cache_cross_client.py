@@ -60,6 +60,21 @@ def test_second_client_serves_row_groups_warmed_by_first(spark, remote_file, tmp
     assert b.stats()["hits"] == 1 and b.stats()["warmed_files"] == 0
 
 
+def test_second_client_range_reads_hit_first_clients_whole_copy(spark, remote_file, tmp_path):
+    """A range read by B is a hit on the whole-file copy A warmed: no subset of its own."""
+    cache_dir = str(tmp_path / "cache")
+    a = CacheManager(spark, cache_dir)
+    b = CacheManager(spark, cache_dir)
+
+    whole = a.warm(remote_file)
+    df = b.read_range(remote_file, "k", 100, 199)
+    assert sorted(r.k for r in df.collect()) == list(range(100, 200))
+    s = b.stats()
+    assert (s["hits"], s["misses"], s["warmed_files"]) == (1, 0, 0)
+    assert b.manifest.get(b._rg_key(remote_file)) is None
+    assert all(f.startswith("file://" + whole) for f in df.inputFiles())
+
+
 def test_cross_client_invalidation_and_regeneration(spark, remote_file, tmp_path):
     """Staleness handling crosses clients: B detects a remote rewrite of A's entry,
     re-warms under a NEW generation through the shared CAS, and A then serves B's

@@ -1,8 +1,8 @@
 """Round-3 cache-layer fixes (ADVICE.md r2) + the Spark jobs a cache miss submits.
 
 - granularity isolation: whole-file and #rg entries for one remote path must live in
-  DIFFERENT local dirs (the r2 collision silently duplicated rows and let either
-  granularity's invalidate destroy the other's data)
+  DIFFERENT local dirs (the r2 collision silently duplicated rows and let dropping
+  either granularity destroy the other's data)
 - evict race: a concurrently-deleted previous subset dir must degrade to a remote
   refetch, never propagate FileNotFoundError
 - TTL applies to row-group subset entries exactly as to whole-file entries (A16)
@@ -43,8 +43,9 @@ def _rows(df):
 
 
 def test_granularities_never_share_a_directory(spark, multi_rg_file, tmp_path):
-    """Warm BOTH granularities for one path: the whole-file read must return exactly
-    the file's rows (no rg_* double-count), and each granularity's dir is its own."""
+    """Warm BOTH granularities for one path (the subset after the whole copy, which
+    would otherwise replace it): the whole-file read must return exactly the file's
+    rows (no rg_* double-count), and each granularity's dir is its own."""
     cm = CacheManager(spark, str(tmp_path / "cache"))
     cm.warm(multi_rg_file)
     cm.warm_row_groups(multi_rg_file, [0, 1])
@@ -53,10 +54,17 @@ def test_granularities_never_share_a_directory(spark, multi_rg_file, tmp_path):
     assert whole.local_path != sub.local_path
     # whole-file hit path serves exactly 1000 rows, not 1000 + the subset's 200
     assert cm.read(multi_rg_file).count() == 1000
-    # invalidating one granularity leaves the other's data intact and servable
-    cm.invalidate(multi_rg_file)
+    # dropping one granularity leaves the other's data intact and servable
+    cm.invalidate(cm._rg_key(multi_rg_file))
+    assert os.path.isdir(whole.local_path)
+    assert cm.read(multi_rg_file).count() == 1000
+    cm.warm_row_groups(multi_rg_file, [0, 1])
+    sub = cm.manifest.get(cm._rg_key(multi_rg_file))
+    shutil.rmtree(whole.local_path)
+    assert cm.validate() == {"checked": 2, "broken": 1, "repaired": 1, "orphans_swept": 0}
     assert os.path.isdir(sub.local_path)
     assert _rows(cm.read_row_groups(multi_rg_file, [0, 1])) == [(i, i * 2) for i in range(200)]
+    assert cm.stats()["hits"] == 3
 
 
 def test_concurrent_evict_of_prev_subset_falls_back_to_remote(spark, multi_rg_file, tmp_path):

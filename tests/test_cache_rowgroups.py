@@ -6,6 +6,7 @@ parquet's natural block size, plus the batched-touch manifest behavior.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import pyarrow as pa
@@ -85,6 +86,103 @@ def test_stale_remote_invalidates_subset(spark, multi_rg_file, tmp_path):
     after = _rows(cm.read_range(multi_rg_file, "k", lo=0, hi=99))
     assert after == [(i, i * 3) for i in range(100)]
     assert cm.stats()["invalidations"] == 1
+
+
+def test_fresh_whole_copy_serves_range_as_one_hit(spark, multi_rg_file, tmp_path):
+    """A range read of a path cached whole is one hit on the whole copy: no warm, no
+    remote trip (not even the footer prune), and the rows of the row-group path."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    cm.warm(multi_rg_file)
+    trips = []
+    cm._remote_penalty = lambda n=1: trips.append(n)
+    got = _rows(cm.read_range(multi_rg_file, "k", lo=250, hi=449))
+    s = cm.stats()
+    assert (s["hits"], s["misses"], s["warmed_files"]) == (1, 0, 1)
+    assert trips == [] and cm.manifest.get(cm._rg_key(multi_rg_file)) is None
+    by_groups = CacheManager(spark, str(tmp_path / "cache_rg"))
+    assert got == _rows(by_groups.read_range(multi_rg_file, "k", lo=250, hi=449))
+    assert by_groups.manifest.get(by_groups._rg_key(multi_rg_file)).row_groups == [2, 3, 4]
+    assert len(got) == 200
+
+
+def test_stale_whole_copy_is_invalidated_once_and_range_reads_the_new_version(spark, multi_rg_file, tmp_path):
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    cm.warm(multi_rg_file)
+    n = 1000
+    pq.write_table(pa.table({"k": list(range(n)), "v": [i * 3 for i in range(n)]}),
+                   multi_rg_file, row_group_size=100)
+    assert _rows(cm.read_range(multi_rg_file, "k", lo=0, hi=99)) == [(i, i * 3) for i in range(100)]
+    s = cm.stats()
+    assert (s["hits"], s["misses"], s["invalidations"]) == (0, 1, 1)
+    assert cm.manifest.get(multi_rg_file) is None
+    assert cm.manifest.get(cm._rg_key(multi_rg_file)).row_groups == [0]
+
+
+def test_expired_whole_copy_counts_one_miss(spark, multi_rg_file, tmp_path):
+    cm = CacheManager(spark, str(tmp_path / "cache"), ttl_seconds=0.2)
+    cm.warm(multi_rg_file)
+    time.sleep(0.3)
+    assert _rows(cm.read_range(multi_rg_file, "k", lo=0, hi=99)) == [(i, i * 2) for i in range(100)]
+    s = cm.stats()
+    assert (s["hits"], s["misses"], s["invalidations"]) == (0, 1, 1)
+
+
+def test_lost_whole_copy_falls_back_to_the_row_group_path(spark, multi_rg_file, tmp_path):
+    """A whole copy deleted behind the manager counts one fallback; the read is then
+    the row-group path's one miss, and warms the subset."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    whole = cm.warm(multi_rg_file)
+    shutil.rmtree(whole)
+    assert _rows(cm.read_range(multi_rg_file, "k", lo=0, hi=99)) == [(i, i * 2) for i in range(100)]
+    s = cm.stats()
+    assert (s["hits"], s["misses"], s["fallbacks"]) == (0, 1, 1)
+    assert cm.manifest.get(multi_rg_file) is None
+    assert cm.manifest.get(cm._rg_key(multi_rg_file)).row_groups == [0]
+
+
+def test_whole_copy_replaces_the_subset(spark, multi_rg_file, tmp_path):
+    """A whole-file warm removes the subset from the manifest and the memo, and
+    tombstones its dir: a DataFrame planned over the subset still runs in the grace."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    planned = cm.read_range(multi_rg_file, "k", lo=250, hi=449)  # warms groups 2-4
+    sub = cm.manifest.get(cm._rg_key(multi_rg_file)).local_path
+    cm.warm(multi_rg_file)
+    assert cm.manifest.get(cm._rg_key(multi_rg_file)) is None
+    assert cm._rg_key(multi_rg_file) not in cm._df_memo
+    assert sub in cm.manifest._tombstones
+    assert _rows(planned) == [(k, k * 2) for k in range(250, 450)]
+    assert all(f.startswith("file://" + sub) for f in planned.inputFiles())
+
+
+def test_invalidate_drops_every_granularity_of_the_path(spark, multi_rg_file, tmp_path):
+    """After an in-place rewrite that keeps mtime and size, which freshness checks
+    cannot see, ``invalidate(path)`` must leave no copy of the path serving the old
+    bytes, whole file or row-group subset. ``invalidate("<path>#rg")`` drops the
+    subset alone."""
+
+    def write(mult: int) -> None:
+        n = 1000
+        pq.write_table(pa.table({"k": list(range(n)), "v": [i * mult for i in range(n)]}),
+                       multi_rg_file, row_group_size=100, compression="none", use_dictionary=False)
+
+    write(2)
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    whole = cm.warm(multi_rg_file)
+    cm.warm_row_groups(multi_rg_file, [1, 2])
+    cm.invalidate(cm._rg_key(multi_rg_file))
+    assert cm.manifest.get(cm._rg_key(multi_rg_file)) is None
+    assert cm.manifest.get(multi_rg_file).local_path == whole
+    cm.warm_row_groups(multi_rg_file, [1, 2])
+
+    st = os.stat(multi_rg_file)
+    write(3)
+    os.utime(multi_rg_file, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(multi_rg_file).st_size == st.st_size
+    cm.invalidate(multi_rg_file)
+    assert cm.manifest.entries() == []
+    assert cm.stats()["invalidations"] == 3
+    assert _rows(cm.read_range(multi_rg_file, "k", lo=100, hi=299)) == [(i, i * 3) for i in range(100, 300)]
+    assert _rows(cm.read_row_groups(multi_rg_file, [1, 2])) == [(i, i * 3) for i in range(100, 300)]
 
 
 def test_rewrite_moving_the_range_to_other_groups_is_not_served_stale(spark, multi_rg_file, tmp_path):

@@ -40,7 +40,8 @@ def build_parser() -> argparse.ArgumentParser:
     w = sub.add_parser("warm", help="read-through warm paths (readData analog)")
     common(w)
     w.add_argument("paths", nargs="+")
-    i = sub.add_parser("invalidate", help="drop cached copies (invalidateFileMetadata analog)")
+    i = sub.add_parser("invalidate", help="drop every cached copy of each path, whole file and "
+                       "row-group subset (invalidateFileMetadata analog); <path>#rg drops the subset alone")
     common(i)
     i.add_argument("paths", nargs="+")
     v = sub.add_parser("validate", help="sweep local copies, repair broken entries")
